@@ -346,3 +346,115 @@ def test_zvalue_cross_engine_and_block_clustering(spark):
     )
     # blocks of 64 z-values cover at most an 8x8 tile: spans bounded by 7
     assert (got.x_span <= 7).all() and (got.y_span <= 7).all()
+
+
+# --------------------------------------------------------------------------
+# Lazy halo kernel: ties, bursts, short and empty buckets, no eager jobs
+# --------------------------------------------------------------------------
+
+
+def _tie_burst_frame(seed=5):
+    """Key 0 is hot: most of its rows share one timestamp (ties broken by
+    ``seq``), then a late burst over three timestamps.  Its equi-depth
+    bounds collapse onto the tied values, so some buckets hold fewer
+    rows than max_lag and the last one is empty.  Keys 1-3 are cold; a
+    few rows have a NULL key."""
+    rng = np.random.RandomState(seed)
+    hot_t = np.r_[np.full(300, 100), rng.randint(0, 200, 40), 10_000 + np.arange(120) // 40]
+    cold_k = rng.randint(1, 4, 60)
+    pdf = pd.DataFrame({
+        "k": np.r_[np.zeros(len(hot_t), dtype="int64"), cold_k],
+        "t": np.r_[hot_t, rng.randint(0, 300, len(cold_k))].astype("int64"),
+    })
+    pdf["seq"] = rng.permutation(len(pdf)).astype("int64")
+    pdf["v"] = rng.randn(len(pdf))
+    pdf["k"] = pdf["k"].astype("Int64")
+    pdf.loc[pdf.index[-4:], "k"] = pd.NA
+    return pdf
+
+
+_TIE_LAGS = [3, 0, 1, 12, 3]  # lag 0 and a duplicate lag
+
+
+def _sorted_pdf(df, cols):
+    return df.orderBy(*cols).toPandas().reset_index(drop=True)
+
+
+@pytest.mark.parametrize("fill", [None, float("inf")])
+def test_hotkey_lag_ties_and_burst_equal_plain_window(spark, fill):
+    from time_sift_spark.operators.scale import lag_features_hotkey
+
+    df = spark.createDataFrame(_tie_burst_frame())
+    naive = _sorted_pdf(
+        lag_features(df, "v", "t", _TIE_LAGS, partition_by="k", order_extra="seq", fill=fill),
+        ["k", "t", "seq"],
+    )
+    hot = _sorted_pdf(
+        lag_features_hotkey(df, "v", "t", _TIE_LAGS, partition_by="k", order_extra="seq",
+                            fill=fill, hot_threshold=100, num_buckets=16),
+        ["k", "t", "seq"],
+    )
+    pd.testing.assert_frame_equal(hot[naive.columns], naive)
+
+
+@pytest.mark.parametrize("fill", [None, float("inf")])
+def test_global_lag_ties_and_burst_equal_plain_window(spark, fill):
+    pdf = _tie_burst_frame().drop(columns="k")
+    df = spark.createDataFrame(pdf)
+    naive = _sorted_pdf(
+        lag_features(df, "v", "t", _TIE_LAGS, order_extra="seq", fill=fill), ["t", "seq"]
+    )
+    halo = _sorted_pdf(
+        lag_features_global(df, "v", "t", _TIE_LAGS, order_extra="seq", fill=fill,
+                            num_buckets=32),
+        ["t", "seq"],
+    )
+    pd.testing.assert_frame_equal(halo[naive.columns], naive)
+
+
+def test_halo_lag_calls_submit_no_job(spark):
+    from time_sift_spark.operators.scale import lag_features_hotkey
+
+    df = spark.createDataFrame(_tie_burst_frame())
+    tracker = spark.sparkContext.statusTracker()
+    before = sorted(tracker.getJobIdsForGroup(None))
+    lag_features_hotkey(df, "v", "t", [1, 5], partition_by="k", order_extra="seq",
+                        hot_threshold=100, num_buckets=8)
+    lag_features_global(df.drop("k"), "v", "t", [1, 5], order_extra="seq", num_buckets=8)
+    assert sorted(tracker.getJobIdsForGroup(None)) == before
+
+
+def test_hotkey_large_key_reuses_one_bounds_broadcast(spark):
+    # 80k hot rows over 4 input partitions: each partial sketch holds
+    # 20k values, so merging them compresses and the bounds depend on
+    # merge order.  Real and halo rows must read one broadcast of them.
+    from time_sift_spark.operators.scale import lag_features_hotkey
+
+    df = spark.range(0, 100_000, numPartitions=4).selectExpr(
+        "CASE WHEN id % 5 = 0 THEN id ELSE 0 END AS k", "id DIV 7 AS t", "id AS seq",
+        "CAST(id % 97 AS DOUBLE) AS v",
+    )
+    out = lag_features_hotkey(df, "v", "t", [1, 3], partition_by="k", order_extra="seq",
+                              hot_threshold=1000, num_buckets=16)
+    out._jdf.queryExecution().toRdd().count()  # runs out's own plan, final
+    final = out._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    # one broadcast of the stats frame, read again by the other branch
+    assert final.count("+- BroadcastExchange") == 1, final
+    assert "ReusedExchange [k#" in final and "], BroadcastExchange" in final, final
+    naive = lag_features(df, "v", "t", [1, 3], partition_by="k", order_extra="seq")
+    assert out.exceptAll(naive.select(*out.columns)).count() == 0
+    assert naive.select(*out.columns).exceptAll(out).count() == 0
+
+
+def test_halo_lag_refuses_without_exchange_reuse(spark):
+    from time_sift_spark.operators.scale import lag_features_hotkey
+
+    df = spark.createDataFrame(_tie_burst_frame())
+    spark.conf.set("spark.sql.exchange.reuse", "false")
+    try:
+        with pytest.raises(RuntimeError, match="exchange.reuse"):
+            lag_features_hotkey(df, "v", "t", [1], partition_by="k", hot_threshold=100)
+        with pytest.raises(RuntimeError, match="exchange.reuse"):
+            lag_features_global(df.drop("k"), "v", "t", [1])
+    finally:
+        spark.conf.set("spark.sql.exchange.reuse", "true")

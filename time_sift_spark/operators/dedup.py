@@ -23,8 +23,6 @@ charter-mandated extensions.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 from pyspark.sql import DataFrame
 
@@ -891,19 +889,6 @@ def connected_components(
     return labels.select("id", F.col("lbl").alias("cluster_id"))
 
 
-# Star-alternation rounds per checkpointed job in _cc_star.  r15
-# MEASURED NEGATIVE RESULT — keep at 1: grouping G rounds into one lazy
-# plan re-executes the duplicated sym/m subtrees (exchange reuse does
-# NOT collapse them across the large-star/small-star alternation — the
-# two semi-join/aggregation consumers differ in projection, so their
-# exchanges are not identical), and the work grows ~2^G: sf0.1 chain
-# graph measured 9.9 s at G=1, 14.3 s at G=2, 50.1 s at G=3 (fresh-JVM
-# best-of-2).  The kcore grouping win does not transfer because kcore's
-# within-group references are semi-joins against ONE shared relation,
-# not an alternation.  Env override kept for re-sweeps.
-_CC_GROUP = int(os.environ.get("SPARK_GRAFT_CC_GROUP", "1"))
-
-
 def _cc_star(
     edge_pairs: DataFrame, *, src: str, dst: str, max_iterations: int
 ) -> DataFrame:
@@ -1001,7 +986,7 @@ def _cc_star(
 
     done = 0
     while True:
-        # The group's FIRST aggregation doubles as the star-forest probe
+        # The round's first aggregation doubles as the star-forest probe
         # (the r13 probe was a separate count_distinct + semi-join pass
         # over the new edge set — one full extra exchange per round):
         # the current edge set is a forest of stars iff no node is a
@@ -1017,24 +1002,18 @@ def _cc_star(
                 f"connected_components(star) did not converge within "
                 f"{max_iterations} rounds — raise max_iterations for this graph"
             )
-        # Run _CC_GROUP rounds per checkpointed job (the kcore grouping,
-        # r14 §12, applied to the star alternation — the deep chain graph
-        # needs ~10 rounds, each formerly its own probe + checkpoint +
-        # driver round-trip).  Grouping is SOUND under the probe: a
-        # forest of stars is a FIXPOINT of both steps (large-star maps
-        # every leaf to the root it already has; small-star re-emits the
-        # same star edges), so overshooting the convergence round inside
-        # a group re-derives the identical edge set and the boundary
-        # probe still certifies it.  Within the group the intermediate
-        # sym/m relations stay lazy — their duplicated subtrees collapse
-        # via exchange reuse inside the one fused job, and only the
-        # group's last edge set is checkpointed.
-        for g in range(min(_CC_GROUP, max_iterations - done)):
-            if g > 0:
-                sym, m = _sym_stats(edges)
-            edges = _small_star(_large_star(sym, m))
-            done += 1
-        edges = edges.localCheckpoint(eager=False)
+        # One round per checkpointed job.  Grouping G rounds into one
+        # lazy plan (the kcore grouping) measured NEGATIVE here: it
+        # re-executes the duplicated sym/m subtrees, because exchange
+        # reuse does not collapse them across the large-star/small-star
+        # alternation (the two consumers differ in projection, so their
+        # exchanges are not identical), and the work grows ~2^G.  The
+        # sf0.1 chain graph measured 9.9 s at G=1, 14.3 s at G=2 and
+        # 50.1 s at G=3 (fresh-JVM best-of-2).  The kcore win does not
+        # transfer because kcore's within-group references are
+        # semi-joins against ONE shared relation, not an alternation.
+        edges = _small_star(_large_star(sym, m)).localCheckpoint(eager=False)
+        done += 1
     # all-stars fixpoint: each non-minimum vertex has exactly its
     # component minimum as parent; minima have no outgoing edge
     return vertices.join(

@@ -441,21 +441,18 @@ def clustering_coefficients(
 
 # Peel levels per checkpointed job in the iterative kcore — the
 # measured knee (plan references grow 2^steps inside a group; 3 beat 2
-# and 4 on the deep sf0.1 cascade: 3.96 vs 4.06 / 4.31 s).  r15
-# MEASURED NEGATIVE RESULT on adaptive grouping (grow the group once
-# the surviving set is small): each level inside a group re-executes
-# its predecessor's degree chain per semi-join reference (the two
-# broadcasts differ in projection, so their exchanges never reuse), so
-# work grows ~2^steps regardless of data size — GROUP_SMALL=6 measured
-# kcore_docs 5.0 → 8.0 s, and even GROUP_SMALL=4 under 1 000 nodes lost
-# to the flat 3 in an interleaved A/B (5.75/5.52/6.30 vs
-# 5.92/5.89/6.89 s).  The defaults therefore stay flat; env knobs kept
-# for re-sweeps on other graph shapes.
+# and 4 on the deep sf0.1 cascade: 3.96 vs 4.06 / 4.31 s).  Adaptive
+# grouping (grow the group once the surviving set is small) measured
+# NEGATIVE: each level inside a group re-executes its predecessor's
+# degree chain per semi-join reference (the two broadcasts differ in
+# projection, so their exchanges never reuse), so work grows ~2^steps
+# regardless of data size.  A group of 6 below 4 096 nodes measured
+# kcore_docs 5.0 → 8.0 s, and even 4 under 1 000 nodes lost to the
+# flat 3 in an interleaved A/B (5.75/5.52/6.30 vs 5.92/5.89/6.89 s).
+# The group size therefore stays flat.
 import os as _os
 
 _KCORE_GROUP = int(_os.environ.get("SPARK_GRAFT_KCORE_GROUP", "3"))
-_KCORE_GROUP_SMALL = int(_os.environ.get("SPARK_GRAFT_KCORE_GROUP_SMALL", "3"))
-_KCORE_SMALL_N = int(_os.environ.get("SPARK_GRAFT_KCORE_SMALL_N", "4096"))
 
 
 def kcore_sql(
@@ -592,8 +589,7 @@ def kcore(
     done = 0
     converged = n_cur == 0
     while done < max_iterations and not converged:
-        group = _KCORE_GROUP if n_cur > _KCORE_SMALL_N else _KCORE_GROUP_SMALL
-        steps = min(group, max_iterations - done)
+        steps = min(_KCORE_GROUP, max_iterations - done)
         lvl = cur
         for _ in range(steps):
             _deg, lvl = _level(lvl)

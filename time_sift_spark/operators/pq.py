@@ -340,6 +340,11 @@ def pq_adc_topk_sql(
     decimal addition, the ADC top-``rerank`` cut is a per-query window,
     and only those candidates touch full vectors again.  Output:
     (query_id, neighbor_id, l2_sq, rank) — exact distances, PQ-pruned.
+
+    The Spark dialect pins that broadcast with a hint, so the query set
+    must stay small: its |Q|·m·k_codes rows are collected and shipped
+    whole to every task, so they must fit ``spark.sql.maxBroadcastTableSize``.  Scoring the whole
+    corpus against itself is out of scope.
     """
     sq_dt = vd.sqdist_fixed("qs.svec", "c.cent", sub_dim)
     sq_exact = vd.sqdist("q.emb", "cand.emb")
@@ -356,6 +361,10 @@ def pq_adc_topk_sql(
         to_double = f"transform({vec_col}, x -> CAST(x AS DOUBLE))"
     else:
         to_double = f"list_transform({vec_col}, x -> CAST(x AS DOUBLE))"
+    # dt derives from the checkpointed codebook, which carries no size
+    # stats, so without the pin the (s, cid) join plans as a
+    # SortMergeJoin that shuffles the n·m code rows
+    dt_hint = "/*+ BROADCAST(dt) */ " if vd.name == "spark" else ""
     return f"""
     WITH v AS (
       SELECT {id_col} AS vid, {to_double} AS emb FROM {table}
@@ -378,7 +387,7 @@ def pq_adc_topk_sql(
       JOIN {cfin} c ON c.s = qs.s
     ),
     adc AS (
-      SELECT dt.qvid AS query_id, codes.vid AS neighbor_id,
+      SELECT {dt_hint}dt.qvid AS query_id, codes.vid AS neighbor_id,
              SUM(CAST({_adc_rd("dt.dist")} AS DECIMAL(27,6))) AS approx
       FROM codes JOIN dt ON dt.s = codes.s AND dt.cid = codes.cid
       WHERE codes.vid <> dt.qvid
@@ -904,6 +913,9 @@ def pq_adc_topk(
     lloyd_iters: int = 3,
     rerank: int = 100,
 ) -> DataFrame:
+    """DataFrame form of :func:`pq_adc_topk_sql` with the codebook
+    trained once and staged.  The distance table of the ``query_pred``
+    rows is broadcast, so keep the query set small (see there)."""
     for c in (id_col, vec_col):
         if c not in df.columns:
             raise ColumnNotFoundError(f"column {c!r} not in {df.columns}")

@@ -1,41 +1,58 @@
-"""Scale path for UN-partitioned (single global series) lag features.
+"""Scale paths for lag windows too large for one task.
 
-``Window.orderBy(t)`` with no partitionBy sends every row to ONE task —
-the scaling cliff called out in SURVEY.md §4/§7.  This operator removes
-it with chunked range repartitioning + halo overlap:
+``Window.partitionBy(key)`` sends all of a key's rows to one task, and
+``Window.orderBy(t)`` with no partitionBy sends the whole table to one
+task: the scaling cliff of SURVEY.md §4/§7, once per hot key and once
+for a global series.  Both go through one lazy halo kernel
+(:func:`lag_features_hotkey`; the global form is the same kernel over a
+constant key):
 
-1. one cheap stats pass picks ~equi-depth time boundaries
-   (``approxQuantile``, driver-side scalar list);
-2. each row gets a range-bucket id (O(num_buckets) literal comparisons,
-   codegen'd — no join);
-3. the trailing ``max(lags)`` rows of every bucket are DUPLICATED into
-   the next bucket (the "halo"), tagged;
-4. lags are computed per bucket — every real row sees its true
-   predecessors, either locally or via the halo;
-5. halo rows are dropped.
+1. **Stats frame.**  One aggregate per key computes the row count and
+   ``percentile_approx`` time bounds.  Keys below ``hot_threshold`` are
+   filtered out and the distinct bounds of the rest are broadcast-joined
+   back (left join).  A row's bucket is the number of its key's bounds
+   strictly below its time; cold keys and NULL keys sit in bucket 0.
+2. **Halo.**  Each hot bucket but the key's last contributes its last
+   ``max(lags)`` rows to EVERY later bucket of the key.  Any row's
+   ``max(lags)`` true predecessors from earlier buckets are then among
+   those tail rows, whatever the bucket sizes: empty buckets, buckets
+   shorter than ``max(lags)`` and heavy timestamp ties need no merge
+   step.  Cost: ``max(lags)·nb·(nb-1)/2`` halo rows per hot key, and
+   the key's last bucket gets ``(nb-1)·max(lags)`` of them (SCALE.md).
+3. **One window.**  Real and halo rows run through one
+   ``partitionBy(key, bucket)`` window built by
+   :func:`plans.lag_plan.build_lag_plan`; halo rows are dropped after.
 
-Cost: 2 shuffles (halo ranking + the window itself) and a ~max_lag ×
-num_buckets row duplication — constant overhead, versus a single-task
-sort at any scale.  Exactness is guaranteed when every non-final bucket
-is non-empty (equi-depth boundaries drawn from real data values make
-middle buckets non-empty by construction); property-tested against the
-naive global window.
+Nothing runs eagerly: calling either function submits no Spark job,
+and the stats aggregate runs inside the caller's job.
+
+Exactness requires exchange reuse.  The real rows and the halo rows
+are two branches of one union, and each joins the stats frame.  Spark
+evaluates that frame once and reuses the broadcast in both branches
+(``ReusedExchange`` in the executed plan, pinned by a test).  Without
+reuse it would run twice, and ``percentile_approx`` merges partial
+sketches in shuffle-fetch order, so on a cluster two runs over a large
+key can return different bounds: halo and real rows would then be
+bucketed differently and the lags would be wrong without an error.
+Both functions therefore raise when ``spark.sql.exchange.reuse`` is
+off.  (A single-branch form, one ``explode`` of each row into its own
+bucket and, for tail rows, the later ones, needs no reuse but shuffles
+every row twice.)
 """
 
 from __future__ import annotations
 
-from functools import reduce
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..errors import ColumnNotFoundError, EmptyDataError, validate_lags
-from ..plans.lag_plan import lag_column_names
+from ..errors import ColumnNotFoundError, validate_lags
+from ..plans.lag_plan import build_lag_plan
 
 
 def _numeric_time(df: DataFrame, time_col: str) -> Column:
-    """Time column as double for approxQuantile bucketing. TIMESTAMP_NTZ
+    """Time column as double for quantile bucketing. TIMESTAMP_NTZ
     rejects a direct numeric cast (DATATYPE_MISMATCH), so re-tag it as
     TIMESTAMP first (UTC session pin makes that value-preserving);
     numeric/long time columns cast straight through unchanged."""
@@ -59,73 +76,17 @@ def lag_features_global(
     """Exact global-order lag features without a single-task window.
 
     Same output contract as operators.lag.lag_features(wide) with
-    ``partition_by=None``; use this one when the series is large.
+    ``partition_by=None``; use this one when the series is large.  The
+    series is one hot key of :func:`lag_features_hotkey`: its rows split
+    into ~``num_buckets`` equi-depth time buckets, each bucket windowed
+    on its own with the tails of all earlier buckets as halo.  Like that
+    function it needs ``spark.sql.exchange.reuse`` on.
     """
-    value_cols = [value_cols] if isinstance(value_cols, str) else list(value_cols)
-    order_extra = (
-        [] if order_extra is None else [order_extra] if isinstance(order_extra, str) else list(order_extra)
-    )
-    lag_list = validate_lags(lags)
-    max_lag = max(lag_list)
-    missing = [c for c in (value_cols + [time_col] + order_extra) if c not in df.columns]
-    if missing:
-        raise ColumnNotFoundError(f"columns not in DataFrame: {missing}")
-
-    num_df = df.withColumn("_t_num", _numeric_time(df, time_col))
-    probs = [i / num_buckets for i in range(1, num_buckets)]
-    bounds = sorted(set(num_df.stat.approxQuantile("_t_num", probs, relative_error)))
-    if not bounds:
-        # degenerate tiny/constant series — plain global window is fine
-        w = Window.orderBy(time_col, *order_extra)
-        return _project(df, value_cols, time_col, order_extra, lag_list, w, fill)
-
-    bucket: Column = reduce(
-        lambda acc, b: acc + F.when(F.col("_t_num") > F.lit(b), 1).otherwise(0),
-        bounds,
-        F.lit(0),
-    )
-    raw = num_df.withColumn("_bucket_raw", bucket).drop("_t_num")
-
-    # A bucket smaller than max_lag would need halo rows from DEEPER than
-    # its immediate predecessor. Rather than cascade halos, merge adjacent
-    # raw buckets left-to-right until each closed bucket holds >= max_lag
-    # rows (one cheap count-by-bucket job, ~num_buckets driver rows).
-    counts = {r["_bucket_raw"]: r["count"] for r in raw.groupBy("_bucket_raw").count().collect()}
-    mapping: list[int] = [0] * (len(bounds) + 1)
-    merged_id, acc = 0, 0
-    for rb in range(len(bounds) + 1):
-        mapping[rb] = merged_id
-        acc += counts.get(rb, 0)
-        if acc >= max_lag:
-            merged_id, acc = merged_id + 1, 0
-    if merged_id == 0:  # everything merged into one bucket: tiny series
-        w = Window.orderBy(time_col, *order_extra)
-        return _project(df, value_cols, time_col, order_extra, lag_list, w, fill)
-
-    lookup = F.array(*[F.lit(m) for m in mapping])
-    bucketed = raw.withColumn(
-        "_bucket", F.element_at(lookup, F.col("_bucket_raw") + 1)
-    ).drop("_bucket_raw")
-    n_merged = mapping[-1]
-
-    # halo: trailing max_lag rows of each bucket, replicated into the next
-    w_desc = Window.partitionBy("_bucket").orderBy(
-        F.col(time_col).desc(), *[F.col(c).desc() for c in order_extra]
-    )
-    tail = (
-        bucketed.withColumn("_rn", F.row_number().over(w_desc))
-        .where((F.col("_rn") <= max_lag) & (F.col("_bucket") < n_merged))
-        .drop("_rn")
-        .withColumn("_bucket", F.col("_bucket") + 1)
-        .withColumn("_halo", F.lit(True))
-    )
-    unioned = bucketed.withColumn("_halo", F.lit(False)).unionByName(tail)
-
-    w_bucket = Window.partitionBy("_bucket").orderBy(time_col, *order_extra)
-    out = _project(
-        unioned, value_cols, time_col, order_extra, lag_list, w_bucket, fill, extra_keep=["_halo"]
-    )
-    return out.where(~F.col("_halo")).drop("_halo")
+    return lag_features_hotkey(
+        df.withColumn("_key", F.lit(0)), value_cols, time_col, lags,
+        partition_by="_key", order_extra=order_extra, fill=fill,
+        hot_threshold=0, num_buckets=num_buckets, relative_error=relative_error,
+    ).drop("_key")
 
 
 def lag_features_hotkey(
@@ -141,32 +102,25 @@ def lag_features_hotkey(
     num_buckets: int = 32,
     relative_error: float = 0.001,
 ) -> DataFrame:
-    """Per-key lag features where PATHOLOGICALLY hot keys decompose into
-    (key, bucket) halo windows — the per-key generalization of
-    :func:`lag_features_global` (SCALE.md lag-family first cliff).
+    """Per-key lag features where keys with at least ``hot_threshold``
+    rows decompose into (key, bucket) halo windows (SCALE.md lag-family
+    first cliff).
 
-    ``Window.partitionBy(key)`` sends ALL of a key's rows to one task; a
-    single key with billions of rows is therefore the same cliff the
-    un-partitioned global window has, one level down. This operator:
-
-    1. counts rows per key and collects ONLY keys above ``hot_threshold``
-       (the filter runs before the collect — driver traffic is
-       O(n_hot_keys), never O(n_keys));
-    2. cold keys take the plain single-window path unchanged;
-    3. hot-key rows are range-bucketed on shared equi-depth time
-       boundaries (``approxQuantile`` over hot rows only), buckets are
-       merged left-to-right PER KEY until each closed bucket holds >=
-       max_lag rows (the driver sees n_hot_keys × num_buckets count rows;
-       the per-key raw→merged mapping goes back as a broadcast join), and
-       the trailing max_lag rows of every (key, bucket) are duplicated
-       into the key's next bucket as halo rows;
-    4. lags run per (key, bucket) — every real row sees its true
-       predecessors locally or via the halo — and halo rows are dropped.
+    A key's bounds are ``percentile_approx`` of its times at
+    ``i/num_buckets`` with relative error ``relative_error``, computed
+    by a lazy per-key stats frame that is broadcast-joined to the rows;
+    the last ``max(lags)`` rows of every bucket are copied into every
+    later bucket of the key as halo rows.  Cold keys keep one bucket, so
+    hot and cold rows share one window: there is no cold/hot split.
 
     Output contract and values are identical to
     ``lag_features(df, ..., partition_by=key)`` (property-tested); only
-    the physical partitioning differs: the hot key's work is spread over
-    ~num_buckets tasks instead of one.
+    the physical partitioning differs: a hot key's work is spread over
+    ~num_buckets tasks instead of one.  Building the plan submits no job.
+
+    Requires ``spark.sql.exchange.reuse`` (on by default) so that real
+    and halo rows share one evaluation of the bounds; raises
+    ``RuntimeError`` when it is off (see the module docstring).
     """
     value_cols = [value_cols] if isinstance(value_cols, str) else list(value_cols)
     order_extra = (
@@ -176,109 +130,64 @@ def lag_features_hotkey(
         raise ColumnNotFoundError("lag_features_hotkey takes a single key column name")
     key = partition_by
     lag_list = validate_lags(lags)
-    max_lag = max(lag_list)
-    missing = [c for c in (value_cols + [key, time_col] + order_extra) if c not in df.columns]
+    order_by = [time_col, *order_extra]
+    missing = [c for c in (value_cols + [key] + order_by) if c not in df.columns]
     if missing:
         raise ColumnNotFoundError(f"columns not in DataFrame: {missing}")
+    if df.sparkSession.conf.get("spark.sql.exchange.reuse", "true").lower() != "true":
+        raise RuntimeError(
+            "halo lag needs spark.sql.exchange.reuse=true: the real and halo "
+            "rows must share one evaluation of the approximate bucket bounds"
+        )
 
-    out_cols = [key, time_col, *order_extra, *lag_column_names(value_cols, lag_list)]
-
-    def _naive(part: DataFrame) -> DataFrame:
-        w = Window.partitionBy(key).orderBy(time_col, *order_extra)
-        return _project(
-            part, value_cols, time_col, order_extra, lag_list, w, fill, extra_keep=[key]
-        ).select(*out_cols)
-
-    hot_rows = (
-        df.groupBy(key).count().where(F.col("count") >= hot_threshold).select(key).collect()
+    cols = list(dict.fromkeys([key, *order_by, *value_cols]))
+    rows = df.select(*cols, _numeric_time(df, time_col).alias("_t"))
+    # num_buckets < 2 asks for no split: one bound at the key's maximum
+    probs = [i / num_buckets for i in range(1, num_buckets)] or [1.0]
+    accuracy = int(1 / relative_error) if relative_error > 0 else 2**31 - 1
+    stats = (
+        rows.groupBy(key)
+        .agg(
+            F.count(F.lit(1)).alias("_n"),
+            F.percentile_approx("_t", probs, accuracy).alias("_bounds"),
+        )
+        .where(F.col("_n") >= hot_threshold)
+        .select(key, F.array_distinct("_bounds").alias("_bounds"))
     )
-    hot_keys = [r[0] for r in hot_rows]
-    if not hot_keys:
-        return _naive(df)
-
-    is_hot = F.col(key).isin(hot_keys) & F.col(key).isNotNull()
-    cold = _naive(df.where(~is_hot | F.col(key).isNull()))
-    hot = df.where(is_hot)
-
-    num_df = hot.withColumn("_t_num", _numeric_time(hot, time_col))
-    probs = [i / num_buckets for i in range(1, num_buckets)]
-    bounds = sorted(set(num_df.stat.approxQuantile("_t_num", probs, relative_error)))
-    if not bounds:
-        return cold.unionByName(_naive(hot))
-
-    bucket: Column = reduce(
-        lambda acc, b: acc + F.when(F.col("_t_num") > F.lit(b), 1).otherwise(0),
-        bounds,
-        F.lit(0),
+    bounds = F.coalesce(F.col("_bounds"), F.array().cast("array<double>"))
+    rows = rows.join(F.broadcast(stats), key, "left").select(
+        *cols,
+        F.size(F.filter(bounds, lambda b: F.col("_t") > b)).alias("_bucket"),
+        F.size(bounds).alias("_nb"),
+        F.lit(False).alias("_halo"),
     )
-    raw = num_df.withColumn("_bucket_raw", bucket).drop("_t_num")
 
-    # per-key left-to-right merge (same invariant as the global form:
-    # every CLOSED bucket of a key holds >= max_lag rows, so the next
-    # bucket's halo never has to reach deeper than one predecessor)
-    counts: dict[object, dict[int, int]] = {}
-    for r in raw.groupBy(key, "_bucket_raw").count().collect():
-        counts.setdefault(r[0], {})[r[1]] = r[2]
-    map_rows = []
-    for k, per_bucket in counts.items():
-        merged_id, acc = 0, 0
-        key_map = []
-        for rb in range(len(bounds) + 1):
-            key_map.append((k, rb, merged_id))
-            acc += per_bucket.get(rb, 0)
-            if acc >= max_lag:
-                merged_id, acc = merged_id + 1, 0
-        # _n_merged = id of the key's final (possibly short) bucket; halo
-        # rows flow only out of buckets strictly below it
-        final_id = key_map[-1][2]
-        map_rows.extend((k, rb, m, final_id) for (k, rb, m) in key_map)
-    mapping = df.sparkSession.createDataFrame(
-        map_rows,
-        schema=df.select(key)
-        .schema.add("_bucket_raw", "integer")
-        .add("_bucket", "integer")
-        .add("_n_merged", "integer"),
+    # halo: the last max_lag rows of each bucket below the key's last,
+    # copied into every later bucket of the key.  Both union branches
+    # read one broadcast of ``stats`` (Spark reuses the identical
+    # exchange while the conf checked above is on), so halo and real
+    # rows are bucketed by one set of bounds.
+    w_tail = Window.partitionBy(key, "_bucket").orderBy(*[F.col(c).desc() for c in order_by])
+    halo = (
+        rows.where(F.col("_bucket") < F.col("_nb"))
+        .withColumn("_rn", F.row_number().over(w_tail))
+        .where(F.col("_rn") <= max(lag_list))
+        .select(
+            *cols,
+            F.explode(F.sequence(F.col("_bucket") + 1, F.col("_nb"))).alias("_bucket"),
+            "_nb",
+            F.lit(True).alias("_halo"),
+        )
     )
-    bucketed = raw.join(
-        F.broadcast(mapping), on=[key, "_bucket_raw"], how="inner"
-    ).drop("_bucket_raw")
-
-    w_desc = Window.partitionBy(key, "_bucket").orderBy(
-        F.col(time_col).desc(), *[F.col(c).desc() for c in order_extra]
-    )
-    tail = (
-        bucketed.withColumn("_rn", F.row_number().over(w_desc))
-        .where((F.col("_rn") <= max_lag) & (F.col("_bucket") < F.col("_n_merged")))
-        .drop("_rn")
-        .withColumn("_bucket", F.col("_bucket") + 1)
-        .withColumn("_halo", F.lit(True))
-    )
-    unioned = bucketed.withColumn("_halo", F.lit(False)).unionByName(tail)
-
-    w_bucket = Window.partitionBy(key, "_bucket").orderBy(time_col, *order_extra)
-    hot_out = (
-        _project(
-            unioned, value_cols, time_col, order_extra, lag_list, w_bucket, fill,
-            extra_keep=[key, "_halo"],
+    return (
+        build_lag_plan(
+            rows.unionByName(halo), value_cols, time_col, lag_list,
+            partition_by=[key, "_bucket"], order_extra=order_extra, fill=fill,
+            keep_cols=[key, *order_by, "_halo"],
         )
         .where(~F.col("_halo"))
-        .select(*out_cols)
+        .drop("_halo")
     )
-    return cold.unionByName(hot_out)
-
-
-def _project(df, value_cols, time_col, order_extra, lag_list, w, fill, extra_keep=()):
-    names = lag_column_names(value_cols, lag_list)
-    exprs = []
-    i = 0
-    for k in lag_list:
-        for v in value_cols:
-            e = F.lag(F.col(v), k).over(w) if k else F.col(v)
-            if fill is not None and k:
-                e = F.coalesce(e, F.lit(fill))
-            exprs.append(e.alias(names[i]))
-            i += 1
-    return df.select(time_col, *order_extra, *extra_keep, *exprs)
 
 
 def salted_join(

@@ -247,11 +247,15 @@ def _multiprobe_cand_ctes(
         for f in range(num_planes)
     ]
     if vd.name == "spark":
+        # OUTER explode plus an explicit NULL guard, as in _lsh_keys_select:
+        # plain explode makes Catalyst infer ``size(fbs) > 0`` and push
+        # the plane-dot folds into the scan-side Filter a second time
         qkeys = f"""
       SELECT vid, concat(CAST(t AS STRING), '_', CAST(fb AS STRING)) AS bkey
       FROM (SELECT b.vid, b.t, array({', '.join(flips)}) AS fbs
             FROM bkt b JOIN qv ON qv.vid = b.vid)
-      LATERAL VIEW explode(fbs) f AS fb"""
+      LATERAL VIEW OUTER explode(fbs) f AS fb
+      WHERE fb IS NOT NULL"""
     else:
         qkeys = f"""
       SELECT vid, concat(CAST(t AS STRING), '_', CAST(fb AS STRING)) AS bkey
@@ -782,6 +786,12 @@ def ann_ivf_refined_topk_sql(
     posting-list amplification.  ``query_pred`` sees (vid, emb).  All
     rankings use the factored cosine over the once-computed norms
     (lloyd_ctes' ``lv``/``nc`` discipline).
+
+    The Spark dialect pins the probe list (|Q|·nprobe rows) as the
+    broadcast side of the candidate join, so the query set must stay
+    small: those rows are collected and shipped whole to every task, so
+    they must fit ``spark.sql.maxBroadcastTableSize``.  Scoring the whole corpus
+    against itself is out of scope.
     """
     cos_vc = f"({vd.dot('x.emb', 'c.cent')} / greatest(x.nv * c.nc, 1e-300))"
     cos_qc = f"({vd.dot('q.emb', 'c.emb')} / greatest(q.nv * c.nv, 1e-300))"
@@ -791,6 +801,11 @@ def ann_ivf_refined_topk_sql(
         ctes, cfinal = lloyd_ctes(
             vd, vec_col=vec_col, num_centroids=num_centroids, iters=lloyd_iters
         )
+    # The probe list is queries × nprobe rows; it derives from the
+    # checkpointed ``lv``, which carries no size stats, so without the
+    # pin the cid candidate join plans as a SortMergeJoin that shuffles
+    # the n × multi_assign posting list.
+    probe_hint = "/*+ BROADCAST(p) */ " if vd.name == "spark" else ""
     if vd.name == "spark":
         to_double = f"transform({vec_col}, x -> CAST(x AS DOUBLE))"
     else:
@@ -818,7 +833,7 @@ def ann_ivf_refined_topk_sql(
       ) WHERE crank <= {nprobe}
     ),
     cand AS (
-      SELECT DISTINCT p.query_id, a.vid AS neighbor_id
+      SELECT {probe_hint}DISTINCT p.query_id, a.vid AS neighbor_id
       FROM probes p JOIN assigned a ON a.cid = p.cid AND a.vid <> p.query_id
     ),
     scored AS (
@@ -913,6 +928,10 @@ def ann_ivf_refined_topk(
     multi_assign: int = 3,
     lloyd_iters: int = 3,
 ) -> DataFrame:
+    """DataFrame form of :func:`ann_ivf_refined_topk_sql` with the
+    Lloyd centroids trained once and staged.  The probe list of the
+    ``query_pred`` rows is broadcast, so keep the query set small (see
+    there)."""
     for c in (id_col, vec_col):
         if c not in df.columns:
             raise ColumnNotFoundError(f"column {c!r} not in {df.columns}")
