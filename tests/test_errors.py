@@ -62,3 +62,11 @@ def test_plan_builder_eager_validation(spark):
         lag_features(df, "t", "t", [])
     with pytest.raises(ColumnNotFoundError):
         lag_features(df, "nope", "t", [1])
+
+
+def test_lead_missing_column_raises_column_not_found(spark):
+    from time_sift_spark.operators.lag import lead_features
+
+    df = spark.range(5).withColumnRenamed("id", "t")
+    with pytest.raises(ColumnNotFoundError):
+        lead_features(df, "nope", "t", [1])

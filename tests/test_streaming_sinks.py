@@ -190,6 +190,7 @@ def test_bucketed_drains_state_isolated_within_one_bucket(
 
     from time_sift_spark.streaming.lag_stream import (
         run_stream_to_df,
+        streaming_asof_join,
         streaming_ewma,
         streaming_lag_features,
     )
@@ -206,6 +207,7 @@ def test_bucketed_drains_state_isolated_within_one_bucket(
         "t": np.arange(n, dtype=np.int64),
         "k": np.arange(n, dtype=np.int64) % keys,
         "v": rng.standard_normal(n),
+        "typ": np.where(rng.random(n) < 0.4, "purchase", "click"),
     })
     src = str(tmp_path / "bk_src")
     os.makedirs(src, exist_ok=True)
@@ -220,9 +222,9 @@ def test_bucketed_drains_state_isolated_within_one_bucket(
         )
         os.utime(f, (1_700_000_000 + s, 1_700_000_000 + s))
 
-    def stream():
+    def stream(schema="t long, k long, v double"):
         return (
-            spark.readStream.schema("t long, k long, v double")
+            spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
@@ -235,6 +237,9 @@ def test_bucketed_drains_state_isolated_within_one_bucket(
         ref.groupby("k")["v"].apply(
             lambda s: s.ewm(alpha=0.4, adjust=False).mean()
         ).reset_index(level=0, drop=True)
+    )
+    ref["value_asof"] = (
+        ref["v"].where(ref["typ"] == "purchase").groupby(ref["k"]).ffill()
     )
 
     lag = run_stream_to_df(
@@ -256,3 +261,107 @@ def test_bucketed_drains_state_isolated_within_one_bucket(
         ref[["k", "t", "v", "v_ewma"]].reset_index(drop=True),
         check_dtype=False,
     )
+
+    asof = run_stream_to_df(
+        streaming_asof_join(
+            stream("t long, k long, typ string, v double"),
+            partition_by="k", time_col="t", type_col="typ",
+            left_type="click", right_type="purchase", value_col="v",
+        ),
+        "bk_asof",
+    ).orderBy("k", "t").toPandas()
+    clicks = ref[ref["typ"] == "click"]
+    assert clicks["value_asof"].isna().any() and clicks["value_asof"].notna().any()
+    pd.testing.assert_frame_equal(
+        asof[["k", "t", "v", "value_asof"]].reset_index(drop=True),
+        clicks[["k", "t", "v", "value_asof"]].reset_index(drop=True),
+        check_dtype=False,
+    )
+
+
+def _write_chunks(src, frames, first=0):
+    """One parquet file per frame, numbered from ``first`` with ascending
+    mtimes, so a ``maxFilesPerTrigger=1`` file stream reads one frame per
+    micro-batch."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(src, exist_ok=True)
+    for i, frame in enumerate(frames, first):
+        f = f"{src}/chunk-{i:02d}.parquet"
+        pq.write_table(pa.Table.from_pandas(frame, preserve_index=False), f)
+        os.utime(f, (1_700_000_000 + i, 1_700_000_000 + i))
+    return str(src)
+
+
+def _lag_stream(spark, src, lags):
+    stream = (
+        spark.readStream.schema("t long, k long, v double")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+    )
+    return streaming_lag_features(stream, "v", "t", lags, partition_by="k")
+
+
+def _keyed_series(n, keys):
+    return pd.DataFrame({
+        "t": np.arange(n, dtype=np.int64),
+        "k": np.arange(n, dtype=np.int64) % keys,
+        "v": np.arange(n, dtype=np.float64) * 0.5,
+    })
+
+
+def test_streaming_lag_duplicate_lags_match_batch(spark, tmp_path):
+    """A duplicated lag names its columns as batch ``lag_features`` does
+    (``v_lag1``, ``v_lag1_p1``), and a two-micro-batch drain equals the
+    batch operator over the same rows."""
+    from time_sift_spark.operators.lag import lag_features
+    from time_sift_spark.streaming.lag_stream import run_stream_to_df
+
+    pdf = _keyed_series(60, 4)
+    src = _write_chunks(tmp_path / "dup_src", [pdf.iloc[:30], pdf.iloc[30:]])
+    got = run_stream_to_df(
+        _lag_stream(spark, src, [1, 1, 0]), "t_dup_lags"
+    ).orderBy("k", "t").toPandas()
+    want = lag_features(
+        spark.createDataFrame(pdf), "v", "t", [1, 1, 0], partition_by="k"
+    ).orderBy("k", "t").toPandas()
+    assert list(want.columns) == ["k", "t", "v_lag1", "v_lag1_p1", "v_lag0"]
+    pd.testing.assert_frame_equal(got[want.columns], want, check_dtype=False)
+
+
+def test_bucket_count_checked_on_checkpoint_restart(spark, tmp_path, monkeypatch):
+    """The key-bucket count is stored in the bucket state: a durable
+    checkpoint restarted with the same count continues exactly (output
+    over both files equals batch ``lag_features``); restarted with
+    another count it fails with an error naming both counts, instead of
+    silently routing keys away from their carried buffers."""
+    import shutil
+
+    import pytest
+
+    from time_sift_spark.operators.lag import lag_features
+
+    pdf = _keyed_series(80, 8)
+    src = str(tmp_path / "rs_src")
+    sink = str(tmp_path / "rs_sink")
+    moved = str(tmp_path / "rs_sink_copy")
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_KEY_BUCKETS", "2")
+    _write_chunks(src, [pdf.iloc[:40]])
+    run_stream_to_parquet(_lag_stream(spark, src, [1, 2]), sink, "t_rs_first")
+    _write_chunks(src, [pdf.iloc[40:]], first=1)
+    shutil.copytree(sink, moved)
+
+    run_stream_to_parquet(_lag_stream(spark, src, [1, 2]), sink, "t_rs_same")
+    got = spark.read.parquet(f"{sink}/epoch=*").orderBy("k", "t").toPandas()
+    want = lag_features(
+        spark.createDataFrame(pdf), "v", "t", [1, 2], partition_by="k"
+    ).orderBy("k", "t").toPandas()
+    pd.testing.assert_frame_equal(got[want.columns], want, check_dtype=False)
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_KEY_BUCKETS", "3")
+    with pytest.raises(Exception, match="state has 2 buckets, this query plans 3"):
+        run_stream_to_parquet(_lag_stream(spark, src, [1, 2]), moved, "t_rs_moved")

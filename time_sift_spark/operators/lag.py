@@ -12,6 +12,7 @@ from __future__ import annotations
 from typing import Sequence
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from ..errors import InvalidLagsError
 from ..plans.lag_plan import build_lag_plan
@@ -63,38 +64,22 @@ def lead_features(
 ) -> DataFrame:
     """Forward shifts (no reference counterpart — lags only there).
 
-    Implemented by reusing the lag plan over a descending time ordering is
-    wrong for ties, so we use the direct form: ``LEAD(v, k)`` shares the
-    same single window spec.
+    Reusing the lag plan over a descending time ordering is wrong for
+    ties, so this is the direct form: ``LEAD(v, k)`` over the same single
+    window spec, built by plans.lag_plan.build_lag_plan; a duplicated lead
+    k gets the ``_p{pos}`` suffix, as lags do.
     """
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from ..errors import validate_lags
-    from ..plans.lag_plan import _as_list
-
-    value_list = _as_list(value_cols)
-    lead_list = validate_lags(leads)
-    parts = _as_list(partition_by)
-    extra = _as_list(order_extra)
-    order_by = [time_col, *extra]
-    w = (
-        Window.partitionBy(*parts).orderBy(*order_by)
-        if parts
-        else Window.orderBy(*order_by)
+    return build_lag_plan(
+        df,
+        value_cols,
+        time_col,
+        leads,
+        partition_by=partition_by,
+        order_extra=order_extra,
+        fill=fill,
+        keep_cols=keep_cols,
+        _shift=(F.lead, "lead"),
     )
-    keep = list(keep_cols) if keep_cols is not None else [*parts, time_col, *extra]
-    exprs = []
-    seen: set[tuple[str, int]] = set()
-    for pos, k in enumerate(lead_list):
-        for v in value_list:
-            name = f"{v}_lead{k}" if (v, k) not in seen else f"{v}_lead{k}_p{pos}"
-            seen.add((v, k))
-            e = F.lead(F.col(v), k).over(w) if k else F.col(v)
-            if fill is not None and k:
-                e = F.coalesce(e, F.lit(fill))
-            exprs.append(e.alias(name))
-    return df.select(*keep, *exprs)
 
 
 def with_lags(value_cols, time_col, lags, **kwargs):

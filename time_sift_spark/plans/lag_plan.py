@@ -45,21 +45,24 @@ def _as_list(x) -> list[str]:
     return list(x)
 
 
-def lag_column_names(value_cols: Sequence[str], lags: Sequence[int]) -> list[str]:
+def lag_column_names(
+    value_cols: Sequence[str], lags: Sequence[int], _stem: str = "lag"
+) -> list[str]:
     """Output column names for the wide layout, in lag-set order.
 
     ``{value}_lag{k}``; a duplicated lag k gets ``{value}_lag{k}_p{pos}``
     for occurrences after the first (the reference emits genuinely
     duplicate rows/columns, which Spark column names cannot).
+    ``lead_features`` names its columns with the ``lead`` stem.
     """
     names: list[str] = []
     seen: set[tuple[str, int]] = set()
     for pos, k in enumerate(lags):
         for v in value_cols:
             if (v, k) in seen:
-                names.append(f"{v}_lag{k}_p{pos}")
+                names.append(f"{v}_{_stem}{k}_p{pos}")
             else:
-                names.append(f"{v}_lag{k}")
+                names.append(f"{v}_{_stem}{k}")
                 seen.add((v, k))
     return names
 
@@ -74,8 +77,8 @@ def _window(partition_by: list[str], order_by: list[str]) -> WindowSpec:
     return Window.orderBy(*order_by)
 
 
-def _lagged(col: str, k: int, w: WindowSpec, fill) -> Column:
-    expr = F.lag(F.col(col), k).over(w) if k != 0 else F.col(col)
+def _lagged(col: str, k: int, w: WindowSpec, fill, shift) -> Column:
+    expr = shift(F.col(col), k).over(w) if k != 0 else F.col(col)
     if fill is not None and k != 0:
         expr = F.coalesce(expr, F.lit(fill))
     return expr
@@ -92,8 +95,12 @@ def build_lag_plan(
     fill=None,
     layout: str = "wide",
     keep_cols: Sequence[str] | None = None,
+    _shift=(F.lag, "lag"),
 ) -> DataFrame:
     """Build the lazy lag-feature plan (no job is submitted).
+
+    ``_shift`` is private: ``(F.lead, "lead")`` makes this the
+    forward-shift plan of ``operators.lag.lead_features``.
 
     Parameters
     ----------
@@ -119,17 +126,18 @@ def build_lag_plan(
     if missing:
         raise ColumnNotFoundError(f"columns not in DataFrame: {missing}; have {df.columns}")
 
+    shift, stem = _shift
     order_by = [time_col, *order_extra]
     w = _window(partition_by, order_by)
     keep = list(keep_cols) if keep_cols is not None else [*partition_by, time_col, *order_extra]
 
     if layout == "wide":
-        names = lag_column_names(value_cols, lag_list)
+        names = lag_column_names(value_cols, lag_list, _stem=stem)
         exprs: list[Column] = []
         i = 0
         for k in lag_list:
             for v in value_cols:
-                exprs.append(_lagged(v, k, w, fill).alias(names[i]))
+                exprs.append(_lagged(v, k, w, fill, shift).alias(names[i]))
                 i += 1
         return df.select(*keep, *exprs)
 
@@ -140,7 +148,7 @@ def build_lag_plan(
     staged = df.select(
         *keep,
         *[
-            _lagged(v, k, w, fill).alias(f"_lp{pos}_{v}")
+            _lagged(v, k, w, fill, shift).alias(f"_lp{pos}_{v}")
             for pos, k in enumerate(lag_list)
             for v in value_cols
         ],

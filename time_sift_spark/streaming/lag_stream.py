@@ -1,18 +1,26 @@
 """Streaming lag features — the stateful extension (SURVEY.md §2.4).
 
-``F.lag`` is unsupported over unbounded streams, so the operator keeps a
-per-key ring buffer of the last ``max(lags)`` (time, value) pairs in
-GroupState and computes lags with a pandas shift over
-``state_tail ++ sorted(batch)`` (reference semantics: lag k prepends k
-fills / drops the last k, src/lib.rs:519-523 — here the "fill" beyond
-the stream's start is NULL, matching the engine's batch default).
+``F.lag`` is unsupported over unbounded streams, so the operator carries
+each key's last ``max(lags)`` values in GroupState and computes lags
+with a pandas shift over ``carried ++ sorted(batch)`` (reference
+semantics: lag k prepends k fills / drops the last k,
+src/lib.rs:519-523 — here the "fill" beyond the stream's start is NULL,
+matching the engine's batch default).
+
+Keys are grouped into hash buckets (:func:`_default_key_buckets`), and
+the lag, as-of and EWMA drains share one scaffold
+(:func:`_bucketed_drain`): ONE state row per bucket holds the carried
+values (values only, no times) of every key the bucket has seen.
 
 Semantics & limits:
 * Within a batch, rows are sorted by (time, *order_extra) — exact.
 * Across batches, rows are assumed to arrive in per-key time order
   (enforce upstream with a watermark + sorted sources); a late row is
   lagged against the buffer as-is (best effort), never crashes.
-* State size is O(max_lag) per key — bounded, spill-free.
+* A key carries O(max_lag) values, but keys are never evicted
+  (``NoTimeout``): state grows with the number of distinct keys ever
+  seen, and every micro-batch re-serializes the whole state row of each
+  bucket it touches.  Evicting idle keys is ROADMAP item 4.
 
 The driver-facing query runs a file stream through a memory sink
 synchronously; when all data arrives ordered, the result is
@@ -24,17 +32,20 @@ from __future__ import annotations
 
 import os
 from contextlib import contextmanager
-from typing import Iterator, Sequence
+from typing import Callable, Iterator, Sequence
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..errors import validate_lags
+from ..plans.lag_plan import lag_column_names
 
 
 _KB_COL = "_ts_kb"
+_STATE_SCHEMA = "n_buckets int, uids array<long>, bufs array<array<double>>"
 
 
 def _default_key_buckets(stream_df: DataFrame) -> int:
@@ -58,22 +69,91 @@ def _default_key_buckets(stream_df: DataFrame) -> int:
     return max(4, 2 * cores)
 
 
-def _bucketed(stream_df: DataFrame, partition_by: str, cols: list,
-              n_buckets: int) -> DataFrame:
-    """Project to ``cols`` and add the deterministic key-bucket column.
+def _bucketed_drain(stream_df: DataFrame, partition_by: str, sort_cols: list,
+                    value_col: str, new_cols: list, carry_col: str,
+                    step: Callable, prep: Callable | None = None,
+                    extra_cols: Sequence[str] = ()) -> DataFrame:
+    """The one ``applyInPandasWithState`` scaffold of the bucketed drains.
 
-    The projection lands BEFORE the grouping exchange (guide §4.1/§2.3:
-    grouped rows cross JVM→Python as whole-row Arrow batches, so
-    un-projected extras like the events props JSON pay shuffle AND
-    boundary bytes for nothing).  The bucket key is a deterministic
-    function of the key column (Murmur3 + pmod — safe under task retry,
-    guide §2.5), so a key's rows land in one bucket per batch exactly as
-    they landed in one group before; grouping by bucket instead of key
-    changes NOTHING about per-key values, only how many keys share one
-    Python invocation."""
-    return stream_df.select(
-        *cols,
-        F.pmod(F.hash(F.col(partition_by)), F.lit(n_buckets)).alias(_KB_COL),
+    ``stream_df`` is projected to ``(partition_by, *sort_cols, *extra_cols,
+    value_col)`` plus a key-bucket column BEFORE the grouping exchange
+    (guide §4.1/§2.3: grouped rows cross JVM→Python as whole-row Arrow
+    batches, so un-projected extras like the events props JSON pay shuffle
+    AND boundary bytes for nothing).  The bucket is a deterministic
+    function of the key (Murmur3 + pmod — safe under task retry, guide
+    §2.5), so grouping by bucket instead of key changes NOTHING about
+    per-key values, only how many keys share one call.
+
+    Each call sorts the bucket's rows by (key, *sort_cols), applies
+    ``prep``, and prepends each key's carried buffer as typed prefix rows
+    (``carry_col`` holds the values, ``_pre`` flags them); a stable
+    re-sort by key puts them before the key's batch rows, so a grouped
+    kernel sees the history a per-key loop would.  ``step(full)`` returns
+    ``(out_rows, keys, vals)``: output rows, and the new carry as flat
+    parallel arrays in buffer order (a key in ``keys`` replaces its
+    buffer).  Prefix rows never reach the output, whose columns are
+    ``(partition_by, *sort_cols)`` as long and ``(value_col, *new_cols)``
+    as double.
+
+    State is one row per bucket, ``(n_buckets, uids, bufs)``.  A durable
+    checkpoint restarted on a session that plans another bucket count
+    would route keys to other buckets and silently lose or misapply their
+    buffers, so the stored count must match or the call raises
+    ``ValueError``.  Limit: the check fires only when a bucket that holds
+    old state is invoked, i.e. receives rows.
+    """
+    n_buckets = _default_key_buckets(stream_df)
+    out_cols = [partition_by, *sort_cols, value_col, *new_cols]
+    output_schema = ", ".join([f"{c} long" for c in (partition_by, *sort_cols)]
+                              + [f"{c} double" for c in (value_col, *new_cols)])
+
+    def _update(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+        st: dict = {}
+        if state.exists:
+            planned, uids, bufs = state.get
+            if planned != n_buckets:
+                raise ValueError(
+                    f"stream key-bucket count changed: checkpointed state has "
+                    f"{planned} buckets, this query plans {n_buckets}")
+            st = dict(zip(uids, bufs))
+        batch = pd.concat(list(pdfs), ignore_index=True).sort_values(
+            [partition_by, *sort_cols], kind="mergesort"
+        )
+        if prep is not None:
+            batch = prep(batch)
+        batch["_pre"] = False
+        pre_u, pre_v = [], []
+        for u in pd.unique(batch[partition_by]) if st else ():
+            buf = st.get(int(u))
+            if buf:
+                pre_u += [int(u)] * len(buf)
+                pre_v += buf
+        if pre_u:
+            # copies of one batch row keep every dtype through the concat
+            # (long stays int64); only the key, carry_col and flag are real
+            prefix = batch.iloc[np.zeros(len(pre_u), dtype=np.intp)].copy()
+            prefix[partition_by] = pd.array(pre_u, dtype=batch[partition_by].dtype)
+            prefix[carry_col] = np.asarray(pre_v, dtype="float64")
+            prefix["_pre"] = True
+            # stable single-key sort: each key's prefix rows stay before
+            # its batch rows, buffer order and batch sort order preserved
+            full = pd.concat([prefix, batch], ignore_index=True).sort_values(
+                partition_by, kind="mergesort"
+            ).reset_index(drop=True)
+        else:
+            full = batch.reset_index(drop=True)
+        out, keys, vals = step(full)
+        new_st: dict = {}
+        for u, v in zip(keys, vals):
+            new_st.setdefault(int(u), []).append(float(v))
+        st.update(new_st)
+        state.update((n_buckets, list(st.keys()), list(st.values())))
+        yield out.loc[~out["_pre"], out_cols]
+
+    kb = F.pmod(F.hash(F.col(partition_by)), F.lit(n_buckets)).alias(_KB_COL)
+    cols = [partition_by, *sort_cols, *extra_cols, value_col]
+    return stream_df.select(*cols, kb).groupBy(_KB_COL).applyInPandasWithState(
+        _update, output_schema, _STATE_SCHEMA, "append", GroupStateTimeout.NoTimeout
     )
 
 
@@ -88,100 +168,29 @@ def streaming_lag_features(
 ) -> DataFrame:
     """Stateful streaming analogue of operators.lag.lag_features (wide,
     NULL fill). Returns a streaming DataFrame with columns
-    (partition_by, time_col, *order_extra, value_col, {value}_lag{k}...).
+    (partition_by, time_col, *order_extra, value_col, {value}_lag{k}...),
+    the lag columns named as the batch operator names them
+    (:func:`plans.lag_plan.lag_column_names`: a duplicated lag gets a
+    ``_p{pos}`` suffix).
 
-    Keys are processed in HASH BUCKETS (see :func:`_default_key_buckets`):
-    the per-key ring-buffer logic is unchanged — the function loops over
-    the bucket's keys and runs the identical shift-over-buffer code per
-    key, with the bucket's state packed as parallel (uids, bufs) arrays.
+    Each key carries its last ``max(lags)`` values; a grouped shift over
+    ``carried ++ sorted(batch)`` (:func:`_bucketed_drain`) IS the
+    per-series shift.
     """
     lag_list = validate_lags(lags)
     max_lag = max(lag_list)
     sort_cols = [time_col, *order_extra]
-    lag_names = [f"{value_col}_lag{k}" for k in lag_list]
-    out_cols = [partition_by, time_col, *order_extra, value_col, *lag_names]
+    lag_names = lag_column_names([value_col], lag_list)
 
-    out_fields = [
-        f"{partition_by} long",
-        f"{time_col} long",
-        *[f"{c} long" for c in order_extra],
-        f"{value_col} double",
-        *[f"{n} double" for n in lag_names],
-    ]
-    output_schema = ", ".join(out_fields)
-    state_schema = "uids array<long>, bufs array<array<double>>"
-
-    def _update(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        # Vectorized across the bucket's keys: one stable sort on
-        # (key, *sort_cols), carried buffers prepended as flagged prefix
-        # rows, lags via the grouped cython shift — per-key value
-        # identity with the per-key form is exact (shift within a group
-        # IS the per-series shift; the prefix supplies the same carried
-        # history the per-key buffer did).
-        uids, bufs = state.get if state.exists else ([], [])
-        st = dict(zip(uids, bufs))
-        batch = pd.concat(list(pdfs), ignore_index=True).sort_values(
-            [partition_by, *sort_cols], kind="mergesort"
-        )
-        pre_u: list = []
-        pre_v: list = []
-        if st:
-            for u in pd.unique(batch[partition_by]):
-                b = st.get(int(u))
-                if b:
-                    pre_u.extend(int(u) for _ in b)
-                    pre_v.extend(b)
-        if pre_u:
-            import numpy as np
-
-            n_pre = len(pre_u)
-            prefix = pd.DataFrame({
-                partition_by: pd.array(pre_u, dtype=batch[partition_by].dtype),
-                value_col: pd.array(pre_v, dtype="float64"),
-                # typed dummies keep the long columns int64 through the
-                # concat (prefix rows never reach the output)
-                **{c: np.zeros(n_pre, dtype="int64")
-                   for c in (time_col, *order_extra)},
-                "_pre": np.ones(n_pre, dtype=bool),
-            })
-            batch["_pre"] = False
-            full = pd.concat([prefix, batch], ignore_index=True)
-            # stable single-key sort: each key's prefix rows stay before
-            # its batch rows, buffer order and batch sort order preserved
-            full = full.sort_values(
-                partition_by, kind="mergesort"
-            ).reset_index(drop=True)
-        else:
-            full = batch.reset_index(drop=True)
+    def _step(full: pd.DataFrame):
         g = full.groupby(partition_by, sort=False)[value_col]
         for k, name in zip(lag_list, lag_names):
             full[name] = g.shift(k)
-        if max_lag:
-            tail = full.groupby(partition_by, sort=False).tail(max_lag)
-            new_st: dict = {}
-            for u, v in zip(tail[partition_by].to_numpy(),
-                            tail[value_col].to_numpy()):
-                new_st.setdefault(int(u), []).append(float(v))
-            st.update(new_st)
-        else:
-            st.update({int(u): [] for u in pd.unique(batch[partition_by])})
-        state.update((list(st.keys()), list(st.values())))
-        out = full[~full["_pre"]] if pre_u else full
-        yield out[out_cols]
+        tail = full.groupby(partition_by, sort=False).tail(max_lag)
+        return full, tail[partition_by].to_numpy(), tail[value_col].to_numpy()
 
-    n_buckets = _default_key_buckets(stream_df)
-    return (
-        _bucketed(stream_df, partition_by,
-                  [partition_by, time_col, *order_extra, value_col], n_buckets)
-        .groupBy(_KB_COL)
-        .applyInPandasWithState(
-            _update,
-            output_schema,
-            state_schema,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
-    )
+    return _bucketed_drain(stream_df, partition_by, sort_cols, value_col,
+                           lag_names, value_col, _step)
 
 
 _NAME_SEQ = [0]
@@ -384,78 +393,23 @@ def streaming_asof_join(
     time as epoch-µs long.
     """
     sort_cols = [time_col, *order_extra]
-    out_cols = [partition_by, time_col, *order_extra, value_col, out_col]
-    output_schema = ", ".join(
-        [
-            f"{partition_by} long",
-            f"{time_col} long",
-            *[f"{c} long" for c in order_extra],
-            f"{value_col} double",
-            f"{out_col} double",
-        ]
-    )
-    state_schema = "uids array<long>, lasts array<double>"
 
-    def _update(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        # Vectorized across the bucket's keys (the streaming_lag_features
-        # pattern): each key's carried last-right value enters as a
-        # flagged prefix row, the forward fill runs in the grouped
-        # cython ffill (per-group ≡ per-series), prefix rows drop from
-        # the output, and the new last-right per key is the grouped
-        # last non-null of the right-value column.
-        import numpy as np
-
-        uids, lasts = state.get if state.exists else ([], [])
-        st = dict(zip(uids, lasts))
-        batch = pd.concat(list(pdfs), ignore_index=True).sort_values(
-            [partition_by, *sort_cols], kind="mergesort"
-        )
+    def _prep(batch: pd.DataFrame) -> pd.DataFrame:
         batch["_pv"] = batch[value_col].where(batch[type_col] == right_type)
-        pre_u = [int(u) for u in pd.unique(batch[partition_by])
-                 if int(u) in st] if st else []
-        if pre_u:
-            n_pre = len(pre_u)
-            prefix = pd.DataFrame({
-                partition_by: pd.array(pre_u, dtype=batch[partition_by].dtype),
-                value_col: np.zeros(n_pre, dtype="float64"),
-                type_col: pd.array([None] * n_pre, dtype=batch[type_col].dtype),
-                "_pv": pd.array([st[u] for u in pre_u], dtype="float64"),
-                **{c: np.zeros(n_pre, dtype="int64")
-                   for c in (time_col, *order_extra)},
-                "_pre": np.ones(n_pre, dtype=bool),
-            })
-            batch["_pre"] = False
-            full = pd.concat([prefix, batch], ignore_index=True).sort_values(
-                partition_by, kind="mergesort"
-            ).reset_index(drop=True)
-        else:
-            batch["_pre"] = False
-            full = batch.reset_index(drop=True)
-        full[out_col] = full.groupby(partition_by, sort=False)["_pv"].ffill()
-        new_last = full.groupby(partition_by, sort=False)["_pv"].last()
-        st.update({int(u): float(v) for u, v in new_last.items() if pd.notna(v)})
-        state.update((list(st.keys()), list(st.values())))
-        out = full[(~full["_pre"]) & (full[type_col] == left_type)]
-        yield out[out_cols]
+        return batch
 
-    n_buckets = _default_key_buckets(stream_df)
-    return (
-        # key-bucketed + projected before the exchange — see
-        # streaming_lag_features (identical per-key code inside)
-        _bucketed(
-            stream_df.where(F.col(type_col).isin([left_type, right_type])),
-            partition_by,
-            [partition_by, time_col, *order_extra, type_col, value_col],
-            n_buckets,
-        )
-        .groupBy(_KB_COL)
-        .applyInPandasWithState(
-            _update,
-            output_schema,
-            state_schema,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    def _step(full: pd.DataFrame):
+        # the carried last-right value enters as the key's prefix `_pv`;
+        # the grouped cython ffill is the per-series ffill
+        g = full.groupby(partition_by, sort=False)["_pv"]
+        full[out_col] = g.ffill()
+        last = g.last().dropna()
+        return full[full[type_col] == left_type], last.index, last.to_numpy()
+
+    return _bucketed_drain(
+        stream_df.where(F.col(type_col).isin([left_type, right_type])),
+        partition_by, sort_cols, value_col, [out_col], "_pv", _step,
+        prep=_prep, extra_cols=[type_col],
     )
 
 
@@ -489,78 +443,24 @@ def streaming_ewma(
     """
     sort_cols = [time_col, *order_extra]
     out_name = f"{value_col}_ewma"
-    out_cols = [partition_by, time_col, *order_extra, value_col, out_name]
-    output_schema = ", ".join([
-        f"{partition_by} long",
-        f"{time_col} long",
-        *[f"{c} long" for c in order_extra],
-        f"{value_col} double",
-        f"{out_name} double",
-    ])
-    state_schema = "uids array<long>, lasts array<double>"
 
-    def _update(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        # Vectorized across the bucket's keys (the streaming_lag_features
-        # pattern): carried EWMA values enter as flagged prefix rows (the
-        # seed IS step 0 of ewm(adjust=False) — same seeding the per-key
-        # form used), the recurrence runs in the grouped cython ewm
-        # kernel (identical kernel, per group), prefix rows drop from
-        # the output.
-        import numpy as np
-
-        uids, lasts = state.get if state.exists else ([], [])
-        st = dict(zip(uids, lasts))
-        batch = pd.concat(list(pdfs), ignore_index=True).sort_values(
-            [partition_by, *sort_cols], kind="mergesort"
-        )
-        pre_u = [int(u) for u in pd.unique(batch[partition_by])
-                 if int(u) in st] if st else []
-        if pre_u:
-            n_pre = len(pre_u)
-            prefix = pd.DataFrame({
-                partition_by: pd.array(pre_u, dtype=batch[partition_by].dtype),
-                value_col: pd.array([st[u] for u in pre_u], dtype="float64"),
-                **{c: np.zeros(n_pre, dtype="int64")
-                   for c in (time_col, *order_extra)},
-                "_pre": np.ones(n_pre, dtype=bool),
-            })
-            batch["_pre"] = False
-            full = pd.concat([prefix, batch], ignore_index=True).sort_values(
-                partition_by, kind="mergesort"
-            ).reset_index(drop=True)
-        else:
-            full = batch.reset_index(drop=True)
+    def _step(full: pd.DataFrame):
+        # the carried value is the key's prefix row: the seed IS step 0
+        # of ewm(adjust=False), run per group by the grouped cython kernel
         if full[value_col].dtype != "float64":
             full[value_col] = full[value_col].astype("float64")
-        y = (
+        full[out_name] = (
             full.groupby(partition_by, sort=False)[value_col]
             .ewm(alpha=alpha, adjust=False)
             .mean()
             .reset_index(level=0, drop=True)
             .sort_index()
         )
-        full[out_name] = y
-        new_last = full.groupby(partition_by, sort=False)[out_name].last()
-        st.update({int(u): float(v) for u, v in new_last.items()})
-        state.update((list(st.keys()), list(st.values())))
-        out = full[~full["_pre"]] if pre_u else full
-        yield out[out_cols]
+        last = full.groupby(partition_by, sort=False)[out_name].last()
+        return full, last.index, last.to_numpy()
 
-    n_buckets = _default_key_buckets(stream_df)
-    return (
-        # key-bucketed + projected before the exchange — see
-        # streaming_lag_features (identical per-key code inside)
-        _bucketed(stream_df, partition_by,
-                  [partition_by, time_col, *order_extra, value_col], n_buckets)
-        .groupBy(_KB_COL)
-        .applyInPandasWithState(
-            _update,
-            output_schema,
-            state_schema,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
-    )
+    return _bucketed_drain(stream_df, partition_by, sort_cols, value_col,
+                           [out_name], value_col, _step)
 
 
 def _dec6_to_double(micros: int) -> float:
