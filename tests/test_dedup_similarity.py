@@ -863,6 +863,235 @@ def test_incremental_fuzzy_screen_string_ids(spark, tmp_path):
     pd.testing.assert_frame_equal(served, got, check_dtype=False)
 
 
+def _fz_doc(i: int, n: int = 30) -> str:
+    """A deterministic n-token doc sharing no token with any other i."""
+    return " ".join(f"t{i}x{j}" for j in range(n))
+
+
+def _fz_pdf(rows) -> pd.DataFrame:
+    return pd.DataFrame(rows, columns=["doc_id", "text"]).astype(
+        {"doc_id": "int64", "text": object}
+    )
+
+
+def _fz_frame(spark, rows):
+    return spark.createDataFrame(_fz_pdf(rows), "doc_id long, text string")
+
+
+def _py_minhash(text: str, k: int = 3, num_perm: int = 16, bands: int = 8, seed: int = 42):
+    """(hashed shingle set, {(band, band key)}) of ``text``, recomputed in
+    Python with the store's default params (the SQL chain's contract)."""
+    import hashlib
+    import re
+
+    from time_sift_spark.operators.dedup import MERSENNE31, minhash_perms
+
+    toks = [t for t in re.split("[^a-z0-9]+", text.lower()) if t]
+    shingles = {" ".join(toks[i:i + k]) for i in range(max(len(toks) - k + 1, 1))}
+    hs = {int(hashlib.md5(s.encode()).hexdigest()[:8], 16) for s in shingles}
+    sig = [min((a * h + b) % MERSENNE31 for h in hs) for a, b in minhash_perms(num_perm, seed)]
+    r = num_perm // bands
+    return hs, {(b, tuple(sig[b * r:(b + 1) * r])) for b in range(bands)}
+
+
+def _fuzzy_served_vs_inline(spark, tmp_path, corpus_rows, batch_rows) -> pd.DataFrame:
+    """Screen ``batch_rows`` against a store built from ``corpus_rows``
+    and assert it equals the DuckDB inline oracle on the same inputs."""
+    import duckdb
+
+    from time_sift_spark.functions.text_fns import DUCK
+    from time_sift_spark.operators.dedup import (
+        build_minhash_store,
+        dedup_incremental_fuzzy_sql,
+        screen_new_docs_fuzzy,
+    )
+
+    path = str(tmp_path / "mh_edge")
+    build_minhash_store(_fz_frame(spark, corpus_rows), "doc_id", "text", path)
+    got = screen_new_docs_fuzzy(spark, path, _fz_frame(spark, batch_rows)).toPandas()
+    con = duckdb.connect()
+    con.register("_t_ec", _fz_pdf(corpus_rows))
+    con.register("_t_en", _fz_pdf(batch_rows))
+    exp = con.execute(
+        dedup_incremental_fuzzy_sql(DUCK, "_t_ec", "_t_en", "doc_id", "text")
+    ).df()
+    got, exp = (f.sort_values("doc_id").reset_index(drop=True) for f in (got, exp))
+    pd.testing.assert_frame_equal(got, exp, check_dtype=False)
+    return got.set_index("doc_id")
+
+
+def test_fuzzy_screen_null_text_and_empty_increment(spark, tmp_path):
+    """A NULL-text increment doc has no shingles, so it is accepted with
+    max_jaccard 0.0; an empty increment returns 0 rows without error.
+    Both equal the inline oracle."""
+    corpus = [(1, _fz_doc(1)), (2, _fz_doc(2))]
+    out = _fuzzy_served_vs_inline(spark, tmp_path, corpus, [(10, None), (11, _fz_doc(1))])
+    assert out.loc[10].accepted and out.loc[10].max_jaccard == 0.0
+    assert not out.loc[11].accepted
+    assert len(_fuzzy_served_vs_inline(spark, tmp_path, corpus, [])) == 0
+
+
+def test_fuzzy_screen_multi_band_candidate_exact_jaccard(spark, tmp_path):
+    """A near-dup sharing several bands with one stored doc is one
+    candidate per shared band; hits MAXes the identical Jaccards, so
+    max_jaccard is exactly the Python-computed Jaccard of the hashed
+    shingle sets."""
+    near = _fz_doc(1) + " qz"
+    hs_c, bands_c = _py_minhash(_fz_doc(1))
+    hs_n, bands_n = _py_minhash(near)
+    assert len(bands_c & bands_n) >= 2  # the case under test
+    exact = len(hs_c & hs_n) / len(hs_c | hs_n)
+    out = _fuzzy_served_vs_inline(
+        spark, tmp_path, [(1, _fz_doc(1)), (2, _fz_doc(2))], [(10, near), (11, _fz_doc(3))]
+    )
+    assert not out.loc[10].accepted and out.loc[10].max_jaccard == exact
+    assert out.loc[11].accepted and out.loc[11].max_jaccard == 0.0
+
+
+def test_fuzzy_screen_within_batch_chain_smallest_wins(spark, tmp_path):
+    """A chain a < b < c of mutual within-batch near-dups: only a is
+    accepted, b and c are each shadowed by a smaller id."""
+    base = _fz_doc(5)
+    out = _fuzzy_served_vs_inline(
+        spark, tmp_path, [(1, _fz_doc(1))],
+        [(10, base), (11, base + " qz"), (12, base + " qz qy")],
+    )
+    assert list(out.accepted) == [True, False, False]
+    assert (out.loc[[11, 12]].max_jaccard >= 0.5).all()
+
+
+def test_fuzzy_append_crash_between_writes_stays_verifiable(spark, tmp_path, monkeypatch):
+    """A crash between the append's two parquet writes must never leave
+    a stored band (a screen candidate) without its shingle set: the
+    inner verify join would drop it and its near-dups would be silently
+    accepted.  Retrying the append then restores the store; the retry's
+    duplicate tsets rows leave every verdict equal to a clean append's."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from time_sift_spark.operators.dedup import (
+        append_minhash_store,
+        build_minhash_store,
+        screen_new_docs_fuzzy,
+    )
+
+    corpus = _fz_frame(spark, [(1, _fz_doc(1)), (2, _fz_doc(2))])
+    inc1 = _fz_frame(spark, [(10, _fz_doc(10)), (11, _fz_doc(11)), (12, _fz_doc(12))])
+    inc2 = _fz_frame(  # planted near-dups of inc1's docs, plus one novel doc
+        spark, [(20, _fz_doc(10) + " qz"), (21, _fz_doc(11) + " qz"), (22, _fz_doc(22))]
+    )
+    path, clean = str(tmp_path / "crashed"), str(tmp_path / "clean")
+    for p in (path, clean):
+        build_minhash_store(corpus, "doc_id", "text", p)
+    first = screen_new_docs_fuzzy(spark, path, inc1).toPandas()
+    accepted = sorted(first[first.accepted].doc_id)
+    assert accepted == [10, 11, 12]
+    acc = inc1.where(inc1.doc_id.isin(accepted))
+
+    real_parquet, calls = DataFrameWriter.parquet, []
+
+    def second_write_crashes(self, target, *a, **k):
+        calls.append(target)
+        if len(calls) == 2:
+            raise RuntimeError("injected crash between the append's writes")
+        return real_parquet(self, target, *a, **k)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", second_write_crashes)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        append_minhash_store(spark, path, acc)
+    monkeypatch.undo()
+
+    def dids(p, art):
+        return {r.did for r in spark.read.parquet(f"{p}/{art}").select("did").collect()}
+
+    assert dids(path, "bands") <= dids(path, "tsets")  # every candidate verifiable
+
+    append_minhash_store(spark, path, acc)  # the retry
+    append_minhash_store(spark, clean, acc)
+    n_tsets = [spark.read.parquet(f"{p}/tsets").count() for p in (path, clean)]
+    assert n_tsets[0] > n_tsets[1]  # the retry duplicated shingle-set rows
+    verdicts = {}
+    for p in (path, clean):
+        verdicts[p] = [
+            screen_new_docs_fuzzy(spark, p, b).toPandas().set_index("doc_id").sort_index()
+            for b in (inc1, inc2)
+        ]
+    for got, exp in zip(verdicts[path], verdicts[clean]):
+        pd.testing.assert_frame_equal(got, exp)
+    re1, re2 = verdicts[path]
+    assert not re1.accepted.any() and (re1.max_jaccard == 1.0).all()
+    assert list(re2.accepted) == [False, False, True]  # planted near-dups rejected
+
+
+def test_fuzzy_screen_plan_scans_store_once(spark, tmp_path):
+    """The screen's executed plan scans the stored bands and tsets once
+    each, never broadcasts a store artifact (the increment side is the
+    broadcast), signs the increment behind ONE shuffle (every other use
+    is reused), and carries no string side-tag filter."""
+    import re
+
+    from time_sift_spark.operators.dedup import build_minhash_store, screen_new_docs_fuzzy
+
+    src = tmp_path / "src"
+    src.mkdir()
+    for name, lo, hi in (("corpus", 0, 40), ("inc", 40, 60)):
+        rows = [(i, _fz_doc(i % 30)) for i in range(lo, hi)]
+        pd.DataFrame(rows, columns=["doc_id", "text"]).to_parquet(src / f"{name}.parquet")
+    path = str(tmp_path / "mh_plan")
+    build_minhash_store(spark.read.parquet(str(src / "corpus.parquet")), "doc_id", "text", path)
+    inc_path = str(src / "inc.parquet")
+    # render untruncated: by default scan Locations are cut to 100 chars
+    # and long expression lists are elided
+    keys = ("spark.sql.maxMetadataStringLength", "spark.sql.debug.maxToStringFields")
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    for k in keys:
+        spark.conf.set(k, "100000")
+    try:
+        out = screen_new_docs_fuzzy(spark, path, spark.read.parquet(inc_path))
+        assert len(out.collect()) == 20
+        plan = out._jdf.queryExecution().executedPlan().toString()
+    finally:
+        for k, v in saved.items():
+            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
+    plan = plan.split("== Initial Plan ==")[0]
+    nodes = []  # (depth, node text without its codegen-stage prefix)
+    for line in plan.splitlines():
+        body = line.lstrip(" :+-")
+        nodes.append((len(line) - len(body), re.sub(r"^\*\(\d+\) ", "", body)))
+
+    def below(i, stop=()):
+        d0, out_, cut = nodes[i][0], [], None
+        for d, text in nodes[i + 1:]:
+            if d <= d0:
+                break
+            if cut is not None and d > cut:
+                continue
+            cut = d if text.startswith(stop) else None
+            out_.append(text)
+        return out_
+
+    scans = [t for _, t in nodes if t.startswith("FileScan")]
+    for art in ("bands", "tsets"):
+        assert sum(f"{path}/{art}]" in t for t in scans) == 1, (art, plan)
+    # a broadcast may hold join OUTPUT over a store scan (candidates,
+    # hits), never the store's rows themselves
+    joins = ("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
+             "BroadcastNestedLoopJoin", "CartesianProduct")
+    for i, (_, t) in enumerate(nodes):
+        if t.startswith("BroadcastExchange"):
+            assert not any(path in x for x in below(i, joins)), plan
+    boundary = ("Exchange", "BroadcastExchange", "ReusedExchange",
+                "ShuffleQueryStage", "BroadcastQueryStage")
+    signing = [
+        i for i, (_, t) in enumerate(nodes)
+        if t.startswith("Exchange ") and any(
+            x.startswith("FileScan") and inc_path in x and "text#" in x
+            for x in below(i, boundary)
+        )
+    ]
+    assert len(signing) == 1, plan
+    assert "StartsWith" not in plan
+
+
 def test_every_builder_invalidates_before_rebuild():
     """Every persisted-index builder must call begin_build(path) so the
     params completeness marker is absent for the whole rebuild window —

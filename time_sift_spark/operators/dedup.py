@@ -191,13 +191,10 @@ def _minhash_hashed_cte(
     d: Dialect, table: str, id_col: str, text_col: str, shingle_k: int
 ) -> str:
     """CTEs ending in ``hashed(did, h)`` — the tokenize → shingle → md5
-    prefix of the MinHash chain.  Its only caller is
-    :func:`_minhash_sig_cte` (which recomposes it with
-    :func:`_minhash_sigw_select`): the r14 experiment that staged this
-    prefix behind the store build/append/screen paths measured a
-    REGRESSION and was reverted (see the negative-result note at
-    ``build_minhash_store``), so the split survives as documentation of
-    the chain's two halves, not as a shared staging point.
+    prefix of the MinHash chain.  :func:`_minhash_sig_cte` recomposes it
+    with :func:`_minhash_sigw_select`; :func:`screen_new_docs_fuzzy`
+    aggregates it once into signatures AND shingle sets, so the
+    increment's chain runs once per screen.
 
     tokens are STAGED as a column before shingling: embedding the token
     pipeline inside the shingle lambda re-tokenizes once per shingle
@@ -225,17 +222,18 @@ def _minhash_hashed_cte(
 
 
 def _minhash_sigw_select(
-    d: Dialect, num_perm: int, seed: int, from_rel: str = "hashed"
+    d: Dialect, num_perm: int, seed: int, from_rel: str = "hashed", extra: str = ""
 ) -> str:
     """SELECT rendering ``(did, s0..s{P-1})`` wide MinHash signatures
     from a ``(did, h)`` relation — each permutation a cheap modular
-    remap aggregated with MIN, one shuffle total."""
+    remap aggregated with MIN, one shuffle total.  ``extra`` appends
+    more aggregates (``", collect_set(h) AS hs"``) to the same pass."""
     perms = minhash_perms(num_perm, seed)
     mins = ",\n             ".join(
         f"MIN(({a} * h + {b}) % {MERSENNE31}) AS s{i}" for i, (a, b) in enumerate(perms)
     )
     return f"""SELECT did,
-             {mins}
+             {mins}{extra}
       FROM {from_rel}
       GROUP BY did"""
 
@@ -286,13 +284,14 @@ def minhash_signatures_sql(
     """
 
 
-def _band_selects(d: Dialect, num_perm: int, bands: int) -> str:
+def _band_selects(d: Dialect, num_perm: int, bands: int, carry: str = "") -> str:
     """SELECT rendering ``sigw`` as (did, band, bkey) — one row per LSH
     band, bkey = comma-joined signature slots of that band. Shared by
     minhash_lsh_pairs_sql and lsh_verified_neardup_sql so the band-key
     construction cannot drift between the two LSH paths. Spark gets one
     posexplode scan (see minhash_signatures_sql on CTE inlining); DuckDB
-    a UNION ALL (its CTEs materialize)."""
+    a UNION ALL (its CTEs materialize).  ``carry`` appends more ``sigw``
+    columns to every band row (``", hs"``)."""
     assert num_perm % bands == 0
     r = num_perm // bands
     band_keys = [
@@ -301,11 +300,12 @@ def _band_selects(d: Dialect, num_perm: int, bands: int) -> str:
     ]
     if d.name == "spark":
         return (
-            f"SELECT did, band, bkey FROM sigw "
+            f"SELECT did, band, bkey{carry} FROM sigw "
             f"LATERAL VIEW posexplode(array({', '.join(band_keys)})) t AS band, bkey"
         )
     return " UNION ALL ".join(
-        f"SELECT did, {b} AS band, {key} AS bkey FROM sigw" for b, key in enumerate(band_keys)
+        f"SELECT did, {b} AS band, {key} AS bkey{carry} FROM sigw"
+        for b, key in enumerate(band_keys)
     )
 
 
@@ -1791,27 +1791,24 @@ def _verify_exprs(d: Dialect) -> tuple[str, str, str, str]:
 def _fuzzy_screen_tail(
     d: Dialect, new_table: str, id_col: str, *, threshold: float
 ) -> str:
-    """cand→pairs→hits→final SELECT shared VERBATIM by the inline
-    (oracle) and persisted (serve) forms of the fuzzy screen; both
-    provide CTEs ``bands``(did, band, bkey) and ``tsets``(did, hs) whose
-    dids carry a ``'c:'``/``'n:'`` side tag.
+    """cand→pairs→hits→final SELECT of the inline (oracle) fuzzy screen,
+    over CTEs ``bands``(did, band, bkey) and ``tsets``(did, hs) whose
+    dids carry a ``'c:'``/``'n:'`` side tag.  The persisted (serve) form,
+    screen_new_docs_fuzzy, applies the same candidate and verify rules
+    without tags; oracle parity pins the two together.
 
     Candidate rule: an increment doc pairs with every same-band corpus
     doc, and with every SMALLER-id increment doc (min-id-wins within the
     batch, the semantic_dedup ``drops`` convention — a rejected near-dup
     still shadows its own later near-dups, keeping the screen one-pass
     and order-free).  The within-batch order compares the RAW id column
-    in its NATIVE type (an ``nids`` did→raw-id mapping CTE joined back to
-    ``{new_table}``), never a cast of the tag-stripped string — casting
-    ``substring(did, 3)`` to BIGINT silently NULLs non-numeric ids on
-    Spark (dropping within-batch pairs) and errors on DuckDB, so any
-    orderable id type (int, string, date) now works identically on both
-    engines.  Verification is EXACT Jaccard over the hashed shingle
-    sets, so acceptance is exact given the band screen (the
+    in its NATIVE type (``nids`` maps did → raw id), never a cast of the
+    tag-stripped string, so any orderable id type works on both engines.
+    Verification is EXACT Jaccard over the hashed shingle sets, so
+    acceptance is exact given the band screen (the
     lsh_verified_neardup_sql contract).  max_jaccard reports only
     at-or-above-threshold matches (0.0 for accepted docs), matching
-    decontaminate_fuzzy_sql's ``hits`` convention.
-    """
+    decontaminate_fuzzy_sql's ``hits`` convention."""
     _, inter, setsize, jaccard = _verify_exprs(d)
     cast = "STRING" if d.name == "spark" else "VARCHAR"
     return f"""
@@ -1900,6 +1897,33 @@ def dedup_incremental_fuzzy_sql(
     """
 
 
+_MHF_PARAMS = "id_col string, text_col string, num_perm int, bands int, shingle_k int, seed int"
+
+
+def _write_minhash_store(spark, view: str, id_col: str, text_col: str, path: str,
+                         mode: str, num_perm: int, bands: int, shingle_k: int,
+                         seed: int) -> None:
+    """Write ``view``'s docs to ``{path}/tsets``, THEN ``{path}/bands``:
+    only a band row makes a doc a screen candidate, so the bands write
+    is the commit point and a crash between the two never leaves a
+    candidate the verify join cannot see (its near-dups would be
+    silently accepted).  MEASURED (r14): localCheckpoint-staging the
+    shared (did, h) chain REGRESSED the store consumers (1.93 → 2.74 s
+    dedup_incremental_fuzzy) — one cheap tokenize pass beats the extra
+    exchange + materialization + job, so two statements it stays."""
+    from ..functions.text_fns import SPARK as _S
+
+    sig_cte = _minhash_sig_cte(_S, view, id_col, text_col, num_perm, shingle_k, seed)
+    tset, _, _, _ = _verify_exprs(_S)
+    spark.sql(
+        f"WITH {sig_cte} SELECT did, {tset} AS hs FROM hashed GROUP BY did"
+    ).repartition("did").write.mode(mode).parquet(f"{path}/tsets")
+    band_selects = _band_selects(_S, num_perm, bands)
+    spark.sql(f"WITH {sig_cte} SELECT did, band, bkey FROM ({band_selects})").repartition(
+        "bkey"
+    ).write.mode(mode).parquet(f"{path}/bands")
+
+
 def build_minhash_store(
     df: DataFrame,
     id_col: str,
@@ -1912,56 +1936,43 @@ def build_minhash_store(
     seed: int = 42,
 ) -> None:
     """Materialize the corpus's MinHash artifacts for incremental fuzzy
-    screening — ``{path}/bands`` (did, band, bkey; repartitioned by bkey
-    so increment screens equi-join band-clustered files) and
-    ``{path}/tsets`` (did, hs = distinct hashed shingle set, the exact-
-    verify side) — then ``params`` LAST (the completeness marker, the
-    build_dedup_index contract).  The 100 TB corpus is tokenized,
-    shingled, and signed ONCE; every increment thereafter touches only
-    (increment × stored-band/tset) equi-joins."""
+    screening — ``{path}/tsets`` (did, hs = distinct hashed shingle set,
+    the exact-verify side) and ``{path}/bands`` (did, band, bkey, which
+    the screen probes with the broadcast increment bands) — then
+    ``params`` LAST (the completeness marker, the build_dedup_index
+    contract).  The 100 TB corpus is tokenized, shingled, and signed
+    ONCE; every increment thereafter touches only (increment ×
+    stored-band/tset) equi-joins."""
     for c in (id_col, text_col):
         if c not in df.columns:
             raise ColumnNotFoundError(f"column {c!r} not in {df.columns}")
     begin_build(path)
-    from ..functions.text_fns import SPARK as _S
-
     spark = df.sparkSession
-    view = "_ts_mhf_build"
-    df.createOrReplaceTempView(view)
-    # MEASURED negative result (r14): localCheckpoint-staging the
-    # (did, h) chain so bands/tsets share one pass REGRESSED the store
-    # consumers at registered batch sizes (streaming_dedup_fuzzy 7.05 →
-    # 8.39 s, dedup_incremental_fuzzy 1.93 → 2.74 s fresh-JVM) — after
-    # the raw-column NULL-guard fix the duplicated chain is one cheap
-    # tokenize pass, cheaper than the added exchange + materialization
-    # + job per staging statement.  Kept as the two-statement form.
-    sig_cte = _minhash_sig_cte(_S, view, id_col, text_col, num_perm, shingle_k, seed)
-    tset, _, _, _ = _verify_exprs(_S)
-    band_selects = _band_selects(_S, num_perm, bands)
-    spark.sql(f"WITH {sig_cte} SELECT did, band, bkey FROM ({band_selects})").repartition(
-        "bkey"
-    ).write.mode("overwrite").parquet(f"{path}/bands")
-    spark.sql(
-        f"WITH {sig_cte} SELECT did, {tset} AS hs FROM hashed GROUP BY did"
-    ).repartition("did").write.mode("overwrite").parquet(f"{path}/tsets")
+    df.createOrReplaceTempView("_ts_mhf_build")
+    _write_minhash_store(spark, "_ts_mhf_build", id_col, text_col, path, "overwrite",
+                         num_perm, bands, shingle_k, seed)
     spark.createDataFrame(
-        [(id_col, text_col, num_perm, bands, shingle_k, seed)],
-        "id_col string, text_col string, num_perm int, bands int, shingle_k int, seed int",
+        [(id_col, text_col, num_perm, bands, shingle_k, seed)], _MHF_PARAMS
     ).write.mode("overwrite").parquet(f"{path}/params")
 
 
 def screen_new_docs_fuzzy(
     spark, path: str, new_df: DataFrame, *, threshold: float = 0.5
 ) -> DataFrame:
-    """Incremental fuzzy screen against a persisted MinHash store: the
-    increment is signed inline (one MinHash chain over the batch only);
-    candidates come from the increment-bands × stored-bands equi-join
-    plus smaller-id within-batch pairs; exact shingle-set Jaccard
-    verifies.  The corpus is NEVER re-signed — the joins touch only the
-    stored artifacts, the posture that matters when the corpus is 100 TB
-    and the increment is 0.1%.  Output ≡ dedup_incremental_fuzzy_sql
-    (persisted ≡ inline, driver-proven): (doc_id, max_jaccard, accepted).
-    """
+    """Incremental fuzzy screen against a persisted MinHash store.  One
+    aggregate signs each increment doc (MinHash MINs + shingle set); its
+    bands, carrying the sets, are the broadcast build side of ONE scan of
+    the stored bands; the candidates (new id, new set, stored did) are
+    broadcast into ONE scan of the stored sets for the exact-Jaccard
+    verify.  Within-batch pairs come from the increment-bands self-join
+    (smaller native-type id wins, _fuzzy_screen_tail's rule).  A pair
+    sharing k bands is verified k times and ``hits`` MAXes the identical
+    Jaccards, so neither that nor a retried append's duplicate rows need
+    a DISTINCT.  Cost O(increment + candidates).  Limit: the increment's
+    bands and shingle sets must fit a broadcast — screen a larger crawl
+    in increments, appending between them.  Output ≡
+    dedup_incremental_fuzzy_sql (persisted ≡ inline): (doc_id,
+    max_jaccard, accepted)."""
     from ..functions.text_fns import SPARK as _S
 
     # Temp views are PER-SESSION: inside foreachBatch the batch frame
@@ -1969,78 +1980,67 @@ def screen_new_docs_fuzzy(
     # and the final sql() must run on new_df's OWN session or the views
     # resolve against the wrong catalog (streaming_dedup_fuzzy_docs).
     spark = new_df.sparkSession
-    p = spark.read.parquet(f"{path}/params").collect()[0]
+    # Given schemas skip a schema-inference job per read (tsets' did type is bands').
+    p = spark.read.schema(_MHF_PARAMS).parquet(f"{path}/params").collect()[0]
     id_col, text_col = p["id_col"], p["text_col"]
     for c in (id_col, text_col):
         if c not in new_df.columns:
             raise ColumnNotFoundError(f"column {c!r} not in {new_df.columns}")
     nview = "_ts_mhf_new"
     new_df.createOrReplaceTempView(nview)
-    spark.read.parquet(f"{path}/bands").createOrReplaceTempView("_ts_mhf_cbands")
-    spark.read.parquet(f"{path}/tsets").createOrReplaceTempView("_ts_mhf_ctsets")
-    tagged_new = (
-        f"(SELECT concat('n:', CAST({id_col} AS STRING)) AS uid, {text_col} AS _utxt "
-        f"FROM {nview})"
-    )
-    # MEASURED negative result (r14): localCheckpoint-staging the
-    # increment's (did, h) chain here REGRESSED the screen at registered
-    # batch sizes (see build_minhash_store) — the one-statement form's
-    # up-to-4× chain re-execution is one cheap tokenize pass per
-    # reference after the raw-column NULL-guard fix, cheaper than the
-    # staging exchange + materialization + extra job per micro-batch.
-    sig_cte = _minhash_sig_cte(
-        _S, tagged_new, "uid", "_utxt", p["num_perm"], p["shingle_k"], p["seed"]
-    )
-    tset, _, _, _ = _verify_exprs(_S)
-    band_selects = _band_selects(_S, p["num_perm"], p["bands"])
-    tail = _fuzzy_screen_tail(_S, nview, id_col, threshold=threshold)
+    cbands = spark.read.parquet(f"{path}/bands")
+    cbands.createOrReplaceTempView("_ts_mhf_cbands")
+    did_type = cbands.schema["did"].dataType.simpleString()
+    tsets = spark.read.schema(f"did {did_type}, hs array<bigint>").parquet(f"{path}/tsets")
+    tsets.createOrReplaceTempView("_ts_mhf_ctsets")
+    tset, inter, setsize, jaccard = _verify_exprs(_S)
+    sigw = _minhash_sigw_select(_S, p["num_perm"], p["seed"], extra=f", {tset} AS hs")
+    pair_cols = f"{inter} AS n_inter, {setsize}(a.hs) + {setsize}(b.hs) AS n_sum"
     return spark.sql(f"""
-    WITH {sig_cte},
-    tsets AS (
-      SELECT did, {tset} AS hs FROM hashed GROUP BY did
-      UNION ALL
-      SELECT concat('c:', CAST(did AS STRING)) AS did, hs FROM _ts_mhf_ctsets
+    WITH {_minhash_hashed_cte(_S, nview, id_col, text_col, p["shingle_k"])},
+    sigw AS ({sigw}),
+    nbands AS ({_band_selects(_S, p["num_perm"], p["bands"], carry=", hs")}),
+    cand AS (
+      SELECT /*+ BROADCAST(b) */ b.did AS ndid, b.hs, c.did AS odid
+      FROM nbands b JOIN _ts_mhf_cbands c ON c.band = b.band AND c.bkey = b.bkey
     ),
-    bands AS (
-      SELECT did, band, bkey FROM ({band_selects})
+    pairs AS (
+      SELECT /*+ BROADCAST(b) */ b.ndid, {pair_cols}
+      FROM cand b JOIN _ts_mhf_ctsets a ON a.did = b.odid
       UNION ALL
-      SELECT concat('c:', CAST(did AS STRING)) AS did, band, bkey FROM _ts_mhf_cbands
+      SELECT /*+ BROADCAST(a) */ b.did AS ndid, {pair_cols}
+      FROM nbands a JOIN nbands b
+        ON a.band = b.band AND a.bkey = b.bkey AND a.did < b.did
     ),
-    {tail}
+    hits AS (
+      SELECT ndid, MAX({jaccard}) AS max_jaccard
+      FROM pairs WHERE {jaccard} >= {threshold} GROUP BY ndid
+    )
+    SELECT /*+ BROADCAST(h) */ nt.{id_col} AS doc_id,
+           COALESCE(h.max_jaccard, 0.0) AS max_jaccard,
+           h.ndid IS NULL AS accepted
+    FROM {nview} nt LEFT JOIN hits h ON h.ndid = nt.{id_col}
     """)
 
 
 def append_minhash_store(spark, path: str, accepted_docs: DataFrame) -> None:
     """Fold an increment's ACCEPTED documents (id + text) into the
-    MinHash store: their bands and shingle sets are computed with the
-    store's own params and appended (row-independent artifacts, so
-    append ≡ rebuild — the append_dedup_index contract).  After the
-    append, re-screening the same increment admits nothing: every
-    accepted doc now has an exact twin (itself, Jaccard 1.0) in the
-    store (idempotence pinned in tests/test_dedup_similarity.py)."""
-    from ..functions.text_fns import SPARK as _S
-
+    MinHash store: their shingle sets and bands are computed with the
+    store's own params and appended, bands last (_write_minhash_store's
+    commit point; row-independent artifacts, so append ≡ rebuild — the
+    append_dedup_index contract).  After the append, re-screening the
+    same increment admits nothing: every accepted doc now has an exact
+    twin (itself, Jaccard 1.0) in the store (idempotence pinned in
+    tests/test_dedup_similarity.py)."""
     spark = accepted_docs.sparkSession  # foreachBatch clone safety, as above
     p = spark.read.parquet(f"{path}/params").collect()[0]
     id_col, text_col = p["id_col"], p["text_col"]
     for c in (id_col, text_col):
         if c not in accepted_docs.columns:
             raise ColumnNotFoundError(f"column {c!r} not in {accepted_docs.columns}")
-    view = "_ts_mhf_append"
-    accepted_docs.createOrReplaceTempView(view)
-    # Two-statement form kept deliberately — see the measured staging
-    # negative result at build_minhash_store.
-    sig_cte = _minhash_sig_cte(
-        _S, view, id_col, text_col, p["num_perm"], p["shingle_k"], p["seed"]
-    )
-    tset, _, _, _ = _verify_exprs(_S)
-    band_selects = _band_selects(_S, p["num_perm"], p["bands"])
-    spark.sql(f"WITH {sig_cte} SELECT did, band, bkey FROM ({band_selects})").repartition(
-        "bkey"
-    ).write.mode("append").parquet(f"{path}/bands")
-    spark.sql(
-        f"WITH {sig_cte} SELECT did, {tset} AS hs FROM hashed GROUP BY did"
-    ).repartition("did").write.mode("append").parquet(f"{path}/tsets")
+    accepted_docs.createOrReplaceTempView("_ts_mhf_append")
+    _write_minhash_store(spark, "_ts_mhf_append", id_col, text_col, path, "append",
+                         p["num_perm"], p["bands"], p["shingle_k"], p["seed"])
 
 
 def _ppj_exprs(d: Dialect):

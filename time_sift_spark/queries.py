@@ -1019,10 +1019,10 @@ def streaming_dedup_fuzzy_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # accepted docs as J=1.0 twins AND overwrite the verdict dir
         # with those wrong verdicts.  The one remaining double-apply
         # (append ran, crash, append re-runs) only duplicates store
-        # rows, which the screen is proof against: cand GROUP-BYs the
-        # pair and hits MAXes identical jaccards (_fuzzy_screen_tail),
-        # so verdicts are unchanged (bloat only, pinned in
-        # tests/test_dedup_similarity.py).
+        # rows, which the screen is proof against: a duplicated stored
+        # row only repeats a candidate pair, and hits MAXes the identical
+        # jaccards (screen_new_docs_fuzzy), so verdicts are unchanged
+        # (bloat only, pinned in tests/test_dedup_similarity.py).
         import os
 
         bsp = bdf.sparkSession  # micro-batch session clone — stay on it

@@ -2,7 +2,8 @@
 """Regenerate EXPLAIN.md: physical plans of representative queries with
 shuffle/scan commentary. Run after changing any operator:
 
-    python tools/gen_explain.py
+    python tools/gen_explain.py                  # every section
+    python tools/gen_explain.py NAME [NAME ...]  # only these sections, in place
 """
 
 from __future__ import annotations
@@ -108,7 +109,7 @@ SHOWCASE = {
     "entity_match_customer": "Blocked record linkage: ONE equi-join on the name-suffix blocking key (never all-pairs), levenshtein evaluated per candidate pair as the join residual.",
     "sorted_neighborhood_customer": "Sorted-neighborhood linkage: the per-block sort-and-LEAD window is STAGED once (checkpoint read in this plan) and the neighbor arms union over the staged frame - the one-statement form would recompute the window per arm (3 windows / 9 scans measured).",
     "attribution_revenue_events": "Attribution: the per-conversion window stage is materialized ONCE (checkpoint read in this plan - the one-statement oracle would recompute the timeline window per model arm); both model aggregations are bounded-key exchanges with decimal-exact revenue.",
-    "dedup_incremental_fuzzy_docs": "Incremental FUZZY crawl screen: only the increment is tokenized/shingled/MinHash-signed (one groupBy exchange); the corpus arrives as STORED band + shingle-set parquet scans, candidates via the band-key equi-join, exact-Jaccard verify touches only candidate rows - the corpus is never re-signed, so increment cost is O(increment + candidates).",
+    "dedup_incremental_fuzzy_docs": "Incremental FUZZY crawl screen: one aggregate signs the increment (MinHash MINs + shingle set, one groupBy exchange; the within-batch self-join's copy below becomes a ReusedExchange at execution); the increment bands, carrying the shingle sets, are BROADCAST into ONE scan of the stored bands; the candidate rows are broadcast into ONE scan of the stored shingle sets for the exact-Jaccard verify; no side-tag strings anywhere - the corpus is never re-signed, so increment cost is O(increment + candidates).",
     "brown_trend_events": "Brown smoothing: the plan is the EWMA partition scan - ONE hash repartition + sortWithinPartitions feeding a single mapInPandas (two chained cython EWM passes inside; no per-key applyInPandas round-trips, no Python row loop).",
     "markov_transitions_events": "Markov transitions: the LEAD window and the (src,dst) count are the two data exchanges; the per-src denominator window runs over the already-grouped matrix rows, never a join-back to the event stream.",
     "triangle_count_docs": "Triangle counting: orientation and wedge closure are plain equi-joins over the checkpointed oriented relation (referenced 3x - inlining would replan the edge construction 9x); NO global ROW_NUMBER window anywhere - rank is tuple-compared on carried (deg,id).",
@@ -241,8 +242,43 @@ SHOWCASE = {
 SF_DIR = "/root/testdata/sf0.01"
 
 
-def main() -> None:
+def _section(spark, name: str) -> list[str]:
+    df = REGISTRY[name].spark_fn(spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    exchanges = len(re.findall(r"Exchange hashpartitioning", plan))
+    bcasts = len(re.findall(r"BroadcastExchange", plan))
+    single = plan.count("SinglePartition")
+    reads = re.findall(r"ReadSchema: [^\n]*", plan)
+    return [
+        f"## {name}",
+        "",
+        SHOWCASE[name],
+        "",
+        f"- shuffle exchanges: {exchanges}; broadcast exchanges: {bcasts}; "
+        f"SinglePartition exchanges: {single}",
+        *[f"- {r[:150]}" for r in reads],
+        "",
+        "```",
+        *plan.splitlines()[:40],
+        "```",
+        "",
+    ]
+
+
+def main(names: list[str]) -> None:
     spark = get_spark("gen_explain", shuffle_partitions=8)
+    if names:
+        with open("EXPLAIN.md") as f:
+            text = f.read()
+        for name in names:
+            start = text.index(f"\n## {name}\n") + 1
+            end = text.find("\n## ", start)
+            end = len(text) if end < 0 else end + 1
+            text = text[:start] + "\n".join(_section(spark, name)) + "\n" + text[end:]
+        with open("EXPLAIN.md", "w") as f:
+            f.write(text)
+        print(f"rewrote {len(names)} section(s) of EXPLAIN.md")
+        return
     out = [
         "# EXPLAIN — physical plans of representative queries",
         "",
@@ -257,31 +293,12 @@ def main() -> None:
         "DATA through a SinglePartition exchange.",
         "",
     ]
-    for name, note in SHOWCASE.items():
-        df = REGISTRY[name].spark_fn(spark, SF_DIR)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        exchanges = len(re.findall(r"Exchange hashpartitioning", plan))
-        bcasts = len(re.findall(r"BroadcastExchange", plan))
-        single = plan.count("SinglePartition")
-        reads = re.findall(r"ReadSchema: [^\n]*", plan)
-        out += [
-            f"## {name}",
-            "",
-            note,
-            "",
-            f"- shuffle exchanges: {exchanges}; broadcast exchanges: {bcasts}; "
-            f"SinglePartition exchanges: {single}",
-            *[f"- {r[:150]}" for r in reads],
-            "",
-            "```",
-            *plan.splitlines()[:40],
-            "```",
-            "",
-        ]
+    for name in SHOWCASE:
+        out += _section(spark, name)
     with open("EXPLAIN.md", "w") as f:
         f.write("\n".join(out) + "\n")
     print("wrote EXPLAIN.md")
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])
