@@ -960,12 +960,14 @@ def test_fuzzy_screen_within_batch_chain_smallest_wins(spark, tmp_path):
     assert (out.loc[[11, 12]].max_jaccard >= 0.5).all()
 
 
-def test_fuzzy_append_crash_between_writes_stays_verifiable(spark, tmp_path, monkeypatch):
-    """A crash between the append's two parquet writes must never leave
-    a stored band (a screen candidate) without its shingle set: the
-    inner verify join would drop it and its near-dups would be silently
-    accepted.  Retrying the append then restores the store; the retry's
-    duplicate tsets rows leave every verdict equal to a clean append's."""
+def test_fuzzy_append_crash_then_retry_leaves_store_unchanged(spark, tmp_path, monkeypatch):
+    """An append whose one write lands but whose caller never learns it
+    (a crash right after the write) is retried.  The retry must leave the
+    store exactly as a clean single append leaves it: the same ``sigs``
+    row count, the same verdicts for both increments, and the planted
+    near-dups still rejected.  The store stays one artifact plus params."""
+    import os
+
     from pyspark.sql.readwriter import DataFrameWriter
 
     from time_sift_spark.operators.dedup import (
@@ -989,26 +991,22 @@ def test_fuzzy_append_crash_between_writes_stays_verifiable(spark, tmp_path, mon
 
     real_parquet, calls = DataFrameWriter.parquet, []
 
-    def second_write_crashes(self, target, *a, **k):
+    def write_then_crash(self, target, *a, **k):
         calls.append(target)
-        if len(calls) == 2:
-            raise RuntimeError("injected crash between the append's writes")
-        return real_parquet(self, target, *a, **k)
+        real_parquet(self, target, *a, **k)
+        raise RuntimeError("injected crash after the append's write")
 
-    monkeypatch.setattr(DataFrameWriter, "parquet", second_write_crashes)
+    monkeypatch.setattr(DataFrameWriter, "parquet", write_then_crash)
     with pytest.raises(RuntimeError, match="injected crash"):
         append_minhash_store(spark, path, acc)
     monkeypatch.undo()
-
-    def dids(p, art):
-        return {r.did for r in spark.read.parquet(f"{p}/{art}").select("did").collect()}
-
-    assert dids(path, "bands") <= dids(path, "tsets")  # every candidate verifiable
+    assert calls == [f"{path}/sigs"]  # the append is one write
 
     append_minhash_store(spark, path, acc)  # the retry
     append_minhash_store(spark, clean, acc)
-    n_tsets = [spark.read.parquet(f"{p}/tsets").count() for p in (path, clean)]
-    assert n_tsets[0] > n_tsets[1]  # the retry duplicated shingle-set rows
+    n_sigs = [spark.read.parquet(f"{p}/sigs").count() for p in (path, clean)]
+    assert n_sigs[0] == n_sigs[1] == 5  # 2 corpus docs + 3 accepted, no duplicate
+    assert sorted(os.listdir(path)) == ["params", "sigs"]
     verdicts = {}
     for p in (path, clean):
         verdicts[p] = [
@@ -1023,10 +1021,10 @@ def test_fuzzy_append_crash_between_writes_stays_verifiable(spark, tmp_path, mon
 
 
 def test_fuzzy_screen_plan_scans_store_once(spark, tmp_path):
-    """The screen's executed plan scans the stored bands and tsets once
-    each, never broadcasts a store artifact (the increment side is the
-    broadcast), signs the increment behind ONE shuffle (every other use
-    is reused), and carries no string side-tag filter."""
+    """The screen's executed plan scans the store (``sigs``) exactly
+    once in total, never broadcasts store rows (the increment side is
+    the broadcast), signs the increment behind ONE shuffle (every other
+    use is reused), and carries no string side-tag filter."""
     import re
 
     from time_sift_spark.operators.dedup import build_minhash_store, screen_new_docs_fuzzy
@@ -1069,11 +1067,10 @@ def test_fuzzy_screen_plan_scans_store_once(spark, tmp_path):
             out_.append(text)
         return out_
 
-    scans = [t for _, t in nodes if t.startswith("FileScan")]
-    for art in ("bands", "tsets"):
-        assert sum(f"{path}/{art}]" in t for t in scans) == 1, (art, plan)
-    # a broadcast may hold join OUTPUT over a store scan (candidates,
-    # hits), never the store's rows themselves
+    store_scans = [t for _, t in nodes if t.startswith("FileScan") and path in t]
+    assert len(store_scans) == 1 and f"{path}/sigs]" in store_scans[0], plan
+    # a broadcast may hold join OUTPUT over the store scan (hits), never
+    # the store's rows themselves
     joins = ("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
              "BroadcastNestedLoopJoin", "CartesianProduct")
     for i, (_, t) in enumerate(nodes):

@@ -154,6 +154,68 @@ def test_upsert_sink_epoch_redelivery_idempotent(spark, tmp_path):
     assert once == twice
 
 
+def test_screened_append_sink_redelivery_and_crash_window(spark, tmp_path):
+    """The screen-then-append protocol under at-least-once delivery: a
+    redelivered epoch, and a redelivery after a crash between the append
+    and the applied marker, leave the verdict files and the MinHash
+    store as the first delivery left them — no accepted doc turns into
+    a rejected J=1.0 twin of itself."""
+    import glob
+    import os
+    import shutil
+
+    from time_sift_spark.operators.dedup import (
+        append_minhash_store,
+        build_minhash_store,
+        screen_new_docs_fuzzy,
+    )
+    from time_sift_spark.streaming.sinks import screened_append_sink
+
+    def doc(i):
+        return " ".join(f"w{i}x{j}" for j in range(20))
+
+    schema = "doc_id long, text string"
+    base = str(tmp_path / "ingest")
+    store = f"{base}/store"
+    build_minhash_store(
+        spark.createDataFrame([(1, doc(1)), (2, doc(2))], schema), "doc_id", "text", store
+    )
+    batch = spark.createDataFrame(
+        [(10, doc(1) + " qz"), (11, doc(11)), (12, doc(12))], schema
+    )
+    sink = screened_append_sink(
+        base,
+        lambda sp, b: screen_new_docs_fuzzy(sp, store, b),
+        lambda sp, rows: append_minhash_store(sp, store, rows),
+        "accepted",
+        "doc_id",
+    )
+    edir = f"{base}/results/epoch-0"
+
+    def state():
+        files = sorted(
+            (os.path.basename(f), os.stat(f).st_mtime_ns) for f in glob.glob(f"{edir}/*")
+        )
+        verdicts = (
+            spark.read.parquet(edir).toPandas().sort_values("doc_id").reset_index(drop=True)
+        )
+        return files, verdicts, spark.read.parquet(f"{store}/sigs").count()
+
+    sink(batch, 0)
+    files, verdicts, n_sigs = state()
+    assert list(verdicts.accepted) == [False, True, True]  # doc 10 is a near-dup
+    assert n_sigs == 4  # 2 built + 2 accepted
+    for crash_before_marker in (False, True):
+        if crash_before_marker:
+            shutil.rmtree(f"{base}/applied-epoch-0")
+        sink(batch, 0)  # redelivery of epoch 0
+        got_files, got, got_n = state()
+        assert got_files == files
+        pd.testing.assert_frame_equal(got, verdicts)
+        assert got_n == n_sigs
+        assert not (~got.accepted & (got.max_jaccard == 1.0)).any()
+
+
 def test_streaming_fuzzy_dedup_cross_batch_state(spark):
     """The novel property of streaming fuzzy ingestion: a batch-2
     re-crawl of a BATCH-1 page (never in the built corpus) is rejected

@@ -284,20 +284,24 @@ def minhash_signatures_sql(
     """
 
 
-def _band_selects(d: Dialect, num_perm: int, bands: int, carry: str = "") -> str:
-    """SELECT rendering ``sigw`` as (did, band, bkey) — one row per LSH
-    band, bkey = comma-joined signature slots of that band. Shared by
-    minhash_lsh_pairs_sql and lsh_verified_neardup_sql so the band-key
-    construction cannot drift between the two LSH paths. Spark gets one
-    posexplode scan (see minhash_signatures_sql on CTE inlining); DuckDB
-    a UNION ALL (its CTEs materialize).  ``carry`` appends more ``sigw``
-    columns to every band row (``", hs"``)."""
+def _band_keys(num_perm: int, bands: int) -> list[str]:
+    """One bkey expression per LSH band (its ``sigw`` slots comma-joined),
+    shared by every LSH path and the MinHash store so they cannot drift."""
     assert num_perm % bands == 0
     r = num_perm // bands
-    band_keys = [
+    return [
         "concat_ws(',', {cols})".format(cols=", ".join(f"s{b * r + j}" for j in range(r)))
         for b in range(bands)
     ]
+
+
+def _band_selects(d: Dialect, num_perm: int, bands: int, carry: str = "") -> str:
+    """SELECT rendering ``sigw`` as (did, band, bkey) — one row per LSH
+    band (:func:`_band_keys`).  Spark gets one posexplode scan (see
+    minhash_signatures_sql on CTE inlining); DuckDB a UNION ALL (its
+    CTEs materialize).  ``carry`` appends more ``sigw`` columns to every
+    band row (``", hs"``)."""
+    band_keys = _band_keys(num_perm, bands)
     if d.name == "spark":
         return (
             f"SELECT did, band, bkey{carry} FROM sigw "
@@ -1900,28 +1904,21 @@ def dedup_incremental_fuzzy_sql(
 _MHF_PARAMS = "id_col string, text_col string, num_perm int, bands int, shingle_k int, seed int"
 
 
-def _write_minhash_store(spark, view: str, id_col: str, text_col: str, path: str,
-                         mode: str, num_perm: int, bands: int, shingle_k: int,
-                         seed: int) -> None:
-    """Write ``view``'s docs to ``{path}/tsets``, THEN ``{path}/bands``:
-    only a band row makes a doc a screen candidate, so the bands write
-    is the commit point and a crash between the two never leaves a
-    candidate the verify join cannot see (its near-dups would be
-    silently accepted).  MEASURED (r14): localCheckpoint-staging the
-    shared (did, h) chain REGRESSED the store consumers (1.93 → 2.74 s
-    dedup_incremental_fuzzy) — one cheap tokenize pass beats the extra
-    exchange + materialization + job, so two statements it stays."""
+def _write_minhash_store(spark, view: str, path: str, mode: str, p) -> None:
+    """Write ``view``'s docs to ``{path}/sigs`` with the store params
+    ``p`` in ONE statement: one aggregate signs each doc and collects its
+    shingle set, so a doc's band keys (what makes it a candidate) and its
+    set (what verifies it) land in one row — no write order to keep."""
     from ..functions.text_fns import SPARK as _S
 
-    sig_cte = _minhash_sig_cte(_S, view, id_col, text_col, num_perm, shingle_k, seed)
     tset, _, _, _ = _verify_exprs(_S)
-    spark.sql(
-        f"WITH {sig_cte} SELECT did, {tset} AS hs FROM hashed GROUP BY did"
-    ).repartition("did").write.mode(mode).parquet(f"{path}/tsets")
-    band_selects = _band_selects(_S, num_perm, bands)
-    spark.sql(f"WITH {sig_cte} SELECT did, band, bkey FROM ({band_selects})").repartition(
-        "bkey"
-    ).write.mode(mode).parquet(f"{path}/bands")
+    sigw = _minhash_sigw_select(_S, p["num_perm"], p["seed"], extra=f", {tset} AS hs")
+    spark.sql(f"""
+    WITH {_minhash_hashed_cte(_S, view, p["id_col"], p["text_col"], p["shingle_k"])},
+    sigw AS ({sigw})
+    SELECT did, array({', '.join(_band_keys(p["num_perm"], p["bands"]))}) AS bkeys, hs
+    FROM sigw
+    """).write.mode(mode).parquet(f"{path}/sigs")
 
 
 def build_minhash_store(
@@ -1935,25 +1932,24 @@ def build_minhash_store(
     shingle_k: int = 3,
     seed: int = 42,
 ) -> None:
-    """Materialize the corpus's MinHash artifacts for incremental fuzzy
-    screening — ``{path}/tsets`` (did, hs = distinct hashed shingle set,
-    the exact-verify side) and ``{path}/bands`` (did, band, bkey, which
-    the screen probes with the broadcast increment bands) — then
-    ``params`` LAST (the completeness marker, the build_dedup_index
-    contract).  The 100 TB corpus is tokenized, shingled, and signed
-    ONCE; every increment thereafter touches only (increment ×
-    stored-band/tset) equi-joins."""
+    """Materialize the corpus's MinHash store for incremental fuzzy
+    screening — ``{path}/sigs``, one row per doc (did, bkeys = its LSH
+    band keys, hs = its distinct hashed shingle set) — then ``params``
+    LAST (the completeness marker, the build_dedup_index contract).  The
+    100 TB corpus is tokenized, shingled, and signed ONCE; every
+    increment thereafter touches one scan of ``sigs``.  Stores in the
+    earlier two-artifact layout (``tsets`` + ``bands``) cannot be read:
+    rebuild them."""
     for c in (id_col, text_col):
         if c not in df.columns:
             raise ColumnNotFoundError(f"column {c!r} not in {df.columns}")
     begin_build(path)
     spark = df.sparkSession
     df.createOrReplaceTempView("_ts_mhf_build")
-    _write_minhash_store(spark, "_ts_mhf_build", id_col, text_col, path, "overwrite",
-                         num_perm, bands, shingle_k, seed)
-    spark.createDataFrame(
-        [(id_col, text_col, num_perm, bands, shingle_k, seed)], _MHF_PARAMS
-    ).write.mode("overwrite").parquet(f"{path}/params")
+    p = dict(id_col=id_col, text_col=text_col, num_perm=num_perm, bands=bands,
+             shingle_k=shingle_k, seed=seed)
+    _write_minhash_store(spark, "_ts_mhf_build", path, "overwrite", p)
+    spark.createDataFrame([p], _MHF_PARAMS).write.mode("overwrite").parquet(f"{path}/params")
 
 
 def screen_new_docs_fuzzy(
@@ -1961,17 +1957,14 @@ def screen_new_docs_fuzzy(
 ) -> DataFrame:
     """Incremental fuzzy screen against a persisted MinHash store.  One
     aggregate signs each increment doc (MinHash MINs + shingle set); its
-    bands, carrying the sets, are the broadcast build side of ONE scan of
-    the stored bands; the candidates (new id, new set, stored did) are
-    broadcast into ONE scan of the stored sets for the exact-Jaccard
-    verify.  Within-batch pairs come from the increment-bands self-join
-    (smaller native-type id wins, _fuzzy_screen_tail's rule).  A pair
-    sharing k bands is verified k times and ``hits`` MAXes the identical
-    Jaccards, so neither that nor a retried append's duplicate rows need
-    a DISTINCT.  Cost O(increment + candidates).  Limit: the increment's
-    bands and shingle sets must fit a broadcast — screen a larger crawl
-    in increments, appending between them.  Output ≡
-    dedup_incremental_fuzzy_sql (persisted ≡ inline): (doc_id,
+    bands, carrying the sets, are broadcast into ONE scan of ``sigs``
+    with ``bkeys`` posexploded, so the stored set is on the joined row
+    and the exact-Jaccard verify runs on the join output.  Within-batch
+    pairs come from the increment-bands self-join (smaller native-type
+    id wins, _fuzzy_screen_tail's rule); ``hits`` MAXes a pair's
+    per-shared-band Jaccards, so no DISTINCT.  Cost O(increment +
+    candidates); the increment's bands and sets must fit a broadcast.
+    Output ≡ dedup_incremental_fuzzy_sql (persisted ≡ inline): (doc_id,
     max_jaccard, accepted)."""
     from ..functions.text_fns import SPARK as _S
 
@@ -1980,7 +1973,7 @@ def screen_new_docs_fuzzy(
     # and the final sql() must run on new_df's OWN session or the views
     # resolve against the wrong catalog (streaming_dedup_fuzzy_docs).
     spark = new_df.sparkSession
-    # Given schemas skip a schema-inference job per read (tsets' did type is bands').
+    # A given schema skips a schema-inference job per read.
     p = spark.read.schema(_MHF_PARAMS).parquet(f"{path}/params").collect()[0]
     id_col, text_col = p["id_col"], p["text_col"]
     for c in (id_col, text_col):
@@ -1988,11 +1981,7 @@ def screen_new_docs_fuzzy(
             raise ColumnNotFoundError(f"column {c!r} not in {new_df.columns}")
     nview = "_ts_mhf_new"
     new_df.createOrReplaceTempView(nview)
-    cbands = spark.read.parquet(f"{path}/bands")
-    cbands.createOrReplaceTempView("_ts_mhf_cbands")
-    did_type = cbands.schema["did"].dataType.simpleString()
-    tsets = spark.read.schema(f"did {did_type}, hs array<bigint>").parquet(f"{path}/tsets")
-    tsets.createOrReplaceTempView("_ts_mhf_ctsets")
+    spark.read.parquet(f"{path}/sigs").createOrReplaceTempView("_ts_mhf_sigs")
     tset, inter, setsize, jaccard = _verify_exprs(_S)
     sigw = _minhash_sigw_select(_S, p["num_perm"], p["seed"], extra=f", {tset} AS hs")
     pair_cols = f"{inter} AS n_inter, {setsize}(a.hs) + {setsize}(b.hs) AS n_sum"
@@ -2000,13 +1989,10 @@ def screen_new_docs_fuzzy(
     WITH {_minhash_hashed_cte(_S, nview, id_col, text_col, p["shingle_k"])},
     sigw AS ({sigw}),
     nbands AS ({_band_selects(_S, p["num_perm"], p["bands"], carry=", hs")}),
-    cand AS (
-      SELECT /*+ BROADCAST(b) */ b.did AS ndid, b.hs, c.did AS odid
-      FROM nbands b JOIN _ts_mhf_cbands c ON c.band = b.band AND c.bkey = b.bkey
-    ),
+    cbands AS (SELECT * FROM _ts_mhf_sigs LATERAL VIEW posexplode(bkeys) t AS band, bkey),
     pairs AS (
-      SELECT /*+ BROADCAST(b) */ b.ndid, {pair_cols}
-      FROM cand b JOIN _ts_mhf_ctsets a ON a.did = b.odid
+      SELECT /*+ BROADCAST(b) */ b.did AS ndid, {pair_cols}
+      FROM nbands b JOIN cbands a ON a.band = b.band AND a.bkey = b.bkey
       UNION ALL
       SELECT /*+ BROADCAST(a) */ b.did AS ndid, {pair_cols}
       FROM nbands a JOIN nbands b
@@ -2025,22 +2011,23 @@ def screen_new_docs_fuzzy(
 
 def append_minhash_store(spark, path: str, accepted_docs: DataFrame) -> None:
     """Fold an increment's ACCEPTED documents (id + text) into the
-    MinHash store: their shingle sets and bands are computed with the
-    store's own params and appended, bands last (_write_minhash_store's
-    commit point; row-independent artifacts, so append ≡ rebuild — the
-    append_dedup_index contract).  After the append, re-screening the
-    same increment admits nothing: every accepted doc now has an exact
-    twin (itself, Jaccard 1.0) in the store (idempotence pinned in
-    tests/test_dedup_similarity.py)."""
+    MinHash store in one write, signed with the store's own params
+    (append ≡ rebuild, the append_dedup_index contract).  Docs whose id
+    is already stored are anti-joined away first, so a retried or
+    redelivered append leaves the store unchanged.  Re-screening the
+    increment afterwards admits nothing: each accepted doc now has its
+    exact twin (Jaccard 1.0) in the store."""
     spark = accepted_docs.sparkSession  # foreachBatch clone safety, as above
-    p = spark.read.parquet(f"{path}/params").collect()[0]
+    p = spark.read.schema(_MHF_PARAMS).parquet(f"{path}/params").collect()[0]
     id_col, text_col = p["id_col"], p["text_col"]
     for c in (id_col, text_col):
         if c not in accepted_docs.columns:
             raise ColumnNotFoundError(f"column {c!r} not in {accepted_docs.columns}")
-    accepted_docs.createOrReplaceTempView("_ts_mhf_append")
-    _write_minhash_store(spark, "_ts_mhf_append", id_col, text_col, path, "append",
-                         p["num_perm"], p["bands"], p["shingle_k"], p["seed"])
+    seen = spark.read.parquet(f"{path}/sigs").select("did")
+    accepted_docs.join(
+        seen, accepted_docs[id_col] == seen["did"], "left_anti"
+    ).createOrReplaceTempView("_ts_mhf_append")
+    _write_minhash_store(spark, "_ts_mhf_append", path, "append", p)
 
 
 def _ppj_exprs(d: Dialect):

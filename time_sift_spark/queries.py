@@ -854,9 +854,9 @@ def dedup_incremental_fuzzy_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     their shingle Jaccard vs the original stays ≈0.97 (this screen
     rejects all 50).  The corpus (doc_id < 400) is tokenized, shingled,
     and MinHash-signed ONCE into a persisted store
-    (build_minhash_store: band table + shingle-set table); the increment
-    is signed inline and screened via (increment-bands × stored-bands)
-    equi-joins + exact Jaccard verify — the corpus is never re-signed
+    (build_minhash_store: one (did, band keys, shingle set) row per doc);
+    the increment is signed inline and screened via one band equi-join
+    + exact Jaccard verify — the corpus is never re-signed
     (operators/dedup.py:screen_new_docs_fuzzy).  The oracle runs the
     INLINE two-corpus form (dedup_incremental_fuzzy_sql), so the driver
     proves persisted ≡ inline.  Output: one row per increment doc —
@@ -865,7 +865,7 @@ def dedup_incremental_fuzzy_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, "documents", sf_dir)
     path = _index_dir(
-        "ts_mh_store", sf_dir, "fuzzy_v1_lt400_p16b8k3s42", table="documents"
+        "ts_mh_store", sf_dir, "fuzzy_v2_lt400_p16b8k3s42", table="documents"
     )
     if not _index_ready(path):
         build_minhash_store(
@@ -972,10 +972,10 @@ def streaming_dedup_fuzzy_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING fuzzy ingestion — the persisted MinHash store as live
     crawl state: the increment arrives in 2 micro-batches
     (maxFilesPerTrigger=1 over mtime-ordered chunks) and each epoch's
-    foreachBatch sink (a) screens the batch against the CURRENT store
-    (band equi-join + exact-Jaccard verify, screen_new_docs_fuzzy),
-    (b) writes the per-doc verdicts to the result sink, then (c) appends
-    the batch's accepted docs into the store — so chunk 1's 10 planted
+    foreachBatch sink (screened_append_sink) (a) screens the batch
+    against the CURRENT store (screen_new_docs_fuzzy), (b) writes the
+    per-doc verdicts, then (c) appends the batch's accepted docs into
+    the store — so chunk 1's 10 planted
     re-crawls of CHUNK-0 pages are rejected purely through cross-batch
     state (chunk 0's pages were never in the built corpus), alongside
     its corpus re-crawls.  The store is built fresh per run (appends
@@ -989,11 +989,11 @@ def streaming_dedup_fuzzy_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         screen_new_docs_fuzzy,
     )
     from .streaming.lag_stream import _next_stream_name
+    from .streaming.sinks import run_screened_ingest
 
     docs = load_table(spark, "documents", sf_dir)
     base = _roundtrip_dir("ts_sfz_") + "/" + _next_stream_name("v")
     store = f"{base}/store"
-    results = f"{base}/results"
     build_minhash_store(
         docs.where("doc_id < 400").select("doc_id", "text"), "doc_id", "text", store
     )
@@ -1004,51 +1004,12 @@ def streaming_dedup_fuzzy_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(chunk_dir)
     )
 
-    def _sink(bdf, epoch_id):
-        # foreachBatch is at-least-once: a redelivered epoch must not
-        # duplicate verdict rows or store artifacts.  Verdicts land in an
-        # epoch-keyed subdirectory with overwrite mode (the
-        # parquet_epoch_sink recipe test_upsert_sink_epoch_redelivery_
-        # idempotent pins) and the store append is guarded by a
-        # per-epoch applied marker — a fully-applied epoch's redelivery
-        # is a no-op.  The crash window BETWEEN the append and the
-        # marker is covered by verdict reuse: if this epoch's verdict
-        # parquet is already complete (_SUCCESS), the redelivery reuses
-        # it instead of re-screening — re-screening against the
-        # post-append store would wrongly reject the epoch's own
-        # accepted docs as J=1.0 twins AND overwrite the verdict dir
-        # with those wrong verdicts.  The one remaining double-apply
-        # (append ran, crash, append re-runs) only duplicates store
-        # rows, which the screen is proof against: a duplicated stored
-        # row only repeats a candidate pair, and hits MAXes the identical
-        # jaccards (screen_new_docs_fuzzy), so verdicts are unchanged
-        # (bloat only, pinned in tests/test_dedup_similarity.py).
-        import os
-
-        bsp = bdf.sparkSession  # micro-batch session clone — stay on it
-        marker = f"{base}/applied-epoch-{epoch_id}"
-        if os.path.exists(marker):
-            return
-        edir = f"{results}/epoch-{epoch_id}"
-        if not os.path.exists(f"{edir}/_SUCCESS"):
-            out = screen_new_docs_fuzzy(bsp, store, bdf, threshold=0.5)
-            out.write.mode("overwrite").parquet(edir)
-        verdicts = bsp.read.parquet(edir)
-        accepted = bdf.join(
-            verdicts.where("accepted").select("doc_id"), "doc_id", "left_semi"
-        )
-        append_minhash_store(bsp, store, accepted)
-        os.makedirs(marker)
-
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .queryName(_next_stream_name("ts_stream_fuzzy"))
-        .option("checkpointLocation", f"{base}/_checkpoint")
-        .trigger(availableNow=True)
-        .start()
+    return run_screened_ingest(
+        stream, base, _next_stream_name("ts_stream_fuzzy"),
+        screen=lambda bsp, bdf: screen_new_docs_fuzzy(bsp, store, bdf, threshold=0.5),
+        append=lambda bsp, acc: append_minhash_store(bsp, store, acc),
+        accepted="accepted", id_col="doc_id",
     )
-    q.awaitTermination()
-    return spark.read.option("recursiveFileLookup", "true").parquet(results)
 
 
 def _jaccard_blocks(d):
@@ -9374,16 +9335,16 @@ def streaming_bloom_screen_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     overwrite directory, (c) appends the batch's definitely-new docs'
     positions (append ≡ rebuild — presence semantics survive
     duplicates) guarded by a per-epoch applied marker (the
-    streaming_dedup_fuzzy_docs at-least-once recipe).  Chunk 1's 10
+    screened_append_sink at-least-once recipe).  Chunk 1's 10
     exact copies of CHUNK-0 pages are rejected purely through
     cross-batch state.  State is O(m) bits, never O(corpus)."""
     from .operators.sketch import append_bloom_filter, bloom_screen_persisted, build_bloom_filter
     from .streaming.lag_stream import _next_stream_name
+    from .streaming.sinks import run_screened_ingest
 
     docs = load_table(spark, "documents", sf_dir)
     base = _roundtrip_dir("ts_sbl_") + "/" + _next_stream_name("v")
     store = f"{base}/store"
-    results = f"{base}/results"
     build_bloom_filter(
         docs.where("doc_id < 400").select("doc_id", "text"), "text", store
     )
@@ -9394,41 +9355,12 @@ def streaming_bloom_screen_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(chunk_dir)
     )
 
-    def _sink(bdf, epoch_id):
-        import os
-
-        bsp = bdf.sparkSession  # micro-batch session clone — stay on it
-        marker = f"{base}/applied-epoch-{epoch_id}"
-        if os.path.exists(marker):
-            return
-        edir = f"{results}/epoch-{epoch_id}"
-        # Crash-window cover (the streaming_dedup_fuzzy_docs recipe):
-        # a redelivery whose verdicts already persisted reuses them —
-        # re-screening after the append would mark the epoch's own docs
-        # possibly_seen and overwrite the verdicts wrongly.  Re-running
-        # the append is safe: Bloom positions are set-semantics (double
-        # append pinned in tests/test_prefix_sketch.py).
-        if not os.path.exists(f"{edir}/_SUCCESS"):
-            out = bloom_screen_persisted(bsp, store, bdf, "doc_id")
-            out.write.mode("overwrite").parquet(edir)
-        verdicts = bsp.read.parquet(edir)
-        accepted = bdf.join(
-            verdicts.where("NOT possibly_seen").select("doc_id"),
-            "doc_id",
-            "left_semi",
-        )
-        append_bloom_filter(bsp, store, accepted)
-        os.makedirs(marker)
-
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .queryName(_next_stream_name("ts_stream_bloom"))
-        .option("checkpointLocation", f"{base}/_checkpoint")
-        .trigger(availableNow=True)
-        .start()
+    return run_screened_ingest(
+        stream, base, _next_stream_name("ts_stream_bloom"),
+        screen=lambda bsp, bdf: bloom_screen_persisted(bsp, store, bdf, "doc_id"),
+        append=lambda bsp, acc: append_bloom_filter(bsp, store, acc),
+        accepted="NOT possibly_seen", id_col="doc_id",
     )
-    q.awaitTermination()
-    return spark.read.option("recursiveFileLookup", "true").parquet(results)
 
 
 
@@ -9582,8 +9514,8 @@ def streaming_vector_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     proven append ≡ rebuild path — and its vid anti-join makes
     re-appends no-ops).  Chunk 1's 10 exact copies of CHUNK-0 vectors
     are rejected purely through cross-batch state.  Redelivery reuses
-    persisted verdicts (the streaming_dedup_fuzzy_docs crash-window
-    recipe).  Oracle chains two inline screen rounds — drain ≡
+    persisted verdicts (the screened_append_sink crash-window recipe).
+    Oracle chains two inline screen rounds — drain ≡
     chained-batch, driver-proven."""
     from .operators.similarity import (
         append_lsh_index,
@@ -9591,11 +9523,11 @@ def streaming_vector_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         screen_new_vectors_lsh,
     )
     from .streaming.lag_stream import _next_stream_name
+    from .streaming.sinks import run_screened_ingest
 
     emb = load_table(spark, "embeddings", sf_dir)
     base = _roundtrip_dir("ts_svi_") + "/" + _next_stream_name("v")
     store = f"{base}/index"
-    results = f"{base}/results"
     build_lsh_index(
         emb.where("vec_id < 400").select("vec_id", "embedding"),
         "vec_id", "embedding", store,
@@ -9608,33 +9540,12 @@ def streaming_vector_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(chunk_dir)
     )
 
-    def _sink(bdf, epoch_id):
-        import os
-
-        bsp = bdf.sparkSession  # micro-batch session clone — stay on it
-        marker = f"{base}/applied-epoch-{epoch_id}"
-        if os.path.exists(marker):
-            return
-        edir = f"{results}/epoch-{epoch_id}"
-        if not os.path.exists(f"{edir}/_SUCCESS"):
-            out = screen_new_vectors_lsh(bsp, store, bdf, threshold=0.9)
-            out.write.mode("overwrite").parquet(edir)
-        verdicts = bsp.read.parquet(edir)
-        accepted = bdf.join(
-            verdicts.where("accepted").select("vec_id"), "vec_id", "left_semi"
-        )
-        append_lsh_index(bsp, store, accepted)
-        os.makedirs(marker)
-
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .queryName(_next_stream_name("ts_stream_vingest"))
-        .option("checkpointLocation", f"{base}/_checkpoint")
-        .trigger(availableNow=True)
-        .start()
+    return run_screened_ingest(
+        stream, base, _next_stream_name("ts_stream_vingest"),
+        screen=lambda bsp, bdf: screen_new_vectors_lsh(bsp, store, bdf, threshold=0.9),
+        append=lambda bsp, acc: append_lsh_index(bsp, store, acc),
+        accepted="accepted", id_col="vec_id",
     )
-    q.awaitTermination()
-    return spark.read.option("recursiveFileLookup", "true").parquet(results)
 
 
 def _attribution_oracle() -> str:

@@ -123,3 +123,53 @@ def run_stream_upsert(
         .start()
     )
     q.awaitTermination()
+
+
+def screened_append_sink(base_path: str, screen, append, accepted: str, id_col: str):
+    """foreachBatch writer for screen-then-append ingestion into a
+    persisted store: ``screen(spark, batch)``'s verdicts (one row per
+    ``id_col``) land in ``{base}/results/epoch-{id}``, the batch rows whose
+    verdict matches the SQL predicate ``accepted`` are left-semi-joined
+    back, and ``append(spark, rows)`` folds them into the store — all on
+    the batch's own (cloned micro-batch) session.
+
+    foreachBatch is at-least-once.  A per-epoch applied marker makes a
+    fully-applied epoch's redelivery a no-op.  The crash window between
+    the append and the marker is covered by verdict reuse: complete
+    (``_SUCCESS``) verdicts are read back instead of re-screening, which
+    against the post-append store would reject the epoch's own accepted
+    docs as exact twins and overwrite the verdicts with that answer.
+    The append then re-runs, so it must leave the store unchanged when
+    repeated: an anti-join on the stored ids, or set semantics."""
+
+    def _write(batch_df: DataFrame, epoch_id: int) -> None:
+        spark = batch_df.sparkSession
+        marker = os.path.join(base_path, f"applied-epoch-{epoch_id}")
+        if os.path.exists(marker):
+            return
+        edir = os.path.join(base_path, "results", f"epoch-{epoch_id}")
+        if not os.path.exists(os.path.join(edir, "_SUCCESS")):
+            screen(spark, batch_df).write.mode("overwrite").parquet(edir)
+        keep = spark.read.parquet(edir).where(accepted).select(id_col)
+        append(spark, batch_df.join(keep, id_col, "left_semi"))
+        os.makedirs(marker)
+
+    return _write
+
+
+def run_screened_ingest(stream_out: DataFrame, base_path: str, query_name: str, *,
+                        screen, append, accepted: str, id_col: str) -> DataFrame:
+    """Drive a stream through :func:`screened_append_sink` until all
+    available input is consumed; returns every epoch's verdicts."""
+    q = (
+        stream_out.writeStream.foreachBatch(
+            screened_append_sink(base_path, screen, append, accepted, id_col)
+        )
+        .queryName(query_name)
+        .option("checkpointLocation", os.path.join(base_path, "_checkpoint"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    results = os.path.join(base_path, "results")
+    return stream_out.sparkSession.read.option("recursiveFileLookup", "true").parquet(results)
