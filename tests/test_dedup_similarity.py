@@ -1090,37 +1090,58 @@ def test_fuzzy_screen_plan_scans_store_once(spark, tmp_path):
 
 
 def test_every_builder_invalidates_before_rebuild():
-    """Every persisted-index builder must call begin_build(path) so the
-    params completeness marker is absent for the whole rebuild window —
-    a crash mid-rebuild must read as not-ready, never as ready-over-torn
-    artifacts."""
+    """Every persisted-index builder in ``time_sift_spark.operators`` (every
+    ``build_*`` with a ``path``) keeps the artifacts.py marker contract:
+    ``begin_build(spark, path)`` precedes its first write, ``commit_build``
+    is its last write, and it writes no Python row (``createDataFrame``).
+    So the params marker is absent for the whole rebuild window — a crash
+    mid-rebuild reads as not-ready, never as ready-over-torn artifacts —
+    and committing it starts no Python worker."""
+    import ast
+    import importlib
     import inspect
+    import pkgutil
+    import textwrap
 
-    from time_sift_spark.operators.dedup import build_dedup_index, build_minhash_store
-    from time_sift_spark.operators.pq import build_ivfpq_index, build_pq_index
-    from time_sift_spark.operators.search import build_text_index
-    from time_sift_spark.operators.similarity import (
-        build_ivf_index,
-        build_lsh_index,
-        build_refined_ivf_index,
-    )
-    from time_sift_spark.operators.text import build_quality_model
+    import time_sift_spark.operators as ops
 
-    for fn in (
-        build_dedup_index,
-        build_minhash_store,
-        build_text_index,
-        build_lsh_index,
-        build_ivf_index,
-        build_refined_ivf_index,
-        build_pq_index,
-        build_ivfpq_index,
-        build_quality_model,
-    ):
-        src = inspect.getsource(fn)
-        assert "begin_build(path)" in src, fn.__name__
-        # the invalidation must precede the first artifact write
-        assert src.index("begin_build(path)") < src.index(".write.mode("), fn.__name__
+    def is_write(n):
+        if isinstance(n, ast.Attribute) and n.attr == "write":
+            return True  # DataFrame.write
+        return isinstance(n, ast.Call) and isinstance(n.func, ast.Name) and (
+            n.func.id in ("commit_build", "write_row") or n.func.id.startswith("_write_")
+        )
+
+    builders = {}
+    for info in pkgutil.iter_modules(ops.__path__):
+        mod = importlib.import_module(f"{ops.__name__}.{info.name}")
+        for name, fn in vars(mod).items():
+            if (name.startswith("build_") and inspect.isfunction(fn)
+                    and fn.__module__ == mod.__name__
+                    and "path" in inspect.signature(fn).parameters):
+                builders[name] = fn
+    assert len(builders) >= 14, sorted(builders)
+    for name, fn in builders.items():
+        tree = ast.parse(textwrap.dedent(inspect.getsource(fn)))
+        nodes = sorted(
+            (n for n in ast.walk(tree) if hasattr(n, "lineno")),
+            key=lambda n: (n.lineno, n.col_offset),
+        )
+        assert not any(
+            isinstance(n, ast.Attribute) and n.attr == "createDataFrame" for n in nodes
+        ), name
+        begins = [
+            i for i, n in enumerate(nodes)
+            if isinstance(n, ast.Call) and isinstance(n.func, ast.Name)
+            and n.func.id == "begin_build"
+            and [ast.unparse(x) for x in n.args] == ["spark", "path"]
+        ]
+        writes = [i for i, n in enumerate(nodes) if is_write(n)]
+        assert begins and writes, name
+        assert begins[0] < writes[0], name  # the invalidation precedes the first write
+        last = nodes[writes[-1]]
+        assert isinstance(last, ast.Call) and last.func.id == "commit_build", name
+        assert ast.unparse(last.args[1]) == "path", name
 
 
 def test_torn_rebuild_reads_not_ready(spark, tmp_path, monkeypatch):
@@ -1141,13 +1162,86 @@ def test_torn_rebuild_reads_not_ready(spark, tmp_path, monkeypatch):
     def boom(*a, **k):
         raise RuntimeError("injected crash before the params write")
 
-    monkeypatch.setattr(spark, "createDataFrame", boom)
+    monkeypatch.setattr(spark, "range", boom)  # the params marker's literal row
     with pytest.raises(RuntimeError):
         build_dedup_index(corpus, "doc_id", "text", path)
     monkeypatch.undo()
     assert not _index_ready(path)  # torn rebuild is visible, not silent
     build_dedup_index(corpus, "doc_id", "text", path)
     assert _index_ready(path)  # a completed rebuild restores readiness
+
+
+def test_store_markers_write_no_python_row(spark, tmp_path, monkeypatch):
+    """The MinHash store and the Bloom filter commit their params marker
+    with SparkSession.createDataFrame patched to raise: the marker row is
+    built from literals.  It is one part file, its written schema is the
+    store's declared DDL, and read_params returns the builder's values."""
+    import os
+
+    from pyspark.sql import SparkSession
+    from pyspark.sql.types import DataType
+
+    from time_sift_spark.operators.artifacts import read_params
+    from time_sift_spark.operators.dedup import _MHF_PARAMS, build_minhash_store
+    from time_sift_spark.operators.sketch import _BLOOM_PARAMS, build_bloom_filter
+
+    corpus = _fz_frame(spark, [(1, _fz_doc(1)), (2, _fz_doc(2))])
+
+    def python_row(*a, **k):
+        raise AssertionError("a builder wrote a Python row")
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", python_row)
+    mh, bloom = str(tmp_path / "mh"), str(tmp_path / "bloom")
+    build_minhash_store(corpus, "doc_id", "text", mh, num_perm=32, bands=16, shingle_k=2, seed=7)
+    build_bloom_filter(corpus, "text", bloom, m=4096, k=3)
+    monkeypatch.undo()
+    for path, ddl, want in (
+        (mh, _MHF_PARAMS, dict(id_col="doc_id", text_col="text", num_perm=32, bands=16,
+                               shingle_k=2, seed=7)),
+        (bloom, _BLOOM_PARAMS, dict(text_col="text", m=4096, k=3)),
+    ):
+        assert read_params(spark, path, ddl).asDict() == want
+        # read back WITHOUT a declared schema: the types as written
+        assert spark.read.parquet(f"{path}/params").schema == DataType.fromDDL(ddl)
+        parts = [f for f in os.listdir(f"{path}/params") if f.startswith("part-")]
+        assert len(parts) == 1, parts
+    # a marker write that died before its part file landed reads as an error
+    os.makedirs(tmp_path / "torn" / "params" / "_temporary")
+    with pytest.raises(FileNotFoundError, match="never completed"):
+        read_params(spark, str(tmp_path / "torn"), _BLOOM_PARAMS)
+
+
+def test_uri_rebuild_crash_removes_marker(spark, tmp_path, monkeypatch):
+    """begin_build deletes the marker through the path's Hadoop
+    FileSystem, so a rebuild into a ``file://`` URI that crashes in its
+    first write leaves no ``params`` behind: the torn store reads as not
+    ready (a local-path delete of the URI string misses the marker)."""
+    import os
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from time_sift_spark.operators.dedup import build_minhash_store, screen_new_docs_fuzzy
+    from time_sift_spark.queries import _index_ready
+
+    local = tmp_path / "mh_uri"
+    uri = local.as_uri()
+    assert uri.startswith("file://")
+    corpus = _fz_frame(spark, [(1, _fz_doc(1)), (2, _fz_doc(2))])
+    build_minhash_store(corpus, "doc_id", "text", uri)
+    assert _index_ready(str(local))
+
+    def crash(self, *a, **k):
+        raise RuntimeError("injected crash in the rebuild's first write")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        build_minhash_store(corpus, "doc_id", "text", uri)
+    monkeypatch.undo()
+    assert not os.path.exists(local / "params")
+    assert not _index_ready(str(local))
+    build_minhash_store(corpus, "doc_id", "text", uri)
+    assert _index_ready(str(local))
+    assert not screen_new_docs_fuzzy(spark, uri, corpus).toPandas().accepted.any()
 
 
 def test_embedding_centroid_drift_planted_shift(spark):

@@ -71,6 +71,13 @@ class ColumnNotFoundError(LagError):
     """
 
 
+def require_columns(df, cols) -> None:
+    """Raise :class:`ColumnNotFoundError` for the first of ``cols`` not in ``df``."""
+    for c in cols:
+        if c not in df.columns:
+            raise ColumnNotFoundError(f"column {c!r} not in {df.columns}")
+
+
 class InvalidMemoryLayoutError(LagError):
     """Local array input is not contiguous / cannot be interpreted.
 

@@ -26,9 +26,15 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame
 
-from ..errors import ColumnNotFoundError
+from ..errors import ColumnNotFoundError, require_columns
 from ..functions.text_fns import Dialect
-from .artifacts import begin_build
+from .artifacts import begin_build, commit_build, read_params
+
+# params (completeness marker) DDL of each store, for its builder and readers
+_DEDUP_INDEX_PARAMS = "id_col string, text_col string"
+_MHF_PARAMS = "id_col string, text_col string, num_perm int, bands int, shingle_k int, seed int"
+_PREFIX_INDEX_PARAMS = "num int, den int, shingle_k int, id_col string, text_col string"
+_CONTAINMENT_PARAMS = "id_col string, text_col string, shingle_k int"
 
 MERSENNE31 = 2_147_483_647  # 2^31 - 1
 
@@ -492,11 +498,9 @@ def build_dedup_index(df: DataFrame, id_col: str, text_col: str, path: str) -> N
     must not re-scan the 100 TB corpus": the corpus is hashed ONCE; each
     increment thereafter joins only the (increment × fingerprint-table)
     pair. Same contract as the BM25/ANN persisted artifacts."""
-    for c in (id_col, text_col):
-        if c not in df.columns:
-            raise ColumnNotFoundError(f"column {c!r} not in {df.columns}")
-    begin_build(path)
+    require_columns(df, (id_col, text_col))
     spark = df.sparkSession
+    begin_build(spark, path)
     view = "_ts_ddb_in"
     df.createOrReplaceTempView(view)
     hashes = spark.sql(
@@ -504,9 +508,7 @@ def build_dedup_index(df: DataFrame, id_col: str, text_col: str, path: str) -> N
         f"FROM {view} GROUP BY md5({text_col})"
     )
     hashes.repartition("text_hash").write.mode("overwrite").parquet(f"{path}/hashes")
-    spark.createDataFrame(
-        [(id_col, text_col)], "id_col string, text_col string"
-    ).write.mode("overwrite").parquet(f"{path}/params")
+    commit_build(spark, path, dict(id_col=id_col, text_col=text_col), _DEDUP_INDEX_PARAMS)
 
 
 def screen_new_docs(spark, path: str, new_df: DataFrame) -> DataFrame:
@@ -517,11 +519,9 @@ def screen_new_docs(spark, path: str, new_df: DataFrame) -> DataFrame:
     The corpus side never re-scans — the anti-join touches the stored
     hash table only; within-batch dedup is one partial-aggregated
     groupBy over the increment."""
-    p = spark.read.parquet(f"{path}/params").collect()[0]
+    p = read_params(spark, path, _DEDUP_INDEX_PARAMS)
     id_col, text_col = p["id_col"], p["text_col"]
-    for c in (id_col, text_col):
-        if c not in new_df.columns:
-            raise ColumnNotFoundError(f"column {c!r} not in {new_df.columns}")
+    require_columns(new_df, (id_col, text_col))
     from pyspark.sql import functions as F
 
     firsts = (
@@ -541,7 +541,7 @@ def append_dedup_index(spark, path: str, accepted: DataFrame) -> None:
     rebuild, the BM25 incremental-index contract). After the append, a
     re-screen of the same increment admits nothing — ingestion is
     idempotent (pinned in tests/test_dedup_similarity.py)."""
-    p = spark.read.parquet(f"{path}/params").collect()[0]
+    p = read_params(spark, path, _DEDUP_INDEX_PARAMS)
     accepted.selectExpr(
         "text_hash", f"{p['id_col']} AS kept_id"
     ).repartition("text_hash").write.mode("append").parquet(f"{path}/hashes")
@@ -1901,9 +1901,6 @@ def dedup_incremental_fuzzy_sql(
     """
 
 
-_MHF_PARAMS = "id_col string, text_col string, num_perm int, bands int, shingle_k int, seed int"
-
-
 def _write_minhash_store(spark, view: str, path: str, mode: str, p) -> None:
     """Write ``view``'s docs to ``{path}/sigs`` with the store params
     ``p`` in ONE statement: one aggregate signs each doc and collects its
@@ -1940,16 +1937,14 @@ def build_minhash_store(
     increment thereafter touches one scan of ``sigs``.  Stores in the
     earlier two-artifact layout (``tsets`` + ``bands``) cannot be read:
     rebuild them."""
-    for c in (id_col, text_col):
-        if c not in df.columns:
-            raise ColumnNotFoundError(f"column {c!r} not in {df.columns}")
-    begin_build(path)
+    require_columns(df, (id_col, text_col))
     spark = df.sparkSession
+    begin_build(spark, path)
     df.createOrReplaceTempView("_ts_mhf_build")
     p = dict(id_col=id_col, text_col=text_col, num_perm=num_perm, bands=bands,
              shingle_k=shingle_k, seed=seed)
     _write_minhash_store(spark, "_ts_mhf_build", path, "overwrite", p)
-    spark.createDataFrame([p], _MHF_PARAMS).write.mode("overwrite").parquet(f"{path}/params")
+    commit_build(spark, path, p, _MHF_PARAMS)
 
 
 def screen_new_docs_fuzzy(
@@ -1973,12 +1968,9 @@ def screen_new_docs_fuzzy(
     # and the final sql() must run on new_df's OWN session or the views
     # resolve against the wrong catalog (streaming_dedup_fuzzy_docs).
     spark = new_df.sparkSession
-    # A given schema skips a schema-inference job per read.
-    p = spark.read.schema(_MHF_PARAMS).parquet(f"{path}/params").collect()[0]
+    p = read_params(spark, path, _MHF_PARAMS)
     id_col, text_col = p["id_col"], p["text_col"]
-    for c in (id_col, text_col):
-        if c not in new_df.columns:
-            raise ColumnNotFoundError(f"column {c!r} not in {new_df.columns}")
+    require_columns(new_df, (id_col, text_col))
     nview = "_ts_mhf_new"
     new_df.createOrReplaceTempView(nview)
     spark.read.parquet(f"{path}/sigs").createOrReplaceTempView("_ts_mhf_sigs")
@@ -2018,11 +2010,9 @@ def append_minhash_store(spark, path: str, accepted_docs: DataFrame) -> None:
     increment afterwards admits nothing: each accepted doc now has its
     exact twin (Jaccard 1.0) in the store."""
     spark = accepted_docs.sparkSession  # foreachBatch clone safety, as above
-    p = spark.read.schema(_MHF_PARAMS).parquet(f"{path}/params").collect()[0]
+    p = read_params(spark, path, _MHF_PARAMS)
     id_col, text_col = p["id_col"], p["text_col"]
-    for c in (id_col, text_col):
-        if c not in accepted_docs.columns:
-            raise ColumnNotFoundError(f"column {c!r} not in {accepted_docs.columns}")
+    require_columns(accepted_docs, (id_col, text_col))
     seen = spark.read.parquet(f"{path}/sigs").select("did")
     accepted_docs.join(
         seen, accepted_docs[id_col] == seen["did"], "left_anti"
@@ -2243,9 +2233,7 @@ def build_prefix_index(
     """
     from ..functions.text_fns import SPARK as _S
 
-    for c in (id_col, text_col):
-        if c not in df.columns:
-            raise ColumnNotFoundError(f"column {c!r} not in {df.columns}")
+    require_columns(df, (id_col, text_col))
     num, den = int(threshold[0]), int(threshold[1])
     spark = df.sparkSession
     view = "_ts_ppb_in"
@@ -2256,7 +2244,7 @@ def build_prefix_index(
     # reuse the inline statement's own text up to the prefix relation
     # (shared rendering — the build cannot drift from the inline form)
     head = inline.split("_ppc AS (", 1)[0].rstrip().rstrip(",")
-    begin_build(path)
+    begin_build(spark, path)
     spark.sql(f"{head}\nSELECT did, h, n FROM _ppp").repartition("h").write.mode(
         "overwrite"
     ).parquet(f"{path}/prefix")
@@ -2264,10 +2252,8 @@ def build_prefix_index(
     spark.sql(
         f"{head}\nSELECT did, {tset} AS hs FROM _pph GROUP BY did"
     ).repartition("did").write.mode("overwrite").parquet(f"{path}/tsets")
-    spark.createDataFrame(
-        [(num, den, int(shingle_k), id_col, text_col)],
-        "num int, den int, shingle_k int, id_col string, text_col string",
-    ).write.mode("overwrite").parquet(f"{path}/params")
+    commit_build(spark, path, dict(num=num, den=den, shingle_k=shingle_k, id_col=id_col,
+                                   text_col=text_col), _PREFIX_INDEX_PARAMS)
 
 
 def query_prefix_index(
@@ -2283,7 +2269,7 @@ def query_prefix_index(
     — the stored prefixes are too short to guarantee recall there.
     Output ≡ :func:`prefix_jaccard_join_sql` at θ' (persisted ≡ inline,
     driver-proven through the registered query's inline oracle)."""
-    p = spark.read.parquet(f"{path}/params").collect()[0]
+    p = read_params(spark, path, _PREFIX_INDEX_PARAMS)
     num, den = int(p["num"]), int(p["den"])
     if threshold is None:
         qn, qd = num, den
@@ -2732,15 +2718,11 @@ def build_containment_index(
     """
     from ..functions.text_fns import SPARK as _S
 
-    for c in (id_col, text_col):
-        if c not in df.columns:
-            raise ColumnNotFoundError(f"column {c!r} not in {df.columns}")
+    require_columns(df, (id_col, text_col))
     spark = df.sparkSession
-    from .artifacts import begin_build
-
     view = "_ts_csb_in"
     df.createOrReplaceTempView(view)
-    begin_build(path)
+    begin_build(spark, path)
     hd = spark.sql(
         _cjs_hdist_select(_S, view, id_col, text_col, shingle_k)
     ).localCheckpoint(eager=False)
@@ -2752,10 +2734,8 @@ def build_containment_index(
     spark.sql(
         "SELECT h, CAST(COUNT(*) AS BIGINT) AS dfc FROM _ts_csb_hd GROUP BY h"
     ).write.mode("overwrite").parquet(f"{path}/df")
-    spark.createDataFrame(
-        [(id_col, text_col, shingle_k)],
-        "id_col string, text_col string, shingle_k int",
-    ).write.mode("overwrite").parquet(f"{path}/params")
+    commit_build(spark, path, dict(id_col=id_col, text_col=text_col, shingle_k=shingle_k),
+                 _CONTAINMENT_PARAMS)
 
 
 def screen_docs_containment(
@@ -2776,11 +2756,9 @@ def screen_docs_containment(
     :func:`containment_screen_oracle_sql` statement (driver-proven)."""
     from ..functions.text_fns import SPARK as _S
 
-    p = spark.read.parquet(f"{path}/params").collect()[0]
+    p = read_params(spark, path, _CONTAINMENT_PARAMS)
     id_col, text_col, shingle_k = p["id_col"], p["text_col"], p["shingle_k"]
-    for c in (id_col, text_col):
-        if c not in docs.columns:
-            raise ColumnNotFoundError(f"column {c!r} not in {docs.columns}")
+    require_columns(docs, (id_col, text_col))
     num, den = int(threshold[0]), int(threshold[1])
     view = "_ts_css_in"
     docs.createOrReplaceTempView(view)

@@ -40,10 +40,18 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from ..errors import ColumnNotFoundError
+from ..errors import ColumnNotFoundError, require_columns
 from ..functions.vector_fns import VectorDialect
 from ._num import dec_to_double
-from .artifacts import begin_build
+from .artifacts import begin_build, commit_build, read_params
+
+# params (completeness marker) DDL of each store, for its builder and readers
+_IVFPQ_PARAMS = (
+    "id_col string, vec_col string, num_cells int, cell_lloyd_iters int, "
+    "m int, sub_dim int, k_codes int, lloyd_iters int"
+)
+_PQ_PARAMS = "id_col string, vec_col string, m int, sub_dim int, k_codes int, lloyd_iters int"
+_SQ8_PARAMS = "id_col string, vec_col string"
 
 _VSPARK = VectorDialect("spark")
 _VIEW_SEQ = [0]
@@ -631,15 +639,13 @@ def build_ivfpq_index(
     bit (the registered query's oracle is the inline statement)."""
     from .similarity import lloyd_ctes
 
-    for c in (id_col, vec_col):
-        if c not in df.columns:
-            raise ColumnNotFoundError(f"column {c!r} not in {df.columns}")
+    require_columns(df, (id_col, vec_col))
     _check_pq_dim(df, vec_col, m, sub_dim)
     spark = df.sparkSession
     view = _next_view()
     df.createOrReplaceTempView(view)
     vd = _VSPARK
-    begin_build(path)
+    begin_build(spark, path)
     spark.sql(f"""
       SELECT vid, emb, {vd.norm("emb")} AS nv FROM (
         SELECT {id_col} AS vid, transform({vec_col}, x -> CAST(x AS DOUBLE)) AS emb
@@ -687,11 +693,10 @@ def build_ivfpq_index(
         FROM sub x JOIN {cbview} c ON c.s = x.s
       ) WHERE crank = 1
     """).repartition("s", "cid").write.mode("overwrite").parquet(f"{path}/codes")
-    spark.createDataFrame(
-        [(id_col, vec_col, num_cells, cell_lloyd_iters, m, sub_dim, k_codes, lloyd_iters)],
-        "id_col string, vec_col string, num_cells int, cell_lloyd_iters int, "
-        "m int, sub_dim int, k_codes int, lloyd_iters int",
-    ).write.mode("overwrite").parquet(f"{path}/params")
+    commit_build(spark, path, dict(
+        id_col=id_col, vec_col=vec_col, num_cells=num_cells, cell_lloyd_iters=cell_lloyd_iters,
+        m=m, sub_dim=sub_dim, k_codes=k_codes, lloyd_iters=lloyd_iters,
+    ), _IVFPQ_PARAMS)
 
 
 def query_ivfpq_index(
@@ -703,7 +708,7 @@ def query_ivfpq_index(
     probed cells' code rows, the (s, cid) distance-table join, the
     exact-decimal ADC collapse, and the exact re-rank — NO training,
     NO data-side encode anywhere in the plan (asserted in tests)."""
-    p = spark.read.parquet(f"{path}/params").collect()[0]
+    p = read_params(spark, path, _IVFPQ_PARAMS)
     m, sub_dim = p["m"], p["sub_dim"]
     vview, cview, aview, cbview, coview = (
         _next_view(), _next_view(), _next_view(), _next_view(), _next_view()
@@ -801,15 +806,13 @@ def build_pq_index(
     Stored values come from the identical exact-decimal expressions the
     inline statement evaluates, so serve ≡ inline bit-for-bit — the
     registered query's oracle is the inline SQL."""
-    for c in (id_col, vec_col):
-        if c not in df.columns:
-            raise ColumnNotFoundError(f"column {c!r} not in {df.columns}")
+    require_columns(df, (id_col, vec_col))
     _check_pq_dim(df, vec_col, m, sub_dim)
     spark = df.sparkSession
     view = _next_view()
     df.createOrReplaceTempView(view)
     vd = _VSPARK
-    begin_build(path)
+    begin_build(spark, path)
     spark.sql(f"""
       SELECT {id_col} AS vid, transform({vec_col}, x -> CAST(x AS DOUBLE)) AS emb
       FROM {view}
@@ -837,10 +840,8 @@ def build_pq_index(
       ) WHERE crank = 1
     """)
     codes.repartition("s", "cid").write.mode("overwrite").parquet(f"{path}/codes")
-    spark.createDataFrame(
-        [(id_col, vec_col, m, sub_dim, k_codes, lloyd_iters)],
-        "id_col string, vec_col string, m int, sub_dim int, k_codes int, lloyd_iters int",
-    ).write.mode("overwrite").parquet(f"{path}/params")
+    commit_build(spark, path, dict(id_col=id_col, vec_col=vec_col, m=m, sub_dim=sub_dim,
+                                   k_codes=k_codes, lloyd_iters=lloyd_iters), _PQ_PARAMS)
 
 
 def query_pq_index(
@@ -852,7 +853,7 @@ def query_pq_index(
     the (s, cid) equi-join against the compressed codes frame, the
     exact-decimal ADC collapse, and the exact re-rank of the top-C —
     no training, no data-side encode (asserted in tests)."""
-    p = spark.read.parquet(f"{path}/params").collect()[0]
+    p = read_params(spark, path, _PQ_PARAMS)
     m, sub_dim = p["m"], p["sub_dim"]
     vview, cbview, coview = _next_view(), _next_view(), _next_view()
     spark.read.parquet(f"{path}/vectors").createOrReplaceTempView(vview)
@@ -1112,14 +1113,12 @@ def build_sq8_index(df: DataFrame, id_col: str, vec_col: str, path: str) -> None
     evaluates, so serve ≡ inline bit-for-bit.  Appends are row-local
     (codes depend only on the frozen stats row), so append ≡ rebuild
     under frozen stats — the IVF frozen-centroid contract."""
-    for c in (id_col, vec_col):
-        if c not in df.columns:
-            raise ColumnNotFoundError(f"column {c!r} not in {df.columns}")
+    require_columns(df, (id_col, vec_col))
     spark = df.sparkSession
     vd = _VSPARK
     view = _next_view()
     df.createOrReplaceTempView(view)
-    begin_build(path)
+    begin_build(spark, path)
     spark.sql(f"""
       SELECT vec_id AS vid, emb, {vd.norm("emb")} AS nrm FROM (
         SELECT {id_col} AS vec_id,
@@ -1142,9 +1141,7 @@ def build_sq8_index(df: DataFrame, id_col: str, vec_col: str, path: str) -> None
       SELECT vid, {_sq8_quant(vd)} AS code
       FROM (SELECT vid, emb FROM {vview}) _sqv CROSS JOIN {sview}
     """).write.mode("overwrite").parquet(f"{path}/codes")
-    spark.createDataFrame(
-        [(id_col, vec_col)], "id_col string, vec_col string"
-    ).write.mode("overwrite").parquet(f"{path}/params")
+    commit_build(spark, path, dict(id_col=id_col, vec_col=vec_col), _SQ8_PARAMS)
 
 
 def query_sq8_index(
@@ -1154,7 +1151,7 @@ def query_sq8_index(
     code-frame scan + dequantized scoring + the |Q|·shortlist exact
     re-rank — no stats pass, no encode (``query_pred`` sees the stored
     vector columns vid/emb/nrm)."""
-    spark.read.parquet(f"{path}/params").collect()  # build-complete gate
+    read_params(spark, path, _SQ8_PARAMS)  # build-complete gate
     vview, sview, cview = _next_view(), _next_view(), _next_view()
     spark.read.parquet(f"{path}/vectors").createOrReplaceTempView(vview)
     spark.read.parquet(f"{path}/stats").createOrReplaceTempView(sview)

@@ -47,9 +47,14 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..errors import ColumnNotFoundError
+from ..errors import ColumnNotFoundError, require_columns
 from ..functions.text_fns import DUCK, SPARK, Dialect
-from .artifacts import begin_build
+from .artifacts import begin_build, commit_build, read_params, write_row
+
+# params (completeness marker) DDL of each store, for its builder and readers
+_BM25_PARAMS = "id_col string, text_col string"
+_BM25_STATS = "n_docs long, sum_dl long"  # the one-row corpus totals
+_PHRASE_PARAMS = "id_col string, text_col string"
 
 __all__ = [
     "bm25_topk",
@@ -250,9 +255,7 @@ def build_text_index(
     at cluster scale, a metastore table bucketed by term) and scores
     |matching postings| rows.  This is what an inverted index IS in
     columnar-lake terms."""
-    for c in (text_col, id_col):
-        if c not in docs.columns:
-            raise ColumnNotFoundError(f"column {c!r} not in DataFrame")
+    require_columns(docs, (text_col, id_col))
     base = docs.select(
         F.col(id_col), F.expr(SPARK.tokens(text_col)).alias("toks")
     ).select(id_col, "toks", F.size("toks").alias("dl"))
@@ -264,15 +267,13 @@ def build_text_index(
         .groupBy(id_col, "dl", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    begin_build(path)
+    spark = docs.sparkSession
+    begin_build(spark, path)
     postings.repartition("term").write.mode("overwrite").parquet(f"{path}/postings")
     base.agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
     ).write.mode("overwrite").parquet(f"{path}/stats")
-    spark = docs.sparkSession
-    spark.createDataFrame(
-        [(id_col, text_col)], "id_col string, text_col string"
-    ).write.mode("overwrite").parquet(f"{path}/params")
+    commit_build(spark, path, dict(id_col=id_col, text_col=text_col), _BM25_PARAMS)
 
 
 def query_text_index(
@@ -299,7 +300,7 @@ def query_text_index(
         raise ValueError("query_text_index needs at least one query term")
     if max_df_frac is not None and not (0.0 < max_df_frac <= 1.0):
         raise ValueError(f"max_df_frac must be in (0, 1], got {max_df_frac}")
-    p = spark.read.parquet(f"{path}/params").collect()[0]
+    p = read_params(spark, path, _BM25_PARAMS)
     id_col = p["id_col"]
     tf = spark.read.parquet(f"{path}/postings").where(F.col("term").isin(terms))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -347,11 +348,10 @@ def append_text_index(
     appends — re-appending an existing doc double-counts it, exactly as
     appending it to the corpus would.
     """
-    p = docs.sparkSession.read.parquet(f"{path}/params").collect()[0]
+    spark = docs.sparkSession
+    p = read_params(spark, path, _BM25_PARAMS)
     id_col, text_col = p["id_col"], p["text_col"]
-    for c in (text_col, id_col):
-        if c not in docs.columns:
-            raise ColumnNotFoundError(f"column {c!r} not in {docs.columns}")
+    require_columns(docs, (text_col, id_col))
     base = docs.select(
         F.col(id_col), F.expr(SPARK.tokens(text_col)).alias("toks")
     ).select(id_col, "toks", F.size("toks").alias("dl"))
@@ -363,15 +363,14 @@ def append_text_index(
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     postings.repartition("term").write.mode("append").parquet(f"{path}/postings")
-    spark = docs.sparkSession
-    old = spark.read.parquet(f"{path}/stats").collect()[0]
+    old = spark.read.schema(_BM25_STATS).parquet(f"{path}/stats").collect()[0]
     delta = base.agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
     ).collect()[0]
-    spark.createDataFrame(
-        [(old["n_docs"] + delta["n_docs"], (old["sum_dl"] or 0) + (delta["sum_dl"] or 0))],
-        "n_docs long, sum_dl long",
-    ).write.mode("overwrite").parquet(f"{path}/stats")
+    write_row(spark, f"{path}/stats", dict(
+        n_docs=old["n_docs"] + delta["n_docs"],
+        sum_dl=(old["sum_dl"] or 0) + (delta["sum_dl"] or 0),
+    ), _BM25_STATS)
 
 
 def keyword_extract_sql(
@@ -576,9 +575,7 @@ def build_phrase_index(
     phrase query then reads only its terms' row groups (min/max
     pruning on the term-clustered files) — the positional half of the
     inverted index build_text_index materializes for scoring."""
-    for c in (text_col, id_col):
-        if c not in docs.columns:
-            raise ColumnNotFoundError(f"column {c!r} not in DataFrame")
+    require_columns(docs, (text_col, id_col))
     # posexplode_outer + null-filter on the generate OUTPUT: plain
     # posexplode makes Catalyst infer a size(toks) > 0 constraint and
     # push it below the projection, re-running the tokenizer inside the
@@ -590,13 +587,12 @@ def build_phrase_index(
         .select(id_col, F.posexplode_outer("toks").alias("pos", "term"))
         .where(F.col("term").isNotNull())
     )
-    begin_build(path)
+    spark = docs.sparkSession
+    begin_build(spark, path)
     postings.repartition("term").write.mode("overwrite").parquet(
         f"{path}/postings_pos"
     )
-    docs.sparkSession.createDataFrame(
-        [(id_col, text_col)], "id_col string, text_col string"
-    ).write.mode("overwrite").parquet(f"{path}/params")
+    commit_build(spark, path, dict(id_col=id_col, text_col=text_col), _PHRASE_PARAMS)
 
 
 def query_phrase_index(
@@ -615,7 +611,7 @@ def query_phrase_index(
     if not terms:
         raise ValueError("query_phrase_index needs at least one term")
     m = len(terms)
-    p = spark.read.parquet(f"{path}/params").collect()[0]
+    p = read_params(spark, path, _PHRASE_PARAMS)
     id_col = p["id_col"]
     qrel = spark.createDataFrame(
         [(t, i) for i, t in enumerate(terms)], "qt string, off int"
@@ -650,11 +646,9 @@ def append_phrase_index(
     tests).  Caller owns id uniqueness across appends (re-appending a
     doc double-counts its matches, exactly as the corpus union would).
     """
-    p = docs.sparkSession.read.parquet(f"{path}/params").collect()[0]
+    p = read_params(docs.sparkSession, path, _PHRASE_PARAMS)
     id_col, text_col = p["id_col"], p["text_col"]
-    for c in (text_col, id_col):
-        if c not in docs.columns:
-            raise ColumnNotFoundError(f"column {c!r} not in {docs.columns}")
+    require_columns(docs, (text_col, id_col))
     postings = (
         docs.where(F.col(text_col).isNotNull())
         .select(F.col(id_col), F.expr(SPARK.tokens(text_col)).alias("toks"))

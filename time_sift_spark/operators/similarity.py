@@ -25,9 +25,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from ..errors import ColumnNotFoundError
+from ..errors import ColumnNotFoundError, require_columns
 from ..functions.vector_fns import VectorDialect, random_hyperplanes
-from .artifacts import begin_build
+from .artifacts import begin_build, commit_build, read_params
+
+# params (completeness marker) DDL of each store, for its builder and readers
+_LSH_PARAMS = "id_col string, vec_col string, num_planes int, num_tables int, seed int, dim int"
+_IVF_PARAMS = "id_col string, vec_col string, num_centroids int"
+_RIVF_PARAMS = (
+    "id_col string, vec_col string, num_centroids int, multi_assign int, lloyd_iters int"
+)
 
 _VSPARK = VectorDialect("spark")
 _VIEW_SEQ = [0]
@@ -1340,9 +1347,7 @@ def build_lsh_index(
     gets bucket-clustered files (at cluster scale you'd write
     ``bucketBy(bkey)`` into a metastore table and skip the query-time
     shuffle entirely)."""
-    for c in (id_col, vec_col):
-        if c not in df.columns:
-            raise ColumnNotFoundError(f"column {c!r} not in {df.columns}")
+    require_columns(df, (id_col, vec_col))
     if dim is None:
         from pyspark.sql import functions as F
 
@@ -1354,7 +1359,7 @@ def build_lsh_index(
     vectors = spark.sql(
         f"SELECT {id_col} AS vid, {vec_col} AS {vec_col}, {_VSPARK.norm(vec_col)} AS nrm FROM {view}"
     )
-    begin_build(path)
+    begin_build(spark, path)
     vectors.write.mode("overwrite").parquet(f"{path}/vectors")
     vview = _next_view()
     spark.read.parquet(f"{path}/vectors").createOrReplaceTempView(vview)
@@ -1362,10 +1367,8 @@ def build_lsh_index(
         _lsh_keys_select(_VSPARK, vec_col, vview, num_planes, num_tables, seed, dim)
     )
     buckets.repartition("bkey").write.mode("overwrite").parquet(f"{path}/buckets")
-    spark.createDataFrame(
-        [(id_col, vec_col, num_planes, num_tables, seed, dim)],
-        "id_col string, vec_col string, num_planes int, num_tables int, seed int, dim int",
-    ).write.mode("overwrite").parquet(f"{path}/params")
+    commit_build(spark, path, dict(id_col=id_col, vec_col=vec_col, num_planes=num_planes,
+                                   num_tables=num_tables, seed=seed, dim=dim), _LSH_PARAMS)
 
 
 def query_lsh_index(
@@ -1380,7 +1383,7 @@ def query_lsh_index(
     expands the query-side probes with 1-bit-flip neighbor buckets — a
     recall knob that needs NO rebuild: the stored single-bucket-per-table
     index serves exact and multiprobe queries alike."""
-    p = spark.read.parquet(f"{path}/params").collect()[0]
+    p = read_params(spark, path, _LSH_PARAMS)
     vview, bview = _next_view(), _next_view()
     spark.read.parquet(f"{path}/vectors").createOrReplaceTempView(vview)
     spark.read.parquet(f"{path}/buckets").createOrReplaceTempView(bview)
@@ -1454,11 +1457,9 @@ def append_lsh_index(spark, path: str, df: DataFrame) -> None:
     write; the 100 TB posture is unchanged (builds are one-time,
     appends pay the increment plus one pruned lookup column).
     """
-    p = spark.read.parquet(f"{path}/params").collect()[0]
+    p = read_params(spark, path, _LSH_PARAMS)
     id_col, vec_col = p["id_col"], p["vec_col"]
-    for c in (id_col, vec_col):
-        if c not in df.columns:
-            raise ColumnNotFoundError(f"column {c!r} not in {df.columns}")
+    require_columns(df, (id_col, vec_col))
     spark = df.sparkSession  # foreachBatch clone safety
     view = _next_view()
     df.createOrReplaceTempView(view)
@@ -1582,11 +1583,9 @@ def screen_new_vectors_lsh(
     embedding space).  Output ≡ :func:`lsh_screen_sql` (persisted ≡
     inline, driver-proven): ({id_col}, max_cosine, accepted)."""
     spark = new_df.sparkSession  # foreachBatch clone safety
-    p = spark.read.parquet(f"{path}/params").collect()[0]
+    p = read_params(spark, path, _LSH_PARAMS)
     id_col, vec_col = p["id_col"], p["vec_col"]
-    for c in (id_col, vec_col):
-        if c not in new_df.columns:
-            raise ColumnNotFoundError(f"column {c!r} not in {new_df.columns}")
+    require_columns(new_df, (id_col, vec_col))
     nview = _next_view()
     new_df.createOrReplaceTempView(nview)
     sv, sb = _next_view(), _next_view()
@@ -1651,14 +1650,12 @@ def build_ivf_index(
     repartitioned by cid, so each query's probe join reads
     bucket-clustered files (~nprobe/K of the data at cluster scale with
     partition pruning on a metastore table)."""
-    for c in (id_col, vec_col):
-        if c not in df.columns:
-            raise ColumnNotFoundError(f"column {c!r} not in {df.columns}")
+    require_columns(df, (id_col, vec_col))
     spark = df.sparkSession
     view = _next_view()
     df.createOrReplaceTempView(view)
     cos_vc = _VSPARK.cosine(f"v.{vec_col}", f"c.{vec_col}")
-    begin_build(path)
+    begin_build(spark, path)
     spark.sql(f"""
       SELECT {id_col} AS cid, {vec_col} FROM {view}
       ORDER BY md5(CAST({id_col} AS STRING)), {id_col}
@@ -1675,10 +1672,8 @@ def build_ivf_index(
       ) WHERE crank = 1
     """)
     assigned.repartition("cid").write.mode("overwrite").parquet(f"{path}/assigned")
-    spark.createDataFrame(
-        [(id_col, vec_col, num_centroids)],
-        "id_col string, vec_col string, num_centroids int",
-    ).write.mode("overwrite").parquet(f"{path}/params")
+    commit_build(spark, path, dict(id_col=id_col, vec_col=vec_col, num_centroids=num_centroids),
+                 _IVF_PARAMS)
 
 
 def query_ivf_index(
@@ -1690,7 +1685,7 @@ def query_ivf_index(
     build-time n×K assignment and the centroid sample are read, not
     recomputed (the executed plan has no TakeOrderedAndProject for the
     sample and no n×K assignment window — asserted in tests)."""
-    p = spark.read.parquet(f"{path}/params").collect()[0]
+    p = read_params(spark, path, _IVF_PARAMS)
     aview, cview = _next_view(), _next_view()
     spark.read.parquet(f"{path}/assigned").createOrReplaceTempView(aview)
     spark.read.parquet(f"{path}/centroids").createOrReplaceTempView(cview)
@@ -1742,11 +1737,9 @@ def append_ivf_index(spark, path: str, df: DataFrame) -> None:
 
     Idempotent via the same vid anti-join as :func:`append_lsh_index`.
     """
-    p = spark.read.parquet(f"{path}/params").collect()[0]
+    p = read_params(spark, path, _IVF_PARAMS)
     id_col, vec_col = p["id_col"], p["vec_col"]
-    for c in (id_col, vec_col):
-        if c not in df.columns:
-            raise ColumnNotFoundError(f"column {c!r} not in {df.columns}")
+    require_columns(df, (id_col, vec_col))
     spark = df.sparkSession  # foreachBatch clone safety
     view = _next_view()
     df.createOrReplaceTempView(view)
@@ -1798,14 +1791,12 @@ def build_refined_ivf_index(
     are IDENTICAL to inline — the equivalence the registered query's
     oracle pins every round.
     """
-    for c in (id_col, vec_col):
-        if c not in df.columns:
-            raise ColumnNotFoundError(f"column {c!r} not in {df.columns}")
+    require_columns(df, (id_col, vec_col))
     spark = df.sparkSession
     view = _next_view()
     df.createOrReplaceTempView(view)
     vd = _VSPARK
-    begin_build(path)
+    begin_build(spark, path)
     spark.sql(f"""
       SELECT vid, emb, {vd.norm("emb")} AS nv FROM (
         SELECT {id_col} AS vid, transform({vec_col}, x -> CAST(x AS DOUBLE)) AS emb
@@ -1834,10 +1825,10 @@ def build_refined_ivf_index(
       ) WHERE crank <= {multi_assign}
     """)
     assigned.repartition("cid").write.mode("overwrite").parquet(f"{path}/assigned")
-    spark.createDataFrame(
-        [(id_col, vec_col, num_centroids, multi_assign, lloyd_iters)],
-        "id_col string, vec_col string, num_centroids int, multi_assign int, lloyd_iters int",
-    ).write.mode("overwrite").parquet(f"{path}/params")
+    commit_build(spark, path, dict(
+        id_col=id_col, vec_col=vec_col, num_centroids=num_centroids,
+        multi_assign=multi_assign, lloyd_iters=lloyd_iters,
+    ), _RIVF_PARAMS)
 
 
 def query_refined_ivf_index(

@@ -30,8 +30,12 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..errors import ColumnNotFoundError
+from ..errors import ColumnNotFoundError, require_columns
 from ..functions.text_fns import SPARK, Dialect
+from .artifacts import begin_build, commit_build, read_params
+
+# params (completeness marker) DDL of each store, for its builder and readers
+_BLOOM_PARAMS = "text_col string, m int, k int"
 
 __all__ = [
     "linear_count_distinct",
@@ -704,20 +708,15 @@ def build_bloom_filter(
     completeness contract; begin_build first so a rebuild crash reads
     as not-ready).  Bits are row-independent: folding an increment in
     is a parquet append of its positions (append ≡ rebuild)."""
-    from .artifacts import begin_build
-
-    if text_col not in df.columns:
-        raise ColumnNotFoundError(f"column {text_col!r} not in {df.columns}")
-    begin_build(path)
+    require_columns(df, (text_col,))
     spark = df.sparkSession
+    begin_build(spark, path)
     view = "_ts_bloom_build"
     df.createOrReplaceTempView(view)
     spark.sql(bloom_bits_sql(SPARK, view, text_col, m=m, k=k)).write.mode(
         "overwrite"
     ).parquet(f"{path}/bits")
-    spark.createDataFrame(
-        [(text_col, m, k)], "text_col string, m int, k int"
-    ).write.mode("overwrite").parquet(f"{path}/params")
+    commit_build(spark, path, dict(text_col=text_col, m=m, k=k), _BLOOM_PARAMS)
 
 
 def bloom_screen_persisted(spark, path: str, new_df: DataFrame, id_col: str) -> DataFrame:
@@ -726,11 +725,9 @@ def bloom_screen_persisted(spark, path: str, new_df: DataFrame, id_col: str) -> 
     (broadcastable) and the increment.  Output ≡ the inline screen with
     ``with_truth=False`` (persisted ≡ inline, driver-proven)."""
     spark = new_df.sparkSession  # foreachBatch clone safety
-    p = spark.read.parquet(f"{path}/params").collect()[0]
+    p = read_params(spark, path, _BLOOM_PARAMS)
     text_col = p["text_col"]
-    for c in (id_col, text_col):
-        if c not in new_df.columns:
-            raise ColumnNotFoundError(f"column {c!r} not in {new_df.columns}")
+    require_columns(new_df, (id_col, text_col))
     new_df.createOrReplaceTempView("_ts_bloom_new")
     spark.read.parquet(f"{path}/bits").createOrReplaceTempView("_ts_bloom_bits")
     tail = _bloom_screen_tail(
@@ -982,12 +979,9 @@ def append_bloom_filter(spark, path: str, accepted_docs: DataFrame) -> None:
     same increment reports every appended doc possibly_seen
     (idempotent ingestion, pinned in tests)."""
     spark = accepted_docs.sparkSession  # foreachBatch clone safety
-    p = spark.read.parquet(f"{path}/params").collect()[0]
+    p = read_params(spark, path, _BLOOM_PARAMS)
     text_col = p["text_col"]
-    if text_col not in accepted_docs.columns:
-        raise ColumnNotFoundError(
-            f"column {text_col!r} not in {accepted_docs.columns}"
-        )
+    require_columns(accepted_docs, (text_col,))
     view = "_ts_bloom_append"
     accepted_docs.createOrReplaceTempView(view)
     spark.sql(

@@ -18,7 +18,10 @@ from pyspark.sql import functions as F
 
 from ..errors import ColumnNotFoundError
 from ..functions.text_fns import SPARK
-from .artifacts import begin_build
+from .artifacts import begin_build, commit_build, read_params
+
+# params (completeness marker) DDL of each store, for its builder and readers
+_QC_PARAMS = "id_col string, text_col string, alpha double, n_buckets int, round_to int"
 
 
 def _check(df: DataFrame, cols: Sequence[str]) -> None:
@@ -720,17 +723,15 @@ def build_quality_model(
     SELECT fkey, SUM(is_pos) AS cpos, COUNT(*) AS ctot
     FROM feats GROUP BY fkey
     """)
-    begin_build(path)
+    begin_build(spark, path)
     weights.write.mode("overwrite").parquet(f"{path}/weights")
     wview = "_ts_qcb_w"
     spark.read.parquet(f"{path}/weights").createOrReplaceTempView(wview)
     spark.sql(
         f"SELECT SUM(cpos) AS tpos, SUM(ctot) AS ttot FROM {wview}"
     ).write.mode("overwrite").parquet(f"{path}/prior")
-    spark.createDataFrame(
-        [(id_col, text_col, float(alpha), int(n_buckets), int(round_to))],
-        "id_col string, text_col string, alpha double, n_buckets int, round_to int",
-    ).write.mode("overwrite").parquet(f"{path}/params")
+    commit_build(spark, path, dict(id_col=id_col, text_col=text_col, alpha=alpha,
+                                   n_buckets=n_buckets, round_to=round_to), _QC_PARAMS)
 
 
 def score_quality_model(spark, path: str, df: DataFrame) -> DataFrame:
@@ -740,7 +741,7 @@ def score_quality_model(spark, path: str, df: DataFrame) -> DataFrame:
     guarantee) arrives as a broadcast equi-join, and the prior is a
     one-row cross join. No training subtree in the plan: no is_t
     filter, no weight aggregation — those were paid at build time."""
-    p = spark.read.parquet(f"{path}/params").collect()[0]
+    p = read_params(spark, path, _QC_PARAMS)
     id_col, text_col = p["id_col"], p["text_col"]
     _check(df, [text_col, id_col])
     view, wview, pview = "_ts_qcs_in", "_ts_qcs_w", "_ts_qcs_p"

@@ -2754,9 +2754,10 @@ def _index_dir(kind: str, sf_dir: str, params: str = "", *, table: str) -> str:
 
 
 def _index_ready(path: str) -> bool:
-    """Both index builders write ``params`` last, so its _SUCCESS marker
-    implies every earlier table landed; a build that died mid-write lacks
-    it and is redone rather than served partial."""
+    """Every persisted-index builder writes ``params`` last
+    (``operators/artifacts.py``: begin_build → artifacts → commit_build),
+    so its _SUCCESS marker implies every earlier table landed; a build
+    that died mid-write lacks it and is redone rather than served partial."""
     import os
 
     return os.path.exists(os.path.join(path, "params", "_SUCCESS"))

@@ -20,7 +20,7 @@ Semantics & limits:
 * A key carries O(max_lag) values, but keys are never evicted
   (``NoTimeout``): state grows with the number of distinct keys ever
   seen, and every micro-batch re-serializes the whole state row of each
-  bucket it touches.  Evicting idle keys is ROADMAP item 4.
+  bucket it touches.  Evicting idle keys is ROADMAP item 3.
 
 The driver-facing query runs a file stream through a memory sink
 synchronously; when all data arrives ordered, the result is
