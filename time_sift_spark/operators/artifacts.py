@@ -20,17 +20,23 @@ readers make three calls:
 * ``read_params`` reads the marker with its declared schema, so a serve
   call runs no schema-inference job.
 
+Every artifact table is read with ``read_artifact``, whose schema comes
+from one parquet footer on the driver (``sources.catalog.read_parquet``):
+registering a store's views runs no Spark job either.
+
 Each store declares its params DDL once, as a module constant that its
 builder and its readers share.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Row, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType
 
-__all__ = ["begin_build", "commit_build", "read_params", "write_row"]
+from ..sources.catalog import read_parquet
+
+__all__ = ["begin_build", "commit_build", "read_artifact", "read_params", "write_row"]
 
 
 def begin_build(spark: SparkSession, path: str) -> None:
@@ -61,3 +67,8 @@ def read_params(spark: SparkSession, path: str, schema: str) -> Row:
     if not rows:
         raise FileNotFoundError(f"{path}/params holds no row: the build never completed")
     return rows[0]
+
+
+def read_artifact(spark: SparkSession, path: str, name: str) -> DataFrame:
+    """The artifact table ``{path}/{name}`` of a store; no Spark job runs."""
+    return read_parquet(spark, f"{path}/{name}")

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 
 from ..errors import ColumnNotFoundError, require_columns
 from ..functions.text_fns import Dialect
-from .artifacts import begin_build, commit_build, read_params
+from .artifacts import begin_build, commit_build, read_artifact, read_params
 
 # params (completeness marker) DDL of each store, for its builder and readers
 _DEDUP_INDEX_PARAMS = "id_col string, text_col string"
@@ -531,7 +531,7 @@ def screen_new_docs(spark, path: str, new_df: DataFrame) -> DataFrame:
         .groupBy("text_hash")
         .agg(F.min("_nid").alias(id_col))
     )
-    corpus = spark.read.parquet(f"{path}/hashes").select("text_hash")
+    corpus = read_artifact(spark, path, "hashes").select("text_hash")
     return firsts.join(corpus, "text_hash", "left_anti").select(id_col, "text_hash")
 
 
@@ -1973,7 +1973,7 @@ def screen_new_docs_fuzzy(
     require_columns(new_df, (id_col, text_col))
     nview = "_ts_mhf_new"
     new_df.createOrReplaceTempView(nview)
-    spark.read.parquet(f"{path}/sigs").createOrReplaceTempView("_ts_mhf_sigs")
+    read_artifact(spark, path, "sigs").createOrReplaceTempView("_ts_mhf_sigs")
     tset, inter, setsize, jaccard = _verify_exprs(_S)
     sigw = _minhash_sigw_select(_S, p["num_perm"], p["seed"], extra=f", {tset} AS hs")
     pair_cols = f"{inter} AS n_inter, {setsize}(a.hs) + {setsize}(b.hs) AS n_sum"
@@ -2013,7 +2013,7 @@ def append_minhash_store(spark, path: str, accepted_docs: DataFrame) -> None:
     p = read_params(spark, path, _MHF_PARAMS)
     id_col, text_col = p["id_col"], p["text_col"]
     require_columns(accepted_docs, (id_col, text_col))
-    seen = spark.read.parquet(f"{path}/sigs").select("did")
+    seen = read_artifact(spark, path, "sigs").select("did")
     accepted_docs.join(
         seen, accepted_docs[id_col] == seen["did"], "left_anti"
     ).createOrReplaceTempView("_ts_mhf_append")
@@ -2285,8 +2285,8 @@ def query_prefix_index(
 
     _, inter, setsize, _ = _ppj_exprs(_S)
     pv, tv = "_ts_ppq_prefix", "_ts_ppq_tsets"
-    spark.read.parquet(f"{path}/prefix").createOrReplaceTempView(pv)
-    spark.read.parquet(f"{path}/tsets").createOrReplaceTempView(tv)
+    read_artifact(spark, path, "prefix").createOrReplaceTempView(pv)
+    read_artifact(spark, path, "tsets").createOrReplaceTempView(tv)
     jaccard = "(CAST(n_inter AS DOUBLE) / CAST(n_sum - n_inter AS DOUBLE))"
     # Candidates are a few MB of id pairs that AQE coalesces to 1-2
     # post-GROUP-BY partitions, but each pays an array_intersect over
@@ -2762,8 +2762,8 @@ def screen_docs_containment(
     num, den = int(threshold[0]), int(threshold[1])
     view = "_ts_css_in"
     docs.createOrReplaceTempView(view)
-    spark.read.parquet(f"{path}/postings").createOrReplaceTempView("_ts_css_post")
-    spark.read.parquet(f"{path}/df").createOrReplaceTempView("_ts_css_df")
+    read_artifact(spark, path, "postings").createOrReplaceTempView("_ts_css_post")
+    read_artifact(spark, path, "df").createOrReplaceTempView("_ts_css_df")
     hd = spark.sql(
         _cjs_hdist_select(_S, view, id_col, text_col, shingle_k)
     ).localCheckpoint(eager=False)

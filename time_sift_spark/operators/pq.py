@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame
 from ..errors import ColumnNotFoundError, require_columns
 from ..functions.vector_fns import VectorDialect
 from ._num import dec_to_double
-from .artifacts import begin_build, commit_build, read_params
+from .artifacts import begin_build, commit_build, read_artifact, read_params
 
 # params (completeness marker) DDL of each store, for its builder and readers
 _IVFPQ_PARAMS = (
@@ -653,7 +653,7 @@ def build_ivfpq_index(
       )
     """).write.mode("overwrite").parquet(f"{path}/vectors")
     vview = _next_view()
-    spark.read.parquet(f"{path}/vectors").createOrReplaceTempView(vview)
+    read_artifact(spark, path, "vectors").createOrReplaceTempView(vview)
     coarse_ctes, coarse_final = lloyd_ctes(
         vd, vec_col=vec_col, num_centroids=num_cells, iters=cell_lloyd_iters
     )
@@ -663,7 +663,7 @@ def build_ivfpq_index(
       SELECT cid, cent, nc FROM {coarse_final}
     """).write.mode("overwrite").parquet(f"{path}/centroids")
     cview = _next_view()
-    spark.read.parquet(f"{path}/centroids").createOrReplaceTempView(cview)
+    read_artifact(spark, path, "centroids").createOrReplaceTempView(cview)
     cos_vc = f"({vd.dot('x.emb', 'c.cent')} / greatest(x.nv * c.nc, 1e-300))"
     spark.sql(f"""
       SELECT vid, cid FROM (
@@ -682,7 +682,7 @@ def build_ivfpq_index(
       SELECT s, cid, cent FROM {pq_final}
     """).write.mode("overwrite").parquet(f"{path}/codebook")
     cbview = _next_view()
-    spark.read.parquet(f"{path}/codebook").createOrReplaceTempView(cbview)
+    read_artifact(spark, path, "codebook").createOrReplaceTempView(cbview)
     spark.sql(f"""
       WITH v AS (SELECT vid, emb FROM {vview}),
       sub AS ({_subspace_cte(vd, m, sub_dim)})
@@ -713,11 +713,11 @@ def query_ivfpq_index(
     vview, cview, aview, cbview, coview = (
         _next_view(), _next_view(), _next_view(), _next_view(), _next_view()
     )
-    spark.read.parquet(f"{path}/vectors").createOrReplaceTempView(vview)
-    spark.read.parquet(f"{path}/centroids").createOrReplaceTempView(cview)
-    spark.read.parquet(f"{path}/assigned").createOrReplaceTempView(aview)
-    spark.read.parquet(f"{path}/codebook").createOrReplaceTempView(cbview)
-    spark.read.parquet(f"{path}/codes").createOrReplaceTempView(coview)
+    read_artifact(spark, path, "vectors").createOrReplaceTempView(vview)
+    read_artifact(spark, path, "centroids").createOrReplaceTempView(cview)
+    read_artifact(spark, path, "assigned").createOrReplaceTempView(aview)
+    read_artifact(spark, path, "codebook").createOrReplaceTempView(cbview)
+    read_artifact(spark, path, "codes").createOrReplaceTempView(coview)
     vd = _VSPARK
     cos_vc = f"({vd.dot('x.emb', 'c.cent')} / greatest(x.nv * c.nc, 1e-300))"
     sq_dt = vd.sqdist_fixed("qs.svec", "c.cent", sub_dim)
@@ -818,7 +818,7 @@ def build_pq_index(
       FROM {view}
     """).write.mode("overwrite").parquet(f"{path}/vectors")
     vview = _next_view()
-    spark.read.parquet(f"{path}/vectors").createOrReplaceTempView(vview)
+    read_artifact(spark, path, "vectors").createOrReplaceTempView(vview)
     ctes, cfin = pq_lloyd_ctes(
         vd, m=m, sub_dim=sub_dim, k_codes=k_codes, iters=lloyd_iters
     )
@@ -828,7 +828,7 @@ def build_pq_index(
       SELECT s, cid, cent FROM {cfin}
     """).write.mode("overwrite").parquet(f"{path}/codebook")
     cbview = _next_view()
-    spark.read.parquet(f"{path}/codebook").createOrReplaceTempView(cbview)
+    read_artifact(spark, path, "codebook").createOrReplaceTempView(cbview)
     codes = spark.sql(f"""
       WITH v AS (SELECT vid, emb FROM {vview}),
       sub AS ({_subspace_cte(vd, m, sub_dim)})
@@ -856,9 +856,9 @@ def query_pq_index(
     p = read_params(spark, path, _PQ_PARAMS)
     m, sub_dim = p["m"], p["sub_dim"]
     vview, cbview, coview = _next_view(), _next_view(), _next_view()
-    spark.read.parquet(f"{path}/vectors").createOrReplaceTempView(vview)
-    spark.read.parquet(f"{path}/codebook").createOrReplaceTempView(cbview)
-    spark.read.parquet(f"{path}/codes").createOrReplaceTempView(coview)
+    read_artifact(spark, path, "vectors").createOrReplaceTempView(vview)
+    read_artifact(spark, path, "codebook").createOrReplaceTempView(cbview)
+    read_artifact(spark, path, "codes").createOrReplaceTempView(coview)
     vd = _VSPARK
     sq_dt = vd.sqdist_fixed("qs.svec", "c.cent", sub_dim)
     sq_exact = vd.sqdist("q.emb", "cand.emb")
@@ -1127,7 +1127,7 @@ def build_sq8_index(df: DataFrame, id_col: str, vec_col: str, path: str) -> None
       ) _sqb
     """).write.mode("overwrite").parquet(f"{path}/vectors")
     vview = _next_view()
-    spark.read.parquet(f"{path}/vectors").createOrReplaceTempView(vview)
+    read_artifact(spark, path, "vectors").createOrReplaceTempView(vview)
     spark.sql(f"""
       WITH _sqx AS ({_sq8_explode(vd, vview)}),
       _sqt AS (SELECT j, MIN(x) AS lo, MAX(x) AS hi FROM _sqx GROUP BY j)
@@ -1136,7 +1136,7 @@ def build_sq8_index(df: DataFrame, id_col: str, vec_col: str, path: str) -> None
       FROM (SELECT j, lo, greatest(hi - lo, 1e-300) AS rng FROM _sqt) _sq_r
     """).write.mode("overwrite").parquet(f"{path}/stats")
     sview = _next_view()
-    spark.read.parquet(f"{path}/stats").createOrReplaceTempView(sview)
+    read_artifact(spark, path, "stats").createOrReplaceTempView(sview)
     spark.sql(f"""
       SELECT vid, {_sq8_quant(vd)} AS code
       FROM (SELECT vid, emb FROM {vview}) _sqv CROSS JOIN {sview}
@@ -1153,9 +1153,9 @@ def query_sq8_index(
     vector columns vid/emb/nrm)."""
     read_params(spark, path, _SQ8_PARAMS)  # build-complete gate
     vview, sview, cview = _next_view(), _next_view(), _next_view()
-    spark.read.parquet(f"{path}/vectors").createOrReplaceTempView(vview)
-    spark.read.parquet(f"{path}/stats").createOrReplaceTempView(sview)
-    spark.read.parquet(f"{path}/codes").createOrReplaceTempView(cview)
+    read_artifact(spark, path, "vectors").createOrReplaceTempView(vview)
+    read_artifact(spark, path, "stats").createOrReplaceTempView(sview)
+    read_artifact(spark, path, "codes").createOrReplaceTempView(cview)
     vd = _VSPARK
     return spark.sql(f"""
     WITH _sqv AS (SELECT vid, emb, nrm FROM {vview}),

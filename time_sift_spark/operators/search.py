@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 
 from ..errors import ColumnNotFoundError, require_columns
 from ..functions.text_fns import DUCK, SPARK, Dialect
-from .artifacts import begin_build, commit_build, read_params, write_row
+from .artifacts import begin_build, commit_build, read_artifact, read_params, write_row
 
 # params (completeness marker) DDL of each store, for its builder and readers
 _BM25_PARAMS = "id_col string, text_col string"
@@ -302,9 +302,9 @@ def query_text_index(
         raise ValueError(f"max_df_frac must be in (0, 1], got {max_df_frac}")
     p = read_params(spark, path, _BM25_PARAMS)
     id_col = p["id_col"]
-    tf = spark.read.parquet(f"{path}/postings").where(F.col("term").isin(terms))
+    tf = read_artifact(spark, path, "postings").where(F.col("term").isin(terms))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    stats = spark.read.parquet(f"{path}/stats")
+    stats = read_artifact(spark, path, "stats")
     if max_df_frac is not None:
         dfreq = (
             dfreq.crossJoin(F.broadcast(stats.select("n_docs")))
@@ -617,7 +617,7 @@ def query_phrase_index(
         [(t, i) for i, t in enumerate(terms)], "qt string, off int"
     )
     postings = (
-        spark.read.parquet(f"{path}/postings_pos")
+        read_artifact(spark, path, "postings_pos")
         .where(F.col("term").isin(sorted(set(terms))))
     )
     anchors = (

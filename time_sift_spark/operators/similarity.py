@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 
 from ..errors import ColumnNotFoundError, require_columns
 from ..functions.vector_fns import VectorDialect, random_hyperplanes
-from .artifacts import begin_build, commit_build, read_params
+from .artifacts import begin_build, commit_build, read_artifact, read_params
 
 # params (completeness marker) DDL of each store, for its builder and readers
 _LSH_PARAMS = "id_col string, vec_col string, num_planes int, num_tables int, seed int, dim int"
@@ -1362,7 +1362,7 @@ def build_lsh_index(
     begin_build(spark, path)
     vectors.write.mode("overwrite").parquet(f"{path}/vectors")
     vview = _next_view()
-    spark.read.parquet(f"{path}/vectors").createOrReplaceTempView(vview)
+    read_artifact(spark, path, "vectors").createOrReplaceTempView(vview)
     buckets = spark.sql(
         _lsh_keys_select(_VSPARK, vec_col, vview, num_planes, num_tables, seed, dim)
     )
@@ -1385,8 +1385,8 @@ def query_lsh_index(
     index serves exact and multiprobe queries alike."""
     p = read_params(spark, path, _LSH_PARAMS)
     vview, bview = _next_view(), _next_view()
-    spark.read.parquet(f"{path}/vectors").createOrReplaceTempView(vview)
-    spark.read.parquet(f"{path}/buckets").createOrReplaceTempView(bview)
+    read_artifact(spark, path, "vectors").createOrReplaceTempView(vview)
+    read_artifact(spark, path, "buckets").createOrReplaceTempView(bview)
     vec_col = p["vec_col"]
     dot = _VSPARK.dot(f"q.{vec_col}", f"c.{vec_col}")
     cos = f"({dot} / greatest(q.nrm * c.nrm, 1e-300))"
@@ -1463,7 +1463,7 @@ def append_lsh_index(spark, path: str, df: DataFrame) -> None:
     spark = df.sparkSession  # foreachBatch clone safety
     view = _next_view()
     df.createOrReplaceTempView(view)
-    seen = spark.read.parquet(f"{path}/vectors").select("vid")
+    seen = read_artifact(spark, path, "vectors").select("vid")
     fresh = spark.sql(
         f"SELECT {id_col} AS vid, {vec_col} AS {vec_col}, "
         f"{_VSPARK.norm(vec_col)} AS nrm FROM {view}"
@@ -1589,8 +1589,8 @@ def screen_new_vectors_lsh(
     nview = _next_view()
     new_df.createOrReplaceTempView(nview)
     sv, sb = _next_view(), _next_view()
-    spark.read.parquet(f"{path}/vectors").createOrReplaceTempView(sv)
-    spark.read.parquet(f"{path}/buckets").createOrReplaceTempView(sb)
+    read_artifact(spark, path, "vectors").createOrReplaceTempView(sv)
+    read_artifact(spark, path, "buckets").createOrReplaceTempView(sb)
     ntagged = (
         f"(SELECT concat('n:', CAST({id_col} AS STRING)) AS vid, "
         f"{vec_col} AS {vec_col}, {_VSPARK.norm(vec_col)} AS nrm FROM {nview})"
@@ -1662,7 +1662,7 @@ def build_ivf_index(
       LIMIT {num_centroids}
     """).write.mode("overwrite").parquet(f"{path}/centroids")
     cview = _next_view()
-    spark.read.parquet(f"{path}/centroids").createOrReplaceTempView(cview)
+    read_artifact(spark, path, "centroids").createOrReplaceTempView(cview)
     assigned = spark.sql(f"""
       SELECT vid, {vec_col}, cid FROM (
         SELECT v.{id_col} AS vid, v.{vec_col} AS {vec_col}, c.cid,
@@ -1687,8 +1687,8 @@ def query_ivf_index(
     sample and no n×K assignment window — asserted in tests)."""
     p = read_params(spark, path, _IVF_PARAMS)
     aview, cview = _next_view(), _next_view()
-    spark.read.parquet(f"{path}/assigned").createOrReplaceTempView(aview)
-    spark.read.parquet(f"{path}/centroids").createOrReplaceTempView(cview)
+    read_artifact(spark, path, "assigned").createOrReplaceTempView(aview)
+    read_artifact(spark, path, "centroids").createOrReplaceTempView(cview)
     vec_col = p["vec_col"]
     cos_vc = _VSPARK.cosine(f"v.{vec_col}", f"c.{vec_col}")
     cos_qc = _VSPARK.cosine(f"q.{vec_col}", f"cand.{vec_col}")
@@ -1744,8 +1744,8 @@ def append_ivf_index(spark, path: str, df: DataFrame) -> None:
     view = _next_view()
     df.createOrReplaceTempView(view)
     cview = _next_view()
-    spark.read.parquet(f"{path}/centroids").createOrReplaceTempView(cview)
-    seen = spark.read.parquet(f"{path}/assigned").select("vid")
+    read_artifact(spark, path, "centroids").createOrReplaceTempView(cview)
+    seen = read_artifact(spark, path, "assigned").select("vid")
     cos_vc = _VSPARK.cosine(f"v.{vec_col}", f"c.{vec_col}")
     assigned = spark.sql(f"""
       SELECT vid, {vec_col}, cid FROM (
@@ -1804,7 +1804,7 @@ def build_refined_ivf_index(
       )
     """).write.mode("overwrite").parquet(f"{path}/vectors")
     vview = _next_view()
-    spark.read.parquet(f"{path}/vectors").createOrReplaceTempView(vview)
+    read_artifact(spark, path, "vectors").createOrReplaceTempView(vview)
     ctes, cfinal = lloyd_ctes(
         vd, vec_col=vec_col, num_centroids=num_centroids, iters=lloyd_iters
     )
@@ -1814,7 +1814,7 @@ def build_refined_ivf_index(
       SELECT cid, cent, nc FROM {cfinal}
     """).write.mode("overwrite").parquet(f"{path}/centroids")
     cview = _next_view()
-    spark.read.parquet(f"{path}/centroids").createOrReplaceTempView(cview)
+    read_artifact(spark, path, "centroids").createOrReplaceTempView(cview)
     cos_vc = f"({vd.dot('x.emb', 'c.cent')} / greatest(x.nv * c.nc, 1e-300))"
     assigned = spark.sql(f"""
       SELECT vid, cid FROM (
@@ -1841,9 +1841,9 @@ def query_refined_ivf_index(
     nothing else (asserted in tests).  Values are identical to the
     inline form: same factored cosine over the same persisted norms."""
     vview, cview, aview = _next_view(), _next_view(), _next_view()
-    spark.read.parquet(f"{path}/vectors").createOrReplaceTempView(vview)
-    spark.read.parquet(f"{path}/centroids").createOrReplaceTempView(cview)
-    spark.read.parquet(f"{path}/assigned").createOrReplaceTempView(aview)
+    read_artifact(spark, path, "vectors").createOrReplaceTempView(vview)
+    read_artifact(spark, path, "centroids").createOrReplaceTempView(cview)
+    read_artifact(spark, path, "assigned").createOrReplaceTempView(aview)
     vd = _VSPARK
     cos_vc = f"({vd.dot('x.emb', 'c.cent')} / greatest(x.nv * c.nc, 1e-300))"
     cos_qc = f"({vd.dot('q.emb', 'c.emb')} / greatest(q.nv * c.nv, 1e-300))"
@@ -1888,8 +1888,8 @@ def semantic_dedup_from_index(
     norms, so serve ≡ inline to the bit (the registered query's oracle
     is the inline SQL).  Returns ({id_col}, kept BOOLEAN, dup_of)."""
     vview, aview = _next_view(), _next_view()
-    spark.read.parquet(f"{path}/vectors").createOrReplaceTempView(vview)
-    spark.read.parquet(f"{path}/assigned").createOrReplaceTempView(aview)
+    read_artifact(spark, path, "vectors").createOrReplaceTempView(vview)
+    read_artifact(spark, path, "assigned").createOrReplaceTempView(aview)
     vd = _VSPARK
     cos_ab = f"({vd.dot('a.emb', 'b.emb')} / greatest(a.nv * b.nv, 1e-300))"
     return spark.sql(f"""

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from ..errors import ColumnNotFoundError, require_columns
 from ..functions.text_fns import SPARK, Dialect
-from .artifacts import begin_build, commit_build, read_params
+from .artifacts import begin_build, commit_build, read_artifact, read_params
 
 # params (completeness marker) DDL of each store, for its builder and readers
 _BLOOM_PARAMS = "text_col string, m int, k int"
@@ -729,7 +729,7 @@ def bloom_screen_persisted(spark, path: str, new_df: DataFrame, id_col: str) -> 
     text_col = p["text_col"]
     require_columns(new_df, (id_col, text_col))
     new_df.createOrReplaceTempView("_ts_bloom_new")
-    spark.read.parquet(f"{path}/bits").createOrReplaceTempView("_ts_bloom_bits")
+    read_artifact(spark, path, "bits").createOrReplaceTempView("_ts_bloom_bits")
     tail = _bloom_screen_tail(
         SPARK, "_ts_bloom_new", id_col, text_col,
         m=p["m"], k=p["k"], with_truth=False,

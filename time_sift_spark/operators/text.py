@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from ..errors import ColumnNotFoundError
 from ..functions.text_fns import SPARK
-from .artifacts import begin_build, commit_build, read_params
+from .artifacts import begin_build, commit_build, read_artifact, read_params
 
 # params (completeness marker) DDL of each store, for its builder and readers
 _QC_PARAMS = "id_col string, text_col string, alpha double, n_buckets int, round_to int"
@@ -726,7 +726,7 @@ def build_quality_model(
     begin_build(spark, path)
     weights.write.mode("overwrite").parquet(f"{path}/weights")
     wview = "_ts_qcb_w"
-    spark.read.parquet(f"{path}/weights").createOrReplaceTempView(wview)
+    read_artifact(spark, path, "weights").createOrReplaceTempView(wview)
     spark.sql(
         f"SELECT SUM(cpos) AS tpos, SUM(ctot) AS ttot FROM {wview}"
     ).write.mode("overwrite").parquet(f"{path}/prior")
@@ -746,8 +746,8 @@ def score_quality_model(spark, path: str, df: DataFrame) -> DataFrame:
     _check(df, [text_col, id_col])
     view, wview, pview = "_ts_qcs_in", "_ts_qcs_w", "_ts_qcs_p"
     df.createOrReplaceTempView(view)
-    spark.read.parquet(f"{path}/weights").createOrReplaceTempView(wview)
-    spark.read.parquet(f"{path}/prior").createOrReplaceTempView(pview)
+    read_artifact(spark, path, "weights").createOrReplaceTempView(wview)
+    read_artifact(spark, path, "prior").createOrReplaceTempView(pview)
     d = SPARK
     fkey = _qc_fkey(d, p["n_buckets"])
     r, p0, rsum = _qc_exprs(p["alpha"], p["round_to"])

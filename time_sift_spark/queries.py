@@ -20,7 +20,7 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, SparkSession
 
 from .operators.lag import lag_features, lead_features
-from .sources.catalog import load_table
+from .sources.catalog import load_table, read_parquet
 
 
 @dataclass
@@ -5802,7 +5802,7 @@ def partitioned_scan_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             .partitionBy("event_date")
             .parquet(path)
         )
-    part = spark.read.parquet(path).where(
+    part = read_parquet(spark, path).where(
         (F.col("event_date") >= F.lit("2024-01-10").cast("date"))
         & (F.col("event_date") <= F.lit("2024-01-12").cast("date"))
     )

@@ -5,13 +5,24 @@ The reference has no I/O at all (in-memory slices only,
 Parquet is the default so Catalyst pushdown / pruning / partition
 discovery come for free — check with ``df.explain`` that ``PushedFilters``
 and a narrow ``ReadSchema`` reach the scan.
+
+Loading a table is metadata only and runs no Spark job: ``read_parquet``
+reads one parquet footer on the driver and converts it with Spark's own
+footer converter, so the DataFrame gets exactly the schema inference
+would give, without inference's one-task schema job. ``load_table``, the
+stream's ``ts`` sniff and every persisted-store artifact read
+(``operators.artifacts.read_artifact``) go through it.
 """
 
 from __future__ import annotations
 
+import functools
+import json
 import os
+from types import SimpleNamespace
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import LongType, StructType
 
 TABLES = (
     "region",
@@ -27,20 +38,6 @@ TABLES = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
-def _nanos_timestamp_cols(path: str) -> list[str]:
-    import pyarrow.parquet as pq
-
-    try:
-        schema = pq.read_schema(path)
-    except Exception:
-        return []
-    return [
-        f.name
-        for f in schema
-        if str(f.type).startswith("timestamp[ns")
-    ]
 
 
 def ensure_session_confs(spark: SparkSession) -> None:
@@ -74,11 +71,122 @@ def ensure_session_confs(spark: SparkSession) -> None:
             warnings.warn(f"could not set {key}={val} on this session: {exc}")
 
 
+_FOOTER_CLASSES = (
+    "org.apache.hadoop.fs.Path",
+    "org.apache.parquet.HadoopReadOptions",
+    "org.apache.parquet.format.converter.ParquetMetadataConverter",
+    "org.apache.parquet.hadoop.Footer",
+    "org.apache.parquet.hadoop.ParquetFileReader",
+    "org.apache.parquet.hadoop.util.HadoopInputFile",
+    "org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat",
+    "org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter",
+)
+
+
+@functools.lru_cache(maxsize=None)
+def _footer_classes(jvm) -> SimpleNamespace:
+    """The JVM classes of the footer read, resolved once per gateway: a
+    dotted lookup costs one py4j round trip per package level."""
+
+    def resolve(name: str):
+        obj = jvm
+        for part in name.split("."):
+            obj = getattr(obj, part)
+        return obj
+
+    return SimpleNamespace(**{n.rsplit(".", 1)[1]: resolve(n) for n in _FOOTER_CLASSES})
+
+
+def _first_data_file(fs, directory):
+    """The first listed entry of ``directory`` whose name Spark reads as
+    data (not ``_``/``.``-prefixed), without building the full listing."""
+    entries = fs.listStatusIterator(directory)
+    while entries.hasNext():
+        st = entries.next()
+        if not st.getPath().getName().startswith(("_", ".")):
+            return st
+    return None
+
+
+def _footer(spark: SparkSession, path: str) -> tuple[StructType, list[str]] | None:
+    """``(schema, nanos)`` of the parquet at ``path`` from one footer read
+    on the driver: the StructType Spark's schema inference gives it (the
+    same ``readSchemaFromFooter`` and converter, under this session's
+    conf), and its INT64 TIMESTAMP(NANOS) columns.
+
+    None where inference must run instead: a partitioned layout (the
+    first entry is a directory), a path holding no data file, session-wide
+    schema merging, or any error reading the footer — so partition
+    columns and a missing or corrupt path behave exactly as before."""
+    from py4j.protocol import Py4JJavaError
+
+    j = _footer_classes(spark._jvm)
+    state = spark._jsparkSession.sessionState()
+    sql_conf = state.conf()
+    if sql_conf.isParquetSchemaMergingEnabled():
+        return None
+    conf = state.newHadoopConf()
+    try:
+        p = j.Path(path)
+        fs = p.getFileSystem(conf)
+        st = fs.getFileStatus(p)
+        if st.isDirectory():
+            st = _first_data_file(fs, p)
+            if st is None or st.isDirectory():
+                return None
+        options = j.HadoopReadOptions.builder(conf).withMetadataFilter(
+            j.ParquetMetadataConverter.SKIP_ROW_GROUPS
+        ).build()
+        reader = j.ParquetFileReader.open(j.HadoopInputFile.fromStatus(st, conf), options)
+        try:
+            footer = reader.getFooter()
+        finally:
+            reader.close()
+        jschema = j.ParquetFileFormat.readSchemaFromFooter(
+            j.Footer(st.getPath(), footer), j.ParquetToSparkSchemaConverter(sql_conf)
+        )
+        schema = StructType.fromJson(json.loads(jschema.json()))
+        # Under nanosAsLong a TIMESTAMP(NANOS) column is typed bigint; the
+        # annotation is only legal on INT64, so bigint columns are the
+        # only candidates (INT96 is typed timestamp, never flagged).
+        parquet = footer.getFileMetaData().getSchema()
+        nanos = [
+            f.name
+            for f in schema.fields
+            if isinstance(f.dataType, LongType)
+            and str(parquet.getType(f.name).getLogicalTypeAnnotation()).startswith("TIMESTAMP(NANOS")
+        ]
+    except Py4JJavaError:
+        return None
+    return schema, nanos
+
+
+def _read_parquet(spark: SparkSession, path: str) -> tuple[DataFrame, list[str]]:
+    found = _footer(spark, path)
+    if found is None:
+        return spark.read.parquet(path), []
+    schema, nanos = found
+    return spark.read.schema(schema).parquet(path), nanos
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """The parquet table at ``path``, read without the schema-inference
+    job: the schema comes from one footer read on the driver
+    (``_footer``), so building the DataFrame runs no Spark job. Works on
+    any Hadoop FileSystem; a partitioned layout or a path with no data
+    file keeps Spark's inference. The schema follows the session's
+    parquet confs (``nanosAsLong``, ``inferTimestampNTZ``): call
+    ``ensure_session_confs`` first where they matter."""
+    return _read_parquet(spark, path)[0]
+
+
 def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
+    """Table ``name`` of the scale-factor directory ``sf_dir``; metadata
+    only, no Spark job (``read_parquet``)."""
     sf_dir = sf_dir or DEFAULT_SF_DIR
     path = os.path.join(sf_dir, f"{name}.parquet")
     ensure_session_confs(spark)
-    df = spark.read.parquet(path)
+    df, nanos = _read_parquet(spark, path)
     # TIMESTAMP(NANOS) parquet columns arrive as long ns (the
     # spark.sql.legacy.parquet.nanosAsLong session default); convert to
     # TimestampType. Integer `div` — ns epoch values (~1.7e18) exceed
@@ -87,9 +195,8 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
     # DuckDB's TIMESTAMP(us) read of the same file.
     from pyspark.sql import functions as F
 
-    for c in _nanos_timestamp_cols(path):
-        if c in df.columns and dict(df.dtypes)[c] == "bigint":
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
+    for c in nanos:
+        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     # Belt-and-braces: if the session's NTZ-inference conf could not be
     # set (locked static, or the scan schema was already cached), re-tag
     # NTZ columns as TIMESTAMP — value-preserving under the UTC pin.
@@ -108,23 +215,17 @@ def read_events_stream(
     TIMESTAMP(NANOS) (arrives as epoch-ns long under the nanosAsLong
     session conf) and TIMESTAMP(MICROS) (arrives as TIMESTAMP once
     inferTimestampNTZ is off). A file stream needs an explicit schema, so
-    sniff the parquet footer (driver-side metadata read, no data scan)
-    and build the matching one; either way the caller sees ``ts`` as
+    sniff the parquet footer (``_footer``: a driver-side metadata read, no
+    job) and build the matching one; either way the caller sees ``ts`` as
     TIMESTAMP (``ts_type="timestamp"``) or epoch-µs long
     (``ts_type="us_long"``).
     """
-    import pyarrow.parquet as pq
-
     sf_dir = sf_dir or DEFAULT_SF_DIR
     ensure_session_confs(spark)
-    path = os.path.join(sf_dir, "events.parquet")
-    try:
-        ts_phys = str(pq.read_schema(path).field("ts").type)
-    except Exception:
-        ts_phys = "timestamp[us]"
+    found = _footer(spark, os.path.join(sf_dir, "events.parquet"))
     from pyspark.sql import functions as F
 
-    nanos = ts_phys.startswith("timestamp[ns")
+    nanos = found is not None and "ts" in found[1]
     schema = (
         "event_id long, ts {}, user_id long, event_type string, "
         "value double, props string"

@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import DataFrame
 
+from ..sources.catalog import read_parquet
+
 
 def parquet_epoch_sink(base_path: str):
     """foreachBatch writer: each epoch lands in ``{base}/epoch={id}/``.
@@ -76,7 +78,7 @@ def upsert_latest_sink(base_path: str, key_cols, order_cols):
         if os.path.exists(ptr):
             with open(ptr) as fh:
                 cur = fh.read().strip()
-            combined = spark.read.parquet(os.path.join(base_path, cur)).unionByName(
+            combined = read_parquet(spark, os.path.join(base_path, cur)).unionByName(
                 batch_df
             )
         w = Window.partitionBy(*keys).orderBy(*[F.col(c).desc() for c in order])
@@ -100,7 +102,7 @@ def read_latest_snapshot(spark, base_path: str) -> DataFrame:
     ptr = os.path.join(base_path, "_LATEST")
     with open(ptr) as fh:
         cur = fh.read().strip()
-    return spark.read.parquet(os.path.join(base_path, cur))
+    return read_parquet(spark, os.path.join(base_path, cur))
 
 
 def run_stream_upsert(
@@ -150,7 +152,7 @@ def screened_append_sink(base_path: str, screen, append, accepted: str, id_col: 
         edir = os.path.join(base_path, "results", f"epoch-{epoch_id}")
         if not os.path.exists(os.path.join(edir, "_SUCCESS")):
             screen(spark, batch_df).write.mode("overwrite").parquet(edir)
-        keep = spark.read.parquet(edir).where(accepted).select(id_col)
+        keep = read_parquet(spark, edir).where(accepted).select(id_col)
         append(spark, batch_df.join(keep, id_col, "left_semi"))
         os.makedirs(marker)
 
