@@ -32,12 +32,10 @@ def test_ewma_validation(spark):
 
 
 def test_ewma_scan_equals_groupwise(spark):
-    """The partition-scan strategy (mapInPandas + cross-batch carry) must
-    be bit-identical to per-key applyInPandas, including when a tiny
-    Arrow batch size forces keys to split across batches (the carry
+    """The partition scan (mapInPandas + cross-batch holdback) must be
+    bit-identical to a per-key pandas ewm, including when a tiny Arrow
+    batch size forces keys to split across batches (the holdback
     path)."""
-    from time_sift_spark.operators.ewma import ewma_scan
-
     rng = np.random.RandomState(7)
     pdf = pd.DataFrame(
         {
@@ -47,20 +45,14 @@ def test_ewma_scan_equals_groupwise(spark):
         }
     )
     df = spark.createDataFrame(pdf)
-    a = (
-        ewma(df, "v", "t", 0.3, partition_by="k")
-        .orderBy("k", "t")
-        .toPandas()
-        .reset_index(drop=True)
-    )
     with _tiny_arrow_batches(spark):
         b = (
-            ewma_scan(df, "v", "t", 0.3, partition_by="k")
+            ewma(df, "v", "t", 0.3, partition_by="k")
             .orderBy("k", "t")
             .toPandas()
             .reset_index(drop=True)
         )
-    pd.testing.assert_frame_equal(a, b)
+    pd.testing.assert_frame_equal(_pandas_ewma(df, 0.3, ["k", "t"]), b)
 
 
 from contextlib import contextmanager
@@ -83,14 +75,28 @@ def _tiny_arrow_batches(spark, n="7"):
             spark.conf.set(key, old)
 
 
+def _pandas_ewma(df, alpha, order_by):
+    """Ground truth: per-key pandas ``ewm(adjust=False)`` over the input
+    rows as Spark returns them — each key in ``t`` order with NULLs first
+    (Spark's ascending sort), NULL keys one group — ordered by
+    ``order_by`` like the result under test."""
+    pdf = df.toPandas()
+    by_t = pdf.sort_values("t", kind="mergesort", na_position="first")
+    pdf["v_ewma"] = (
+        by_t.groupby("k", sort=False, dropna=False)["v"]
+        .ewm(alpha=alpha, adjust=False)
+        .mean()
+        .reset_index(level=0, drop=True)
+    )
+    return pdf.sort_values(order_by, kind="mergesort", na_position="first").reset_index(drop=True)
+
+
 def test_ewma_scan_nan_across_batch_boundary(spark):
     """Regression (code-review r2): pandas ewm(adjust=False,
     ignore_na=False) carries an accumulated-weight state across NaNs that
     a carried last-output scalar cannot represent. The holdback design
     computes every key in ONE ewm call, so NaN before a batch boundary
-    must still match the per-key strategy exactly."""
-    from time_sift_spark.operators.ewma import ewma_scan
-
+    must still match the per-key pandas ewm exactly."""
     pdf = pd.DataFrame(
         {
             "k": [1, 1, 1, 1, 2, 2, 2],
@@ -99,23 +105,19 @@ def test_ewma_scan_nan_across_batch_boundary(spark):
         }
     )
     df = spark.createDataFrame(pdf)
-    a = ewma(df, "v", "t", 0.3, partition_by="k").orderBy("k", "t").toPandas().reset_index(drop=True)
     with _tiny_arrow_batches(spark, "2"):  # boundary right after the NaN
         b = (
-            ewma_scan(df, "v", "t", 0.3, partition_by="k")
+            ewma(df, "v", "t", 0.3, partition_by="k")
             .orderBy("k", "t")
             .toPandas()
             .reset_index(drop=True)
         )
-    pd.testing.assert_frame_equal(a, b)
+    pd.testing.assert_frame_equal(_pandas_ewma(df, 0.3, ["k", "t"]), b)
 
 
 def test_ewma_scan_null_keys(spark):
     """NULL partition keys form one group in Spark's groupBy; the scan
-    strategy must match (groupby dropna=False), not crash on a length
-    mismatch."""
-    from time_sift_spark.operators.ewma import ewma_scan
-
+    must match (groupby dropna=False), not crash on a length mismatch."""
     pdf = pd.DataFrame(
         {
             "k": pd.array([1, None, None, 2], dtype="Int64"),
@@ -124,22 +126,19 @@ def test_ewma_scan_null_keys(spark):
         }
     )
     df = spark.createDataFrame(pdf)
-    a = ewma(df, "v", "t", 0.5, partition_by="k").orderBy("t", "v").toPandas().reset_index(drop=True)
     b = (
-        ewma_scan(df, "v", "t", 0.5, partition_by="k")
+        ewma(df, "v", "t", 0.5, partition_by="k")
         .orderBy("t", "v")
         .toPandas()
         .reset_index(drop=True)
     )
-    pd.testing.assert_frame_equal(a, b)
+    pd.testing.assert_frame_equal(_pandas_ewma(df, 0.5, ["t", "v"]), b)
 
 
 def test_ewma_strategies_align_on_null_order_values(spark):
-    """NULL time/order values must order identically in both strategies
-    (advisor r2): ewma sorts pandas na_position='first' to match
-    ewma_scan's Spark ascending NULLS FIRST."""
-    from time_sift_spark.operators.ewma import ewma_scan
-
+    """NULL time/order values sort first within a key (advisor r2): the
+    scan's Spark ascending NULLS FIRST must equal pandas'
+    na_position='first'."""
     pdf = pd.DataFrame(
         {
             "k": [1, 1, 1, 1, 2, 2],
@@ -148,19 +147,13 @@ def test_ewma_strategies_align_on_null_order_values(spark):
         }
     )
     df = spark.createDataFrame(pdf)
-    a = (
+    b = (
         ewma(df, "v", "t", 0.4, partition_by="k")
         .orderBy("k", "v")
         .toPandas()
         .reset_index(drop=True)
     )
-    b = (
-        ewma_scan(df, "v", "t", 0.4, partition_by="k")
-        .orderBy("k", "v")
-        .toPandas()
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(a, b)
+    pd.testing.assert_frame_equal(_pandas_ewma(df, 0.4, ["k", "v"]), b)
 
 
 def test_ewma_horizon_full_history_matches_pandas(spark):

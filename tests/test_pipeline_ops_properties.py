@@ -221,30 +221,24 @@ def nan_series(draw):
 @settings(max_examples=10, deadline=None, suppress_health_check=[HealthCheck.too_slow])
 @given(nan_series())
 def test_ewma_scan_equals_groupwise_random_nans(case):
-    """Partition-scan EWMA vs per-key EWMA on random NaN patterns with
-    tiny Arrow batches — the holdback must be exact wherever the batch
-    boundary lands."""
-    from tests.test_ewma import _tiny_arrow_batches
-    from time_sift_spark.operators.ewma import ewma, ewma_scan
+    """Partition-scan EWMA vs a per-key pandas ewm on random NaN patterns
+    with tiny Arrow batches — the holdback must be exact wherever the
+    batch boundary lands."""
+    from tests.test_ewma import _pandas_ewma, _tiny_arrow_batches
+    from time_sift_spark.operators.ewma import ewma
 
     keys, vals, batch = case
     spark = _get_session()
     pdf = pd.DataFrame({"k": keys, "t": range(len(keys)), "v": vals})
     df = spark.createDataFrame(pdf)
-    a = (
-        ewma(df, "v", "t", 0.4, partition_by="k")
-        .orderBy("k", "t")
-        .toPandas()
-        .reset_index(drop=True)
-    )
     with _tiny_arrow_batches(spark, batch):
         b = (
-            ewma_scan(df, "v", "t", 0.4, partition_by="k")
+            ewma(df, "v", "t", 0.4, partition_by="k")
             .orderBy("k", "t")
             .toPandas()
             .reset_index(drop=True)
         )
-    pd.testing.assert_frame_equal(a, b)
+    pd.testing.assert_frame_equal(_pandas_ewma(df, 0.4, ["k", "t"]), b)
 def test_cluster_balanced_sample_caps_and_determinism(spark):
     from time_sift_spark.operators.similarity import cluster_balanced_sample
     from time_sift_spark.sources.catalog import load_table

@@ -18,11 +18,13 @@ from __future__ import annotations
 
 from typing import Sequence
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..errors import ColumnNotFoundError
+from ..errors import require_columns
 from ..functions.text_fns import SPARK, Dialect
+from ..plans.keyed_scan import keyed_scan
 
 __all__ = [
     "chunk_documents",
@@ -40,12 +42,6 @@ __all__ = [
     "budget_sample",
     "PII_PATTERNS",
 ]
-
-
-def _check(df: DataFrame, cols: Sequence[str]) -> None:
-    missing = [c for c in cols if c not in df.columns]
-    if missing:
-        raise ColumnNotFoundError(f"columns not in DataFrame: {missing}")
 
 
 # --------------------------------------------------------------------------
@@ -82,7 +78,7 @@ def chunk_documents(
     ``n_chars_chunk``.  Pure explode+substring projection: no shuffle,
     embarrassingly parallel at any scale.  Empty documents yield one
     empty chunk (the position sequence is clamped to [1])."""
-    _check(df, [text_col, *id_cols])
+    require_columns(df, [text_col, *id_cols])
     seq, sub = _chunk_exprs(SPARK, text_col, size, overlap)
     return (
         df.select(*id_cols, text_col, F.explode(F.expr(seq)).alias("_pos"))
@@ -143,7 +139,7 @@ def redact_pii(
     """Replace emails / SSNs / phone numbers with typed placeholder
     tokens; per-kind match counts come along for audit.  A projection —
     no shuffle, scales with scan bandwidth."""
-    _check(df, [text_col, *keep_cols])
+    require_columns(df, [text_col, *keep_cols])
     ex = _redact_exprs(SPARK, text_col)
     return df.select(
         *keep_cols, *[F.expr(e).alias(name) for name, e in ex.items()]
@@ -183,8 +179,8 @@ def decontaminate(
     and broadcast (eval suites are ~MBs against a ~100 TB training
     corpus), so the screen costs one scan of each side and zero
     train-side shuffles before the per-doc count."""
-    _check(train_df, [id_col, text_col])
-    _check(bench_df, [text_col])
+    require_columns(train_df, [id_col, text_col])
+    require_columns(bench_df, [text_col])
     # stage tokens as a COLUMN before shingling: an inline token pipeline
     # is re-evaluated per shingle index by the array transform (~60x per
     # doc — measured 4.6s -> 0.5s at sf0.1). The oracle keeps the
@@ -377,8 +373,8 @@ def decontaminate_fuzzy(
     seed: int = 42,
 ) -> DataFrame:
     """DataFrame entry point for :func:`decontaminate_fuzzy_sql`."""
-    _check(train_df, [id_col, text_col])
-    _check(bench_df, [bench_id_col, text_col])
+    require_columns(train_df, [id_col, text_col])
+    require_columns(bench_df, [bench_id_col, text_col])
     train_df.createOrReplaceTempView("_ts_dcf_train")
     bench_df.createOrReplaceTempView("_ts_dcf_bench")
     sql = decontaminate_fuzzy_sql(
@@ -413,40 +409,44 @@ def pack_sequences(
     Output: group columns + ``order_col`` + ``n_tokens`` + ``bin_id``
     (0-based per group).
 
-    Greedy packing is a sequential recurrence over the group's order —
-    the same class as EWMA — so it runs as ONE applyInPandas pass per
-    group (token counts are computed JVM-side BEFORE the shuffle; Python
-    touches only (id, int) pairs, never text).  At 100 TB the group key
-    is the shard (source/file/date), which is exactly the granularity
-    real packers use: packing across shards would destroy data-order
-    reproducibility, and bounded shards bound the Python state.  The
-    DuckDB oracle replays the identical recurrence as a recursive CTE
-    (see queries.pack_sequences_docs).
+    Greedy packing is a sequential recurrence over the group's order, so
+    it is a kernel on :func:`~time_sift_spark.plans.keyed_scan.keyed_scan`:
+    one shuffle on the group key, one sort by (group, ``order_col``
+    ascending, NULLs last — the oracle's ``ORDER BY``), then one Python
+    loop per partition that resets at each group boundary.  Token counts
+    are computed JVM-side BEFORE the shuffle; Python touches only
+    (id, int) pairs, never text.  A NULL token count packs as 0 tokens.
+    At 100 TB the group key is the shard (source/file/date), which is
+    exactly the granularity real packers use: packing across shards
+    would destroy data-order reproducibility, and bounded shards bound
+    the Python state.  The DuckDB oracle replays the identical
+    recurrence as a recursive CTE (:func:`pack_sequences_oracle_sql`).
     """
-    _check(df, [token_col, order_col, *group_by])
+    require_columns(df, [token_col, order_col, *group_by])
     if budget <= 0:
         raise ValueError(f"token budget must be positive, got {budget}")
     gcols = list(group_by)
     slim = df.select(*gcols, order_col, F.col(token_col).cast("long").alias("n_tokens"))
-    out_schema = slim.schema.add("bin_id", "long")
     budget_ = int(budget)
-    order_local = order_col
 
     def _pack(pdf):
-        pdf = pdf.sort_values(order_local, kind="mergesort").reset_index(drop=True)
-        bin_id, fill = 0, 0
-        bins = []
-        for tok in pdf["n_tokens"]:
-            t = int(tok) if tok is not None else 0
-            if fill > 0 and fill + t > budget_:
-                bin_id += 1
-                fill = 0
+        gid = pdf.groupby(gcols, sort=False, dropna=False).ngroup().to_numpy()
+        toks = pdf["n_tokens"].fillna(0).to_numpy(dtype="int64")
+        bins = np.empty(len(pdf), dtype="int64")
+        bin_id = fill = 0
+        for i, t in enumerate(toks):
+            if i and gid[i] != gid[i - 1]:
+                bin_id = fill = 0
+            elif fill > 0 and fill + t > budget_:
+                bin_id, fill = bin_id + 1, 0
             fill += t
-            bins.append(bin_id)
+            bins[i] = bin_id
         pdf["bin_id"] = bins
         return pdf
 
-    return slim.repartition(*gcols).groupBy(*gcols).applyInPandas(_pack, out_schema)
+    return keyed_scan(
+        slim, gcols, [F.asc_nulls_last(order_col)], _pack, slim.schema.add("bin_id", "long")
+    )
 
 
 def pack_sequences_oracle_sql(
@@ -522,7 +522,7 @@ def temperature_resample(
     engines); a free exponent would go through pow/exp/ln, whose last
     ulp is libm-specific — the same reason BM25 uses rational idf.
     """
-    _check(df, [group_col, id_col])
+    require_columns(df, [group_col, id_col])
     if alpha not in (0.0, 0.5, 1.0):
         raise ValueError(f"alpha must be one of 0, 0.5, 1 — got {alpha}")
     if resolution <= 0:
@@ -659,7 +659,7 @@ def epoch_upsample(
     weights: dict[str, float],
 ) -> DataFrame:
     """DataFrame front door for :func:`epoch_upsample_sql`."""
-    _check(df, [id_col, group_col])
+    require_columns(df, [id_col, group_col])
     view = "_ts_epoch_in"
     df.createOrReplaceTempView(view)
     return df.sparkSession.sql(
@@ -695,12 +695,9 @@ def budget_sample(
     """
     from pyspark.sql import functions as F
 
-    from ..errors import ColumnNotFoundError
     from .prefix import prefix_sum_global
 
-    for c in (id_col, token_col, score_col):
-        if c not in df.columns:
-            raise ColumnNotFoundError(f"column {c!r} not in {df.columns}")
+    require_columns(df, [id_col, token_col, score_col])
     neg = df.withColumn("_negscore", -F.col(score_col))
     ps = prefix_sum_global(
         neg, token_col, "_negscore",

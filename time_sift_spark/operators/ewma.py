@@ -1,15 +1,14 @@
-"""Exponentially-weighted moving average per series (applyInPandas).
+"""Exponentially-weighted smoothing per series: exact EWMA, Brown double
+exponential smoothing, and the horizon-truncated EWMA.
 
 EWMA's recurrence y_t = α·x_t + (1−α)·y_{t−1} is inherently sequential
 per series — not expressible as a SQL window aggregate without
-numerically-explosive closed forms, so this is the designed use case for
-Arrow-batched ``applyInPandas``: one pandas group per series key,
-vectorized ``Series.ewm`` inside, no Python row loop.
-
-Scale: one shuffle on the series key (same partitioning the lag plan
-uses); each group must fit in one executor's memory — the same
-per-series locality assumption the reference makes (whole series in one
-buffer, src/lib.rs:487-488), now bounded per key rather than global.
+numerically-explosive closed forms — so :func:`ewma` and
+:func:`brown_scan` are kernels on :func:`~time_sift_spark.plans.keyed_scan.keyed_scan`:
+one shuffle on the series key (the partitioning the lag plan uses), one
+sort, and pandas' vectorized cython ``groupby().ewm()`` over whole keys,
+no Python row loop.  Each key must fit in one executor's memory — the
+same per-series locality assumption the reference makes (src/lib.rs:487-488).
 Unit tests pin values against pandas ``ewm(adjust=False)``; the driver
 oracle is a recursive CTE stepping the recurrence per key (bit-exact for
 not-null input — see queries.ewma_events).
@@ -19,28 +18,34 @@ from __future__ import annotations
 
 from typing import Sequence
 
-import pandas as pd
+import numpy as np
 from pyspark.sql import DataFrame
 
-from ..errors import ColumnNotFoundError
+from ..errors import require_columns
+from ..plans.keyed_scan import keyed_scan
 
 
-def _prep(df, value_col, time_col, alpha, partition_by, order_extra):
-    """Shared validation + naming for both EWMA strategies — one source of
-    truth so the two physical forms can't drift."""
-    partition_by = [partition_by] if isinstance(partition_by, str) else list(partition_by)
-    missing = [c for c in ([value_col, time_col, *partition_by, *order_extra]) if c not in df.columns]
-    if missing:
-        raise ColumnNotFoundError(f"columns not in DataFrame: {missing}")
+def _prep(df, value_col, time_col, alpha, partition_by, order_extra, out_cols):
+    """Shared validation, column slice and output schema of the keyed EWMA
+    operators: (slim frame, keys, sort columns, Arrow schema)."""
+    keys = [partition_by] if isinstance(partition_by, str) else list(partition_by)
+    sort_cols = [time_col, *order_extra]
+    in_cols = [*keys, *sort_cols, value_col]
+    require_columns(df, in_cols)
     if not (0.0 < alpha <= 1.0):
         raise ValueError(f"alpha must be in (0, 1], got {alpha}")
-    sort_cols = [time_col, *order_extra]
-    out_name = f"{value_col}_ewma"
-    in_cols = [*partition_by, *sort_cols, value_col]
+    types = dict(df.dtypes)
     schema = ", ".join(
-        [f"`{c}` {dict(df.dtypes)[c]}" for c in in_cols] + [f"`{out_name}` double"]
+        [f"`{c}` {types[c]}" for c in in_cols] + [f"`{c}` double" for c in out_cols]
     )
-    return partition_by, sort_cols, out_name, in_cols, schema
+    return df.select(*in_cols), keys, sort_cols, schema
+
+
+def _ewm(pdf, keys, col, alpha):
+    # one grouped cython adjust=False pass; keys are contiguous, so the
+    # group-major output is in row order
+    g = pdf.groupby(keys, sort=False, dropna=False)[col]
+    return g.ewm(alpha=alpha, adjust=False).mean().to_numpy()
 
 
 def ewma(
@@ -52,86 +57,23 @@ def ewma(
     partition_by: str | Sequence[str],
     order_extra: Sequence[str] = (),
 ) -> DataFrame:
-    """Append ``{value}_ewma`` (adjust=False recurrence) per series."""
-    partition_by, sort_cols, out_name, in_cols, schema = _prep(
-        df, value_col, time_col, alpha, partition_by, order_extra
-    )
+    """Append ``{value}_ewma`` (the adjust=False recurrence) per series,
+    ordered by (``time_col``, ``order_extra``) ascending, NULLs first.
 
-    def _per_series(pdf: pd.DataFrame) -> pd.DataFrame:
-        # na_position='first' matches ewma_scan's Spark sortWithinPartitions
-        # (ascending NULLS FIRST) so the two strategies order NULL
-        # time/order keys identically and stay bit-identical.
-        pdf = pdf.sort_values(sort_cols, kind="mergesort", na_position="first")
-        pdf[out_name] = pdf[value_col].ewm(alpha=alpha, adjust=False).mean()
-        return pdf[in_cols + [out_name]]
-
-    return df.select(*in_cols).groupBy(*partition_by).applyInPandas(_per_series, schema)
-
-
-def ewma_scan(
-    df: DataFrame,
-    value_col: str,
-    time_col: str,
-    alpha: float,
-    *,
-    partition_by: str | Sequence[str],
-    order_extra: Sequence[str] = (),
-) -> DataFrame:
-    """Same result as :func:`ewma`, different physical strategy: ONE
-    Python invocation per partition instead of one per key.
-
-    ``groupBy().applyInPandas`` ships every key group through its own
-    JVM→Python Arrow round-trip — per-group overhead dominates when keys
-    are many and small (the events table: thousands of users × ~100 rows).
-    Here the data is hash-repartitioned and sorted by (key, time) once,
-    then ``mapInPandas`` streams each partition's Arrow batches through a
-    single iterator: all COMPLETED keys in a batch are computed by pandas'
-    cython ``groupby().ewm()`` in one call, while the in-progress last
-    key's raw rows are held back and prepended to the next batch, so every
-    key is always computed in exactly ONE ewm call. (A carried-scalar
-    stitch is NOT sufficient: pandas ``ewm(adjust=False, ignore_na=False)``
-    keeps an accumulated-weight state across NaN values that a single
-    carried output cannot represent.) Holdback memory is one key's rows —
-    the same per-series bound applyInPandas already assumes. NULL keys
-    form one group (``dropna=False``), matching Spark's groupBy.
+    A kernel on the keyed scan: every key is computed in ONE cython
+    ``groupby().ewm()`` call, never stitched across Arrow batches, so NaN
+    values keep pandas' accumulated-weight semantics exactly.
     """
-    partition_by, sort_cols, out_name, in_cols, schema = _prep(
-        df, value_col, time_col, alpha, partition_by, order_extra
+    out_name = f"{value_col}_ewma"
+    slim, keys, sort_cols, schema = _prep(
+        df, value_col, time_col, alpha, partition_by, order_extra, [out_name]
     )
 
-    def _compute(pdf: pd.DataFrame) -> pd.DataFrame:
-        y = (
-            pdf.groupby(partition_by, sort=False, dropna=False)[value_col]
-            .ewm(alpha=alpha, adjust=False)
-            .mean()
-            .to_numpy()
-        )
-        pdf = pdf.copy()
-        pdf[out_name] = y
-        return pdf[in_cols + [out_name]]
+    def _kernel(pdf):
+        pdf[out_name] = _ewm(pdf, keys, value_col, alpha)
+        return pdf
 
-    def _scan(batches):
-        leftover = None
-        for pdf in batches:
-            if leftover is not None:
-                pdf = pd.concat([leftover, pdf], ignore_index=True)
-                leftover = None
-            if len(pdf) == 0:
-                continue
-            gid = pdf.groupby(partition_by, sort=False, dropna=False).ngroup()
-            done = (gid != gid.iloc[-1]).to_numpy()
-            leftover = pdf[~done]
-            if done.any():
-                yield _compute(pdf[done])
-        if leftover is not None and len(leftover):
-            yield _compute(leftover)
-
-    parted = (
-        df.select(*in_cols)
-        .repartition(*partition_by)
-        .sortWithinPartitions(*partition_by, *sort_cols)
-    )
-    return parted.mapInPandas(_scan, schema)
+    return keyed_scan(slim, keys, sort_cols, _kernel, schema)
 
 
 def brown_scan(
@@ -154,12 +96,12 @@ def brown_scan(
         forecast_t = level_t + trend_t          (x̂_{t+1})
 
     Because both recurrences are plain EWMAs, the whole operator is two
-    vectorized cython ``groupby().ewm()`` passes inside ONE mapInPandas
-    partition scan — no Python row loop — reusing :func:`ewma_scan`'s
-    strategy (hash-repartition + sort once, stream Arrow batches, hold
-    back the in-progress key).  Holt's two-parameter form needs a
-    genuinely scalar loop per row; Brown's buys the trend component at
-    EWMA cost, which is why it is the production path here.
+    vectorized cython ``groupby().ewm()`` passes inside ONE keyed-scan
+    kernel — no Python row loop — on :func:`ewma`'s plan (hash-repartition
+    + sort once, stream Arrow batches, hold back the in-progress key).
+    Holt's two-parameter form needs a genuinely scalar loop per row;
+    Brown's buys the trend component at EWMA cost, which is why it is the
+    production path here.
 
     Bit-exactness contract (the driver's value-hash gate): pandas'
     adjust=False kernel evaluates fl(fl((1−α)·y) + fl(α·x)) and divides
@@ -171,69 +113,32 @@ def brown_scan(
     fl differs from literal 0.428…, and fl(1−0.3) differs from literal
     0.7, so neither is ever spelled as a folded constant).
 
-    Scale: identical posture to ewma_scan — one shuffle on the series
+    Scale: identical posture to :func:`ewma` — one shuffle on the series
     key, per-key rows bounded by the series-locality assumption the
     reference makes globally (src/lib.rs:487-488).  Not-null input for
     oracle-grade parity (pandas carries over NaN where SQL propagates
     NULL).
     """
-    import numpy as np
-
-    partition_by, sort_cols, _, in_cols, _ = _prep(
-        df, value_col, time_col, alpha, partition_by, order_extra
-    )
     l_name = f"{value_col}_level"
     t_name = f"{value_col}_trend"
     f_name = f"{value_col}_fcst"
-    schema = ", ".join(
-        [f"`{c}` {dict(df.dtypes)[c]}" for c in in_cols]
-        + [f"`{c}` double" for c in (l_name, t_name, f_name)]
+    slim, keys, sort_cols, schema = _prep(
+        df, value_col, time_col, alpha, partition_by, order_extra, [l_name, t_name, f_name]
     )
     a = np.float64(alpha)
     coef = a / (np.float64(1.0) - a)  # fl(α/(1−α)) — same division as the oracle
 
-    def _compute(pdf: pd.DataFrame) -> pd.DataFrame:
-        # Rows arrive key-contiguous and time-sorted, so group-major ewm
-        # output order == row order (the ewma_scan invariant).
-        g = pdf.groupby(partition_by, sort=False, dropna=False)
-        s1 = g[value_col].ewm(alpha=alpha, adjust=False).mean().to_numpy()
-        pdf = pdf.copy()
-        pdf["_s1"] = s1
-        s2 = (
-            pdf.groupby(partition_by, sort=False, dropna=False)["_s1"]
-            .ewm(alpha=alpha, adjust=False)
-            .mean()
-            .to_numpy()
-        )
+    def _kernel(pdf):
+        s1 = _ewm(pdf, keys, value_col, alpha)
+        s2 = _ewm(pdf.assign(_s1=s1), keys, "_s1", alpha)
         level = np.float64(2.0) * s1 - s2
         trend = coef * (s1 - s2)
         pdf[l_name] = level
         pdf[t_name] = trend
         pdf[f_name] = level + trend
-        return pdf[in_cols + [l_name, t_name, f_name]]
+        return pdf
 
-    def _scan(batches):
-        leftover = None
-        for pdf in batches:
-            if leftover is not None:
-                pdf = pd.concat([leftover, pdf], ignore_index=True)
-                leftover = None
-            if len(pdf) == 0:
-                continue
-            gid = pdf.groupby(partition_by, sort=False, dropna=False).ngroup()
-            done = (gid != gid.iloc[-1]).to_numpy()
-            leftover = pdf[~done]
-            if done.any():
-                yield _compute(pdf[done])
-        if leftover is not None and len(leftover):
-            yield _compute(leftover)
-
-    parted = (
-        df.select(*in_cols)
-        .repartition(*partition_by)
-        .sortWithinPartitions(*partition_by, *sort_cols)
-    )
-    return parted.mapInPandas(_scan, schema)
+    return keyed_scan(slim, keys, sort_cols, _kernel, schema)
 
 
 def ewma_horizon(
@@ -251,8 +156,8 @@ def ewma_horizon(
     sequential recurrence.
 
     The exact adjust=False EWMA needs the full per-key history (the
-    mapInPandas partition scan, :func:`ewma_partition_scan`); truncating
-    the memory to the last ``horizon`` observations bounds the state the
+    keyed partition scan, :func:`ewma`); truncating the memory to the
+    last ``horizon`` observations bounds the state the
     way a production streaming feature does (contributions beyond the
     horizon carry weight (1-alpha)^horizon ≈ 0) and turns the operator
     into a per-row fold over a bounded sliding window: collect the frame
@@ -275,11 +180,7 @@ def ewma_horizon(
     from pyspark.sql import functions as F
 
     out_col = out_col or f"{value_col}_ewma{horizon}"
-    for c in (partition_by, value_col, time_col, *order_extra):
-        if c not in df.columns:
-            from ..errors import ColumnNotFoundError
-
-            raise ColumnNotFoundError(f"column {c!r} not in {df.columns}")
+    require_columns(df, [partition_by, value_col, time_col, *order_extra])
     w = (
         Window.partitionBy(partition_by)
         .orderBy(time_col, *order_extra)

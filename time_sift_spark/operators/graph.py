@@ -450,9 +450,7 @@ def clustering_coefficients(
 # kcore_docs 5.0 → 8.0 s, and even 4 under 1 000 nodes lost to the
 # flat 3 in an interleaved A/B (5.75/5.52/6.30 vs 5.92/5.89/6.89 s).
 # The group size therefore stays flat.
-import os as _os
-
-_KCORE_GROUP = int(_os.environ.get("SPARK_GRAFT_KCORE_GROUP", "3"))
+_KCORE_GROUP = 3
 
 
 def kcore_sql(

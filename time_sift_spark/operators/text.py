@@ -16,18 +16,12 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..errors import ColumnNotFoundError
+from ..errors import ColumnNotFoundError, require_columns
 from ..functions.text_fns import SPARK
 from .artifacts import begin_build, commit_build, read_artifact, read_params
 
 # params (completeness marker) DDL of each store, for its builder and readers
 _QC_PARAMS = "id_col string, text_col string, alpha double, n_buckets int, round_to int"
-
-
-def _check(df: DataFrame, cols: Sequence[str]) -> None:
-    missing = [c for c in cols if c not in df.columns]
-    if missing:
-        raise ColumnNotFoundError(f"columns not in DataFrame: {missing}")
 
 
 def text_stats(df: DataFrame, text_col: str, *, keep_cols: Sequence[str] = ()) -> DataFrame:
@@ -37,7 +31,7 @@ def text_stats(df: DataFrame, text_col: str, *, keep_cols: Sequence[str] = ()) -
     regex), n_tokens_alnum, punct_ratio, digit_ratio, stopword_ratio_en,
     mean_token_len, quality_score.
     """
-    _check(df, [text_col, *keep_cols])
+    require_columns(df, [text_col, *keep_cols])
     c = text_col
     # stage tokens once (the oracle keeps the single-expression form —
     # values identical, this only removes repeated tokenization)
@@ -65,7 +59,7 @@ def lang_id(df: DataFrame, text_col: str, *, keep_cols: Sequence[str] = ()) -> D
     CJK char-ratio gate, then stopword-hit argmax over {en,es,fr,de} with
     fixed priority tie-break; 'und' when nothing matches.
     """
-    _check(df, [text_col, *keep_cols])
+    require_columns(df, [text_col, *keep_cols])
     staged = df.select(*keep_cols, text_col, F.expr(SPARK.tokens(text_col)).alias("_toks"))
     return staged.select(*keep_cols, F.expr(SPARK.lang_id(text_col, "_toks")).alias("lang_pred"))
 
@@ -86,7 +80,7 @@ def fingerprint(
     cost of one small groupBy shuffle on ``keep_cols``.  ``keep_cols``
     must therefore uniquely key the rows (e.g. doc_id).
     """
-    _check(df, [text_col, *keep_cols])
+    require_columns(df, [text_col, *keep_cols])
     if not keep_cols:
         raise ColumnNotFoundError("fingerprint requires keep_cols naming a unique row key")
     # stage tokens as a column — shingling over an inline token pipeline
@@ -118,7 +112,7 @@ def quality_filter(
     Unlike text_stats' scalar quality_score, this exposes WHICH rule
     rejected a document — the operational need when tuning a corpus
     filter. Pure projection: no shuffle, scan-bandwidth-bound."""
-    _check(df, [text_col, *keep_cols])
+    require_columns(df, [text_col, *keep_cols])
     rules = gopher_rule_exprs(SPARK, text_col, "_toks")
     staged = df.select(*keep_cols, text_col, F.expr(SPARK.tokens(text_col)).alias("_toks"))
     out_cols = [F.expr(e).alias(name) for name, e in rules.items()]
@@ -260,7 +254,7 @@ def repetition_stats(
 ) -> DataFrame:
     """DataFrame entry point for :func:`repetition_stats_sql` (the Spark
     dialect renders the same logical plan the DuckDB oracle runs)."""
-    _check(df, [text_col, id_col])
+    require_columns(df, [text_col, id_col])
     sql = repetition_stats_sql(
         SPARK, "_ts_rep_in", text_col, id_col,
         short_k=short_k, long_k=long_k,
@@ -366,7 +360,7 @@ def bigram_fluency_sql(
 
 def bigram_fluency(df: DataFrame, text_col: str, id_col: str, *, round_to: int = 6) -> DataFrame:
     """DataFrame entry point for :func:`bigram_fluency_sql`."""
-    _check(df, [text_col, id_col])
+    require_columns(df, [text_col, id_col])
     sql = bigram_fluency_sql(SPARK, "_ts_flu_in", text_col, id_col, round_to=round_to)
     df.createOrReplaceTempView("_ts_flu_in")
     return df.sparkSession.sql(sql)
@@ -461,7 +455,7 @@ def dsir_weights(
     df: DataFrame, text_col: str, id_col: str, *, target_pred: str, round_to: int = 6
 ) -> DataFrame:
     """DataFrame entry point for :func:`dsir_weights_sql`."""
-    _check(df, [text_col, id_col])
+    require_columns(df, [text_col, id_col])
     sql = dsir_weights_sql(
         SPARK, "_ts_dsir_in", text_col, id_col,
         target_pred=target_pred, round_to=round_to,
@@ -518,7 +512,7 @@ def dsir_resample(
     df: DataFrame, text_col: str, id_col: str, *, target_pred: str, round_to: int = 6
 ) -> DataFrame:
     """DataFrame entry point for :func:`dsir_resample_sql`."""
-    _check(df, [text_col, id_col])
+    require_columns(df, [text_col, id_col])
     sql = dsir_resample_sql(
         SPARK, "_ts_dsirr_in", text_col, id_col,
         target_pred=target_pred, round_to=round_to,
@@ -663,7 +657,7 @@ def quality_classifier_score(
     round_to: int = 6,
 ) -> DataFrame:
     """DataFrame entry point for :func:`quality_classifier_sql`."""
-    _check(df, [text_col, id_col])
+    require_columns(df, [text_col, id_col])
     sql = quality_classifier_sql(
         SPARK, "_ts_qc_in", text_col, id_col,
         label_pred=label_pred, train_pred=train_pred,
@@ -696,7 +690,7 @@ def build_quality_model(
     is bit-exact — the ANN build/serve contract applied to the text
     tier. At 100 TB the training explode runs ONCE here instead of
     inside every scoring query (the r7-verdict amortization doctrine)."""
-    _check(df, [text_col, id_col])
+    require_columns(df, [text_col, id_col])
     spark = df.sparkSession
     view = "_ts_qcb_in"
     df.createOrReplaceTempView(view)
@@ -743,7 +737,7 @@ def score_quality_model(spark, path: str, df: DataFrame) -> DataFrame:
     filter, no weight aggregation — those were paid at build time."""
     p = read_params(spark, path, _QC_PARAMS)
     id_col, text_col = p["id_col"], p["text_col"]
-    _check(df, [text_col, id_col])
+    require_columns(df, [text_col, id_col])
     view, wview, pview = "_ts_qcs_in", "_ts_qcs_w", "_ts_qcs_p"
     df.createOrReplaceTempView(view)
     read_artifact(spark, path, "weights").createOrReplaceTempView(wview)
@@ -886,7 +880,7 @@ def readability(
     df: DataFrame, text_col: str, id_col: str, *, round_to: int = 6
 ) -> DataFrame:
     """DataFrame entry point for :func:`readability_sql`."""
-    _check(df, [text_col, id_col])
+    require_columns(df, [text_col, id_col])
     view = "_ts_readability_in"
     df.createOrReplaceTempView(view)
     return df.sparkSession.sql(
@@ -1001,7 +995,7 @@ def token_label_chisq(
     round_to: int = 6,
 ) -> DataFrame:
     """DataFrame entry point for :func:`token_label_chisq_sql`."""
-    _check(df, [text_col, id_col])
+    require_columns(df, [text_col, id_col])
     view = "_ts_chisq_in"
     df.createOrReplaceTempView(view)
     return df.sparkSession.sql(
@@ -1121,7 +1115,7 @@ def gini_feature_select(
     round_to: int = 6,
 ) -> DataFrame:
     """DataFrame entry point for :func:`gini_feature_select_sql`."""
-    _check(df, [text_col, id_col, label_col])
+    require_columns(df, [text_col, id_col, label_col])
     view = "_ts_gini_in"
     df.createOrReplaceTempView(view)
     return df.sparkSession.sql(
@@ -1208,7 +1202,7 @@ def hash_vectorize(
     dim: int = 64,
 ) -> DataFrame:
     """DataFrame entry point for :func:`hash_vectorize_sql`."""
-    _check(df, [text_col, id_col])
+    require_columns(df, [text_col, id_col])
     view = "_ts_fh_in"
     df.createOrReplaceTempView(view)
     return df.sparkSession.sql(

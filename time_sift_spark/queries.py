@@ -4067,10 +4067,10 @@ def ewma_horizon_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ewma_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user EWMA of event values via the partition-scan strategy
-    (mapInPandas, one Python call per partition with cross-batch carry) —
-    measured 8.6× faster than per-key applyInPandas at sf0.1 (0.62 s vs
-    5.3 s, 1500 keys) and bit-identical to it (pinned in unit tests).
+    """Per-user EWMA of event values on the keyed scan (mapInPandas, one
+    Python call per partition, the in-progress key held back across Arrow
+    batches) — the scan design because it measured 8.6× faster than a
+    per-key applyInPandas at sf0.1 (0.62 s vs 5.3 s, 1500 keys).
 
     ORACLE (closes the registry's last rows-only gap): the sequential
     recurrence y_t = (1-α)·y_{t-1} + α·x_t has no windowed-SQL form, but
@@ -4084,10 +4084,10 @@ def ewma_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     events.value (pandas would carry forward over NaN where SQL
     propagates NULL — the general operator documents not-null input
     for oracle-grade parity)."""
-    from .operators.ewma import ewma_scan
+    from .operators.ewma import ewma
 
     events = load_table(spark, "events", sf_dir)
-    return ewma_scan(
+    return ewma(
         events, "value", "ts", 0.3, partition_by="user_id", order_extra=("event_id",)
     )
 
@@ -8052,8 +8052,9 @@ def pack_sequences_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pretraining batch-construction step. Token counts are JVM-side
     regexp counts (functions/text_fns.bpe_token_count) computed BEFORE
     the per-source shuffle; the greedy recurrence itself is one
-    applyInPandas pass over (id, int) pairs per source shard; the
-    oracle replays it as a recursive CTE (operators/corpus.py)."""
+    keyed-scan loop over (id, int) pairs, resetting at each source
+    shard; the oracle replays it as a recursive CTE
+    (operators/corpus.py)."""
     from .functions.text_fns import SPARK as _S
     from .operators.corpus import pack_sequences
 

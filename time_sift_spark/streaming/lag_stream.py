@@ -437,7 +437,7 @@ def streaming_ewma(
 
     Contract: NULL values must be filtered upstream — pandas'
     ignore_na=False accumulates a WEIGHT state across NaNs that a
-    carried scalar cannot represent (the ewma_scan holdback note);
+    carried scalar cannot represent (the keyed_scan holdback note);
     with NULLs excluded the scalar is sufficient.  Late rows smooth in
     ARRIVAL order (the streaming-lag late-data contract).
     """

@@ -9,7 +9,11 @@ classes of rot this script makes mechanical:
 2. every registered query must be mentioned somewhere in SURVEY.md;
 3. every registered query must appear in GRADE_PRIORITY (ordering source);
 4. names in GRADE_PRIORITY must be registered (dead entries are ignored by
-   the loader, but they rot the reading of the priority list).
+   the loader, but they rot the reading of the priority list);
+5. every :func:`...` target in a ``time_sift_spark/`` docstring or comment
+   must name a function, class or module-level name defined in the
+   package (a dotted ``time_sift_spark.<module>.<name>`` target in that
+   module).
 
 Exit code 1 on any finding. Run per round before the final commit:
 
@@ -18,6 +22,7 @@ Exit code 1 on any finding. Run per round before the final commit:
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 import sys
@@ -27,6 +32,35 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 from time_sift_spark.queries import GRADE_PRIORITY, REGISTRY  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _dangling_func_refs() -> list[str]:
+    """``path: target`` for each :func: target in the package that names
+    nothing the package defines: a function or class at any depth
+    (methods included) or a module-level assignment — looked up in the
+    named module when the target is a dotted package path."""
+    sources, names = {}, {}
+    for root, _, files in os.walk(os.path.join(REPO, "time_sift_spark")):
+        for fn in sorted(f for f in files if f.endswith(".py")):
+            rel = os.path.relpath(os.path.join(root, fn), REPO)
+            mod = rel[:-3].replace(os.sep, ".").removesuffix(".__init__")
+            sources[rel] = open(os.path.join(REPO, rel)).read()
+            tree = ast.parse(sources[rel])
+            names[mod] = {
+                n.name for n in ast.walk(tree)
+                if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+            }
+            for n in tree.body:
+                targets = n.targets if isinstance(n, ast.Assign) else [getattr(n, "target", None)]
+                names[mod] |= {t.id for t in targets if isinstance(t, ast.Name)}
+    everywhere = set().union(*names.values())
+    bad = []
+    for rel, text in sources.items():
+        for target in re.findall(r":func:`~?\.?([\w.]+)`", text):
+            mod, _, name = target.rpartition(".")
+            if name not in names.get(mod, everywhere):
+                bad.append(f"{rel}: {target}")
+    return bad
 
 
 def main() -> int:
@@ -106,6 +140,11 @@ def main() -> int:
     dupes = [n for n in gp if GRADE_PRIORITY.count(n) > 1]
     for name in sorted(set(dupes)):
         print(f"GRADE_PRIORITY duplicate entry: {name}")
+        bad += 1
+
+    # 5. :func: cross-references in the package resolve
+    for ref in _dangling_func_refs():
+        print(f"dangling :func: reference: {ref}")
         bad += 1
 
     print(f"audit: {len(REGISTRY)} registered queries, {bad} finding(s)")

@@ -110,7 +110,7 @@ SHOWCASE = {
     "sorted_neighborhood_customer": "Sorted-neighborhood linkage: the per-block sort-and-LEAD window is STAGED once (checkpoint read in this plan) and the neighbor arms union over the staged frame - the one-statement form would recompute the window per arm (3 windows / 9 scans measured).",
     "attribution_revenue_events": "Attribution: the per-conversion window stage is materialized ONCE (checkpoint read in this plan - the one-statement oracle would recompute the timeline window per model arm); both model aggregations are bounded-key exchanges with decimal-exact revenue.",
     "dedup_incremental_fuzzy_docs": "Incremental FUZZY crawl screen: one aggregate signs the increment (MinHash MINs + shingle set, one groupBy exchange; the within-batch self-join's copy below becomes a ReusedExchange at execution); the increment bands, carrying the shingle sets, are BROADCAST into ONE scan of the one-row-per-doc store (sigs), whose band keys are posexploded at scan time - the stored shingle set rides on the joined row, so the exact-Jaccard verify needs no second store scan; no side-tag strings anywhere - the corpus is never re-signed, so increment cost is O(increment + candidates).",
-    "brown_trend_events": "Brown smoothing: the plan is the EWMA partition scan - ONE hash repartition + sortWithinPartitions feeding a single mapInPandas (two chained cython EWM passes inside; no per-key applyInPandas round-trips, no Python row loop).",
+    "brown_trend_events": "Brown smoothing: the plan is the keyed scan shared with EWMA and sequence packing - ONE hash repartition + sortWithinPartitions feeding a single mapInPandas (two chained cython EWM passes inside; no per-key applyInPandas round-trips, no Python row loop).",
     "markov_transitions_events": "Markov transitions: the LEAD window and the (src,dst) count are the two data exchanges; the per-src denominator window runs over the already-grouped matrix rows, never a join-back to the event stream.",
     "triangle_count_docs": "Triangle counting: orientation and wedge closure are plain equi-joins over the checkpointed oriented relation (referenced 3x - inlining would replan the edge construction 9x); NO global ROW_NUMBER window anywhere - rank is tuple-compared on carried (deg,id).",
     "clustering_coeff_docs": "Clustering coefficient: the triangle subtree plus ONE broadcast-sized degree left-join and a single exact-integer division; degree<2 nodes filtered before the join.",
