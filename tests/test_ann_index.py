@@ -657,6 +657,7 @@ def test_lsh_append_crash_recovery(spark, emb, tmp_path_factory):
     full build; buckets may carry duplicate rows, harmless because
     every consumer dedups candidates."""
     from time_sift_spark.functions.vector_fns import VSPARK as _VS
+    from time_sift_spark.operators.artifacts import read_params
     from time_sift_spark.operators.similarity import (
         _lsh_keys_select,
         append_lsh_index,
@@ -672,7 +673,7 @@ def test_lsh_append_crash_recovery(spark, emb, tmp_path_factory):
     # simulate the crash window: the buckets append landed, the
     # vectors append did not (exactly what a failure between the two
     # writes leaves behind under the buckets-first order)
-    p = spark.read.parquet(f"{inc_path}/params").collect()[0]
+    p = read_params(spark, inc_path)
     inc.createOrReplaceTempView("_lshcrash_inc")
     partial = spark.sql(
         "SELECT vec_id AS vid, embedding, "

@@ -1144,6 +1144,33 @@ def test_every_builder_invalidates_before_rebuild():
         assert ast.unparse(last.args[1]) == "path", name
 
 
+def _crash_marker_fs(monkeypatch, method):
+    """Make ``method`` of the marker's Hadoop FileSystem raise, for every
+    artifacts.py call until ``monkeypatch.undo()``."""
+    from time_sift_spark.operators import artifacts
+
+    real = artifacts._marker
+
+    class Crashing:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def __getattr__(self, name):
+            if name != method:
+                return getattr(self._fs, name)
+
+            def crash(*a, **k):
+                raise RuntimeError(f"injected crash in {method}")
+
+            return crash
+
+    def marker(spark, path):
+        fs, m = real(spark, path)
+        return Crashing(fs), m
+
+    monkeypatch.setattr(artifacts, "_marker", marker)
+
+
 def test_torn_rebuild_reads_not_ready(spark, tmp_path, monkeypatch):
     """A rebuild that crashes after artifacts start landing but before
     the new params write leaves the index NOT ready (the old marker was
@@ -1159,11 +1186,8 @@ def test_torn_rebuild_reads_not_ready(spark, tmp_path, monkeypatch):
     build_dedup_index(corpus, "doc_id", "text", path)
     assert _index_ready(path)
 
-    def boom(*a, **k):
-        raise RuntimeError("injected crash before the params write")
-
-    monkeypatch.setattr(spark, "range", boom)  # the params marker's literal row
-    with pytest.raises(RuntimeError):
+    _crash_marker_fs(monkeypatch, "create")  # the marker file's write
+    with pytest.raises(RuntimeError, match="injected crash in create"):
         build_dedup_index(corpus, "doc_id", "text", path)
     monkeypatch.undo()
     assert not _index_ready(path)  # torn rebuild is visible, not silent
@@ -1173,17 +1197,17 @@ def test_torn_rebuild_reads_not_ready(spark, tmp_path, monkeypatch):
 
 def test_store_markers_write_no_python_row(spark, tmp_path, monkeypatch):
     """The MinHash store and the Bloom filter commit their params marker
-    with SparkSession.createDataFrame patched to raise: the marker row is
-    built from literals.  It is one part file, its written schema is the
-    store's declared DDL, and read_params returns the builder's values."""
+    with SparkSession.createDataFrame patched to raise: no Python row is
+    written.  read_params returns the builder's values with their Python
+    types, and rewriting or reading the marker submits no Spark job."""
     import os
 
     from pyspark.sql import SparkSession
-    from pyspark.sql.types import DataType
 
-    from time_sift_spark.operators.artifacts import read_params
-    from time_sift_spark.operators.dedup import _MHF_PARAMS, build_minhash_store
-    from time_sift_spark.operators.sketch import _BLOOM_PARAMS, build_bloom_filter
+    from tests.test_sources import _jobs
+    from time_sift_spark.operators.artifacts import begin_build, commit_build, read_params
+    from time_sift_spark.operators.dedup import build_minhash_store
+    from time_sift_spark.operators.sketch import build_bloom_filter
 
     corpus = _fz_frame(spark, [(1, _fz_doc(1)), (2, _fz_doc(2))])
 
@@ -1194,21 +1218,84 @@ def test_store_markers_write_no_python_row(spark, tmp_path, monkeypatch):
     mh, bloom = str(tmp_path / "mh"), str(tmp_path / "bloom")
     build_minhash_store(corpus, "doc_id", "text", mh, num_perm=32, bands=16, shingle_k=2, seed=7)
     build_bloom_filter(corpus, "text", bloom, m=4096, k=3)
-    monkeypatch.undo()
-    for path, ddl, want in (
-        (mh, _MHF_PARAMS, dict(id_col="doc_id", text_col="text", num_perm=32, bands=16,
-                               shingle_k=2, seed=7)),
-        (bloom, _BLOOM_PARAMS, dict(text_col="text", m=4096, k=3)),
+    for path, want in (
+        (mh, dict(id_col="doc_id", text_col="text", num_perm=32, bands=16, shingle_k=2,
+                  seed=7)),
+        (bloom, dict(text_col="text", m=4096, k=3)),
     ):
-        assert read_params(spark, path, ddl).asDict() == want
-        # read back WITHOUT a declared schema: the types as written
-        assert spark.read.parquet(f"{path}/params").schema == DataType.fromDDL(ddl)
-        parts = [f for f in os.listdir(f"{path}/params") if f.startswith("part-")]
-        assert len(parts) == 1, parts
-    # a marker write that died before its part file landed reads as an error
-    os.makedirs(tmp_path / "torn" / "params" / "_temporary")
+        with _jobs(spark) as read_jobs:
+            got = read_params(spark, path)
+        assert got == want
+        assert {k: type(v) for k, v in got.items()} == {k: type(v) for k, v in want.items()}
+        with _jobs(spark) as commit_jobs:  # the marker's delete and rewrite
+            begin_build(spark, path)
+            commit_build(spark, path, want)
+        assert read_jobs == commit_jobs == [], (read_jobs, commit_jobs)
+        assert read_params(spark, path) == want
+        visible = [f for f in os.listdir(f"{path}/params") if not f.startswith(".")]
+        assert visible == ["marker.json"], visible
+    monkeypatch.undo()
+    # a marker write that died before its rename reads as an error
+    torn = tmp_path / "torn" / "params"
+    os.makedirs(torn)
+    (torn / "marker.json.tmp").write_text('{"text_col": "text", "m": 4096, "k": 3}')
     with pytest.raises(FileNotFoundError, match="never completed"):
-        read_params(spark, str(tmp_path / "torn"), _BLOOM_PARAMS)
+        read_params(spark, str(tmp_path / "torn"))
+
+
+def test_crash_before_marker_rename_reads_not_ready(spark, tmp_path, monkeypatch):
+    """A rebuild that dies after the marker's temp file is written but
+    before its rename leaves the store not ready and read_params
+    raising; a clean rebuild then serves again."""
+    import os
+
+    from time_sift_spark.operators.artifacts import read_params
+    from time_sift_spark.operators.dedup import build_minhash_store, screen_new_docs_fuzzy
+    from time_sift_spark.queries import _index_ready
+
+    path = str(tmp_path / "mh")
+    corpus = _fz_frame(spark, [(1, _fz_doc(1)), (2, _fz_doc(2))])
+    build_minhash_store(corpus, "doc_id", "text", path)
+    _crash_marker_fs(monkeypatch, "rename")
+    with pytest.raises(RuntimeError, match="injected crash in rename"):
+        build_minhash_store(corpus, "doc_id", "text", path)
+    monkeypatch.undo()
+    assert [f for f in os.listdir(f"{path}/params") if not f.startswith(".")] == [
+        "marker.json.tmp"
+    ]
+    assert not _index_ready(path)
+    with pytest.raises(FileNotFoundError, match="never completed"):
+        read_params(spark, path)
+    with pytest.raises(FileNotFoundError, match="never completed"):
+        screen_new_docs_fuzzy(spark, path, corpus)
+    build_minhash_store(corpus, "doc_id", "text", path)
+    assert _index_ready(path)
+    assert not screen_new_docs_fuzzy(spark, path, corpus).toPandas().accepted.any()
+
+
+def test_old_parquet_params_store_reads_not_ready(spark, tmp_path):
+    """A store written by older code (a one-row parquet ``params`` table,
+    no ``marker.json``) reads as not ready, and read_params refuses it
+    instead of falling back: the registry rebuilds such a store."""
+    import shutil
+
+    from time_sift_spark.operators.artifacts import read_params, write_row
+    from time_sift_spark.operators.dedup import build_minhash_store
+    from time_sift_spark.queries import _index_ready
+
+    path = str(tmp_path / "mh_old")
+    corpus = _fz_frame(spark, [(1, _fz_doc(1)), (2, _fz_doc(2))])
+    build_minhash_store(corpus, "doc_id", "text", path)
+    params = read_params(spark, path)
+    shutil.rmtree(f"{path}/params")
+    write_row(spark, f"{path}/params", params,
+              "id_col string, text_col string, num_perm int, bands int, shingle_k int, seed int")
+    assert spark.read.parquet(f"{path}/params").first().asDict() == params
+    assert not _index_ready(path)
+    with pytest.raises(FileNotFoundError, match="never completed"):
+        read_params(spark, path)
+    build_minhash_store(corpus, "doc_id", "text", path)
+    assert _index_ready(path) and read_params(spark, path) == params
 
 
 def test_uri_rebuild_crash_removes_marker(spark, tmp_path, monkeypatch):

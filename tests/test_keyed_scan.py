@@ -111,3 +111,34 @@ def test_keyed_scan_plans_one_exchange_one_map_in_pandas(spark):
         assert plan.count("Exchange hashpartitioning") == 1, plan
         assert plan.count("MapInPandas") == 1, plan
         assert "FlatMapGroupsInPandas" not in plan, plan
+
+
+def test_pack_sequences_oracle_sql_matches_on_null_groups_and_counts(spark):
+    """The DuckDB recurrence packs a NULL ``source`` group of 3+ rows and
+    a mid-group NULL count as pack_sequences does: NULL keys form one
+    group and a NULL count packs as 0 tokens (its output stays NULL)."""
+    import duckdb
+
+    from time_sift_spark.operators.corpus import pack_sequences_oracle_sql
+
+    rows = [
+        ("a", 1, 5), ("a", 2, None), ("a", 3, 4), ("a", 4, 3), ("a", 5, 6),
+        (None, 6, 4), (None, 7, 5), (None, 8, 3), (None, 9, 7),
+        ("b", 10, None), ("b", 11, 9), ("b", 12, 2),
+    ]
+    schema = "source string, doc_id long, n_tokens long"
+    got = {
+        (r.source, r.doc_id): (r.n_tokens, r.bin_id)
+        for r in pack_sequences(
+            spark.createDataFrame(rows, schema), "n_tokens", "doc_id", budget=10
+        ).collect()
+    }
+    con = duckdb.connect()
+    con.register("docs", pd.DataFrame(rows, columns=["source", "doc_id", "n_tokens"]))
+    sql = pack_sequences_oracle_sql("docs", "n_tokens", "doc_id", budget=10)
+    want = {
+        (s, d): (None if pd.isna(n) else int(n), b)
+        for s, d, n, b in con.execute(sql).fetchall()
+    }
+    assert len(got) == len(want) == len(rows)
+    assert got == want

@@ -267,19 +267,55 @@ def _store_builds(spark, sf_dir):
     }
 
 
+# What read_params gave for each store under the typed parquet marker (one
+# DDL per store): the JSON marker must give the same values and types.
+_MARKERS = {
+    "dedup": dict(id_col="doc_id", text_col="text"),
+    "minhash": dict(id_col="doc_id", text_col="text", num_perm=16, bands=8, shingle_k=3,
+                    seed=42),
+    "prefix": dict(num=1, den=2, shingle_k=3, id_col="doc_id", text_col="text"),
+    "containment": dict(id_col="doc_id", text_col="text", shingle_k=3),
+    "lsh": dict(id_col="vec_id", vec_col="embedding", num_planes=6, num_tables=1, seed=42,
+                dim=64),
+    "ivf": dict(id_col="vec_id", vec_col="embedding", num_centroids=8),
+    "refined_ivf": dict(id_col="vec_id", vec_col="embedding", num_centroids=8,
+                        multi_assign=2, lloyd_iters=1),
+    "pq": dict(id_col="vec_id", vec_col="embedding", m=16, sub_dim=4, k_codes=8,
+               lloyd_iters=1),
+    "ivfpq": dict(id_col="vec_id", vec_col="embedding", num_cells=4, cell_lloyd_iters=1,
+                  m=16, sub_dim=4, k_codes=8, lloyd_iters=1),
+    "sq8": dict(id_col="vec_id", vec_col="embedding"),
+    "bm25": dict(id_col="doc_id", text_col="text"),
+    "phrase": dict(id_col="doc_id", text_col="text"),
+    "quality": dict(id_col="doc_id", text_col="text", alpha=0.5, n_buckets=65536,
+                    round_to=6),
+    "bloom": dict(text_col="text", m=4096, k=3),
+}
+
+
 def test_every_store_artifact_reads_with_the_inferred_schema(spark, sf_dir, tmp_path):
-    """Each of the 14 store builders' artifacts (params included) reads
-    through read_artifact with no job and with inference's schema."""
-    from time_sift_spark.operators.artifacts import read_artifact
+    """Each of the 14 store builders' artifact tables reads through
+    read_artifact with no job and with inference's schema, and its
+    params marker reads through read_params with no job, as the dict
+    (value types included) that the DDL-typed parquet marker gave."""
+    from time_sift_spark.operators.artifacts import read_artifact, read_params
 
     builds = _store_builds(spark, sf_dir)
-    assert len(builds) == 14
+    assert builds.keys() == _MARKERS.keys()
     for store, build in builds.items():
         path = str(tmp_path / store)
         build(path)
         names = sorted(n for n in os.listdir(path) if not n.startswith(("_", ".")))
         assert "params" in names and len(names) >= 2, (store, names)
+        with _jobs(spark) as ids:
+            got = read_params(spark, path)
+        assert ids == [], store
+        want = _MARKERS[store]
+        assert got == want, store
+        assert [type(v) for v in got.values()] == [type(want[k]) for k in got], store
         for name in names:
+            if name == "params":
+                continue
             with _jobs(spark) as ids:
                 df = read_artifact(spark, path, name)
             assert ids == [], (store, name)
@@ -287,22 +323,19 @@ def test_every_store_artifact_reads_with_the_inferred_schema(spark, sf_dir, tmp_
 
 
 def test_fuzzy_screen_setup_runs_only_the_marker_read(spark, sf_dir, tmp_path):
-    """Registering the MinHash screen's views reads ``sigs`` with no job:
-    the screen's set-up submits exactly the jobs of its read_params."""
+    """Registering the MinHash screen's views reads ``sigs`` with no job,
+    and its read_params reads the marker on the driver: the screen's
+    set-up submits no job."""
     from time_sift_spark.operators.artifacts import read_params
-    from time_sift_spark.operators.dedup import (
-        _MHF_PARAMS,
-        build_minhash_store,
-        screen_new_docs_fuzzy,
-    )
+    from time_sift_spark.operators.dedup import build_minhash_store, screen_new_docs_fuzzy
 
     docs = catalog.load_table(spark, "documents", sf_dir).limit(40)
     path = str(tmp_path / "mh")
     build_minhash_store(docs, "doc_id", "text", path)
     with _jobs(spark) as marker:
-        read_params(spark, path, _MHF_PARAMS)
+        read_params(spark, path)
     with _jobs(spark) as screen:
         out = screen_new_docs_fuzzy(spark, path, docs)
-    assert len(marker) == 1
-    assert len(screen) == len(marker)
+    assert marker == []
+    assert screen == []
     assert not out.toPandas().accepted.any()

@@ -458,9 +458,10 @@ def pack_sequences_oracle_sql(
     group_by: Sequence[str] = ("source",),
 ) -> str:
     """The same greedy recurrence as a DuckDB recursive CTE (rn → rn+1
-    per group, carrying the open bin's fill)."""
+    per group, carrying the open bin's fill).  As in pack_sequences, NULL
+    group keys form one group and a NULL token count fills 0 tokens."""
     g = ", ".join(group_by)
-    gj = " AND ".join(f"s.{c} = r.{c}" for c in group_by)
+    gj = " AND ".join(f"s.{c} IS NOT DISTINCT FROM r.{c}" for c in group_by)
     sg = ", ".join(f"s.{c}" for c in group_by)
     b = int(budget)
     return f"""
@@ -471,14 +472,15 @@ def pack_sequences_oracle_sql(
     ),
     rec AS (
       SELECT {g}, {order_col}, n_tokens, rn,
-             CAST(0 AS BIGINT) AS bin_id, n_tokens AS fill
+             CAST(0 AS BIGINT) AS bin_id, coalesce(n_tokens, 0) AS fill
       FROM seq WHERE rn = 1
       UNION ALL
       SELECT {sg}, s.{order_col}, s.n_tokens, s.rn,
-             CASE WHEN r.fill > 0 AND r.fill + s.n_tokens > {b}
+             CASE WHEN r.fill > 0 AND r.fill + coalesce(s.n_tokens, 0) > {b}
                   THEN r.bin_id + 1 ELSE r.bin_id END AS bin_id,
-             CASE WHEN r.fill > 0 AND r.fill + s.n_tokens > {b}
-                  THEN s.n_tokens ELSE r.fill + s.n_tokens END AS fill
+             CASE WHEN r.fill > 0 AND r.fill + coalesce(s.n_tokens, 0) > {b}
+                  THEN coalesce(s.n_tokens, 0)
+                  ELSE r.fill + coalesce(s.n_tokens, 0) END AS fill
       FROM rec r JOIN seq s ON {gj} AND s.rn = r.rn + 1
     )
     SELECT {g}, {order_col}, n_tokens, bin_id FROM rec

@@ -30,12 +30,6 @@ from ..errors import ColumnNotFoundError, require_columns
 from ..functions.text_fns import Dialect
 from .artifacts import begin_build, commit_build, read_artifact, read_params
 
-# params (completeness marker) DDL of each store, for its builder and readers
-_DEDUP_INDEX_PARAMS = "id_col string, text_col string"
-_MHF_PARAMS = "id_col string, text_col string, num_perm int, bands int, shingle_k int, seed int"
-_PREFIX_INDEX_PARAMS = "num int, den int, shingle_k int, id_col string, text_col string"
-_CONTAINMENT_PARAMS = "id_col string, text_col string, shingle_k int"
-
 MERSENNE31 = 2_147_483_647  # 2^31 - 1
 
 
@@ -508,7 +502,7 @@ def build_dedup_index(df: DataFrame, id_col: str, text_col: str, path: str) -> N
         f"FROM {view} GROUP BY md5({text_col})"
     )
     hashes.repartition("text_hash").write.mode("overwrite").parquet(f"{path}/hashes")
-    commit_build(spark, path, dict(id_col=id_col, text_col=text_col), _DEDUP_INDEX_PARAMS)
+    commit_build(spark, path, dict(id_col=id_col, text_col=text_col))
 
 
 def screen_new_docs(spark, path: str, new_df: DataFrame) -> DataFrame:
@@ -519,7 +513,7 @@ def screen_new_docs(spark, path: str, new_df: DataFrame) -> DataFrame:
     The corpus side never re-scans — the anti-join touches the stored
     hash table only; within-batch dedup is one partial-aggregated
     groupBy over the increment."""
-    p = read_params(spark, path, _DEDUP_INDEX_PARAMS)
+    p = read_params(spark, path)
     id_col, text_col = p["id_col"], p["text_col"]
     require_columns(new_df, (id_col, text_col))
     from pyspark.sql import functions as F
@@ -541,7 +535,7 @@ def append_dedup_index(spark, path: str, accepted: DataFrame) -> None:
     rebuild, the BM25 incremental-index contract). After the append, a
     re-screen of the same increment admits nothing — ingestion is
     idempotent (pinned in tests/test_dedup_similarity.py)."""
-    p = read_params(spark, path, _DEDUP_INDEX_PARAMS)
+    p = read_params(spark, path)
     accepted.selectExpr(
         "text_hash", f"{p['id_col']} AS kept_id"
     ).repartition("text_hash").write.mode("append").parquet(f"{path}/hashes")
@@ -1944,7 +1938,7 @@ def build_minhash_store(
     p = dict(id_col=id_col, text_col=text_col, num_perm=num_perm, bands=bands,
              shingle_k=shingle_k, seed=seed)
     _write_minhash_store(spark, "_ts_mhf_build", path, "overwrite", p)
-    commit_build(spark, path, p, _MHF_PARAMS)
+    commit_build(spark, path, p)
 
 
 def screen_new_docs_fuzzy(
@@ -1968,7 +1962,7 @@ def screen_new_docs_fuzzy(
     # and the final sql() must run on new_df's OWN session or the views
     # resolve against the wrong catalog (streaming_dedup_fuzzy_docs).
     spark = new_df.sparkSession
-    p = read_params(spark, path, _MHF_PARAMS)
+    p = read_params(spark, path)
     id_col, text_col = p["id_col"], p["text_col"]
     require_columns(new_df, (id_col, text_col))
     nview = "_ts_mhf_new"
@@ -2010,7 +2004,7 @@ def append_minhash_store(spark, path: str, accepted_docs: DataFrame) -> None:
     increment afterwards admits nothing: each accepted doc now has its
     exact twin (Jaccard 1.0) in the store."""
     spark = accepted_docs.sparkSession  # foreachBatch clone safety, as above
-    p = read_params(spark, path, _MHF_PARAMS)
+    p = read_params(spark, path)
     id_col, text_col = p["id_col"], p["text_col"]
     require_columns(accepted_docs, (id_col, text_col))
     seen = read_artifact(spark, path, "sigs").select("did")
@@ -2253,7 +2247,7 @@ def build_prefix_index(
         f"{head}\nSELECT did, {tset} AS hs FROM _pph GROUP BY did"
     ).repartition("did").write.mode("overwrite").parquet(f"{path}/tsets")
     commit_build(spark, path, dict(num=num, den=den, shingle_k=shingle_k, id_col=id_col,
-                                   text_col=text_col), _PREFIX_INDEX_PARAMS)
+                                   text_col=text_col))
 
 
 def query_prefix_index(
@@ -2269,7 +2263,7 @@ def query_prefix_index(
     — the stored prefixes are too short to guarantee recall there.
     Output ≡ :func:`prefix_jaccard_join_sql` at θ' (persisted ≡ inline,
     driver-proven through the registered query's inline oracle)."""
-    p = read_params(spark, path, _PREFIX_INDEX_PARAMS)
+    p = read_params(spark, path)
     num, den = int(p["num"]), int(p["den"])
     if threshold is None:
         qn, qd = num, den
@@ -2734,8 +2728,7 @@ def build_containment_index(
     spark.sql(
         "SELECT h, CAST(COUNT(*) AS BIGINT) AS dfc FROM _ts_csb_hd GROUP BY h"
     ).write.mode("overwrite").parquet(f"{path}/df")
-    commit_build(spark, path, dict(id_col=id_col, text_col=text_col, shingle_k=shingle_k),
-                 _CONTAINMENT_PARAMS)
+    commit_build(spark, path, dict(id_col=id_col, text_col=text_col, shingle_k=shingle_k))
 
 
 def screen_docs_containment(
@@ -2756,7 +2749,7 @@ def screen_docs_containment(
     :func:`containment_screen_oracle_sql` statement (driver-proven)."""
     from ..functions.text_fns import SPARK as _S
 
-    p = read_params(spark, path, _CONTAINMENT_PARAMS)
+    p = read_params(spark, path)
     id_col, text_col, shingle_k = p["id_col"], p["text_col"], p["shingle_k"]
     require_columns(docs, (id_col, text_col))
     num, den = int(threshold[0]), int(threshold[1])

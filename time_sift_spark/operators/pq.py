@@ -45,14 +45,6 @@ from ..functions.vector_fns import VectorDialect
 from ._num import dec_to_double
 from .artifacts import begin_build, commit_build, read_artifact, read_params
 
-# params (completeness marker) DDL of each store, for its builder and readers
-_IVFPQ_PARAMS = (
-    "id_col string, vec_col string, num_cells int, cell_lloyd_iters int, "
-    "m int, sub_dim int, k_codes int, lloyd_iters int"
-)
-_PQ_PARAMS = "id_col string, vec_col string, m int, sub_dim int, k_codes int, lloyd_iters int"
-_SQ8_PARAMS = "id_col string, vec_col string"
-
 _VSPARK = VectorDialect("spark")
 _VIEW_SEQ = [0]
 
@@ -696,7 +688,7 @@ def build_ivfpq_index(
     commit_build(spark, path, dict(
         id_col=id_col, vec_col=vec_col, num_cells=num_cells, cell_lloyd_iters=cell_lloyd_iters,
         m=m, sub_dim=sub_dim, k_codes=k_codes, lloyd_iters=lloyd_iters,
-    ), _IVFPQ_PARAMS)
+    ))
 
 
 def query_ivfpq_index(
@@ -708,7 +700,7 @@ def query_ivfpq_index(
     probed cells' code rows, the (s, cid) distance-table join, the
     exact-decimal ADC collapse, and the exact re-rank — NO training,
     NO data-side encode anywhere in the plan (asserted in tests)."""
-    p = read_params(spark, path, _IVFPQ_PARAMS)
+    p = read_params(spark, path)
     m, sub_dim = p["m"], p["sub_dim"]
     vview, cview, aview, cbview, coview = (
         _next_view(), _next_view(), _next_view(), _next_view(), _next_view()
@@ -841,7 +833,7 @@ def build_pq_index(
     """)
     codes.repartition("s", "cid").write.mode("overwrite").parquet(f"{path}/codes")
     commit_build(spark, path, dict(id_col=id_col, vec_col=vec_col, m=m, sub_dim=sub_dim,
-                                   k_codes=k_codes, lloyd_iters=lloyd_iters), _PQ_PARAMS)
+                                   k_codes=k_codes, lloyd_iters=lloyd_iters))
 
 
 def query_pq_index(
@@ -853,7 +845,7 @@ def query_pq_index(
     the (s, cid) equi-join against the compressed codes frame, the
     exact-decimal ADC collapse, and the exact re-rank of the top-C —
     no training, no data-side encode (asserted in tests)."""
-    p = read_params(spark, path, _PQ_PARAMS)
+    p = read_params(spark, path)
     m, sub_dim = p["m"], p["sub_dim"]
     vview, cbview, coview = _next_view(), _next_view(), _next_view()
     read_artifact(spark, path, "vectors").createOrReplaceTempView(vview)
@@ -1141,7 +1133,7 @@ def build_sq8_index(df: DataFrame, id_col: str, vec_col: str, path: str) -> None
       SELECT vid, {_sq8_quant(vd)} AS code
       FROM (SELECT vid, emb FROM {vview}) _sqv CROSS JOIN {sview}
     """).write.mode("overwrite").parquet(f"{path}/codes")
-    commit_build(spark, path, dict(id_col=id_col, vec_col=vec_col), _SQ8_PARAMS)
+    commit_build(spark, path, dict(id_col=id_col, vec_col=vec_col))
 
 
 def query_sq8_index(
@@ -1151,7 +1143,7 @@ def query_sq8_index(
     code-frame scan + dequantized scoring + the |Q|·shortlist exact
     re-rank — no stats pass, no encode (``query_pred`` sees the stored
     vector columns vid/emb/nrm)."""
-    read_params(spark, path, _SQ8_PARAMS)  # build-complete gate
+    read_params(spark, path)  # build-complete gate
     vview, sview, cview = _next_view(), _next_view(), _next_view()
     read_artifact(spark, path, "vectors").createOrReplaceTempView(vview)
     read_artifact(spark, path, "stats").createOrReplaceTempView(sview)

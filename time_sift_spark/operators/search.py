@@ -51,10 +51,7 @@ from ..errors import ColumnNotFoundError, require_columns
 from ..functions.text_fns import DUCK, SPARK, Dialect
 from .artifacts import begin_build, commit_build, read_artifact, read_params, write_row
 
-# params (completeness marker) DDL of each store, for its builder and readers
-_BM25_PARAMS = "id_col string, text_col string"
 _BM25_STATS = "n_docs long, sum_dl long"  # the one-row corpus totals
-_PHRASE_PARAMS = "id_col string, text_col string"
 
 __all__ = [
     "bm25_topk",
@@ -246,8 +243,9 @@ def build_text_index(
     per query: ``{path}/postings`` (term, id, tf, dl) — the full
     (document, term) frequency table, repartitioned by term so a reader
     gets term-clustered files — and ``{path}/stats`` (one row: n_docs,
-    sum_dl).  ``{path}/params`` is written LAST, so its _SUCCESS marker
-    implies a complete build (the queries._index_ready contract).
+    sum_dl).  The ``{path}/params`` marker is committed LAST, so its
+    presence implies a complete build (the ``operators/artifacts.py``
+    contract).
 
     At 100 TB: tokenize-explode-count is paid ONCE over the corpus;
     every query then reads only the row groups whose term column
@@ -273,7 +271,7 @@ def build_text_index(
     base.agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
     ).write.mode("overwrite").parquet(f"{path}/stats")
-    commit_build(spark, path, dict(id_col=id_col, text_col=text_col), _BM25_PARAMS)
+    commit_build(spark, path, dict(id_col=id_col, text_col=text_col))
 
 
 def query_text_index(
@@ -300,7 +298,7 @@ def query_text_index(
         raise ValueError("query_text_index needs at least one query term")
     if max_df_frac is not None and not (0.0 < max_df_frac <= 1.0):
         raise ValueError(f"max_df_frac must be in (0, 1], got {max_df_frac}")
-    p = read_params(spark, path, _BM25_PARAMS)
+    p = read_params(spark, path)
     id_col = p["id_col"]
     tf = read_artifact(spark, path, "postings").where(F.col("term").isin(terms))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -349,7 +347,7 @@ def append_text_index(
     appending it to the corpus would.
     """
     spark = docs.sparkSession
-    p = read_params(spark, path, _BM25_PARAMS)
+    p = read_params(spark, path)
     id_col, text_col = p["id_col"], p["text_col"]
     require_columns(docs, (text_col, id_col))
     base = docs.select(
@@ -592,7 +590,7 @@ def build_phrase_index(
     postings.repartition("term").write.mode("overwrite").parquet(
         f"{path}/postings_pos"
     )
-    commit_build(spark, path, dict(id_col=id_col, text_col=text_col), _PHRASE_PARAMS)
+    commit_build(spark, path, dict(id_col=id_col, text_col=text_col))
 
 
 def query_phrase_index(
@@ -611,7 +609,7 @@ def query_phrase_index(
     if not terms:
         raise ValueError("query_phrase_index needs at least one term")
     m = len(terms)
-    p = read_params(spark, path, _PHRASE_PARAMS)
+    p = read_params(spark, path)
     id_col = p["id_col"]
     qrel = spark.createDataFrame(
         [(t, i) for i, t in enumerate(terms)], "qt string, off int"
@@ -646,7 +644,7 @@ def append_phrase_index(
     tests).  Caller owns id uniqueness across appends (re-appending a
     doc double-counts its matches, exactly as the corpus union would).
     """
-    p = read_params(docs.sparkSession, path, _PHRASE_PARAMS)
+    p = read_params(docs.sparkSession, path)
     id_col, text_col = p["id_col"], p["text_col"]
     require_columns(docs, (text_col, id_col))
     postings = (

@@ -29,13 +29,6 @@ from ..errors import ColumnNotFoundError, require_columns
 from ..functions.vector_fns import VectorDialect, random_hyperplanes
 from .artifacts import begin_build, commit_build, read_artifact, read_params
 
-# params (completeness marker) DDL of each store, for its builder and readers
-_LSH_PARAMS = "id_col string, vec_col string, num_planes int, num_tables int, seed int, dim int"
-_IVF_PARAMS = "id_col string, vec_col string, num_centroids int"
-_RIVF_PARAMS = (
-    "id_col string, vec_col string, num_centroids int, multi_assign int, lloyd_iters int"
-)
-
 _VSPARK = VectorDialect("spark")
 _VIEW_SEQ = [0]
 
@@ -1333,8 +1326,8 @@ def build_lsh_index(
 ) -> None:
     """Materialize the LSH structures the inline :func:`ann_lsh_topk`
     recomputes per query: ``{path}/vectors`` (vid, vector, norm),
-    ``{path}/buckets`` (vid, bkey — one row per table), and a one-row
-    ``{path}/params`` table so the query side rebuilds the IDENTICAL
+    ``{path}/buckets`` (vid, bkey — one row per table), and the
+    ``{path}/params`` marker so the query side rebuilds the IDENTICAL
     literal hyperplanes from the seed. Bucket keys come from the same
     generator as the inline query (`_lsh_keys_select`), so
     build→query returns exactly what the inline query returns — that is
@@ -1368,7 +1361,7 @@ def build_lsh_index(
     )
     buckets.repartition("bkey").write.mode("overwrite").parquet(f"{path}/buckets")
     commit_build(spark, path, dict(id_col=id_col, vec_col=vec_col, num_planes=num_planes,
-                                   num_tables=num_tables, seed=seed, dim=dim), _LSH_PARAMS)
+                                   num_tables=num_tables, seed=seed, dim=dim))
 
 
 def query_lsh_index(
@@ -1383,7 +1376,7 @@ def query_lsh_index(
     expands the query-side probes with 1-bit-flip neighbor buckets — a
     recall knob that needs NO rebuild: the stored single-bucket-per-table
     index serves exact and multiprobe queries alike."""
-    p = read_params(spark, path, _LSH_PARAMS)
+    p = read_params(spark, path)
     vview, bview = _next_view(), _next_view()
     read_artifact(spark, path, "vectors").createOrReplaceTempView(vview)
     read_artifact(spark, path, "buckets").createOrReplaceTempView(bview)
@@ -1457,7 +1450,7 @@ def append_lsh_index(spark, path: str, df: DataFrame) -> None:
     write; the 100 TB posture is unchanged (builds are one-time,
     appends pay the increment plus one pruned lookup column).
     """
-    p = read_params(spark, path, _LSH_PARAMS)
+    p = read_params(spark, path)
     id_col, vec_col = p["id_col"], p["vec_col"]
     require_columns(df, (id_col, vec_col))
     spark = df.sparkSession  # foreachBatch clone safety
@@ -1583,7 +1576,7 @@ def screen_new_vectors_lsh(
     embedding space).  Output ≡ :func:`lsh_screen_sql` (persisted ≡
     inline, driver-proven): ({id_col}, max_cosine, accepted)."""
     spark = new_df.sparkSession  # foreachBatch clone safety
-    p = read_params(spark, path, _LSH_PARAMS)
+    p = read_params(spark, path)
     id_col, vec_col = p["id_col"], p["vec_col"]
     require_columns(new_df, (id_col, vec_col))
     nview = _next_view()
@@ -1672,8 +1665,7 @@ def build_ivf_index(
       ) WHERE crank = 1
     """)
     assigned.repartition("cid").write.mode("overwrite").parquet(f"{path}/assigned")
-    commit_build(spark, path, dict(id_col=id_col, vec_col=vec_col, num_centroids=num_centroids),
-                 _IVF_PARAMS)
+    commit_build(spark, path, dict(id_col=id_col, vec_col=vec_col, num_centroids=num_centroids))
 
 
 def query_ivf_index(
@@ -1685,7 +1677,7 @@ def query_ivf_index(
     build-time n×K assignment and the centroid sample are read, not
     recomputed (the executed plan has no TakeOrderedAndProject for the
     sample and no n×K assignment window — asserted in tests)."""
-    p = read_params(spark, path, _IVF_PARAMS)
+    p = read_params(spark, path)
     aview, cview = _next_view(), _next_view()
     read_artifact(spark, path, "assigned").createOrReplaceTempView(aview)
     read_artifact(spark, path, "centroids").createOrReplaceTempView(cview)
@@ -1737,7 +1729,7 @@ def append_ivf_index(spark, path: str, df: DataFrame) -> None:
 
     Idempotent via the same vid anti-join as :func:`append_lsh_index`.
     """
-    p = read_params(spark, path, _IVF_PARAMS)
+    p = read_params(spark, path)
     id_col, vec_col = p["id_col"], p["vec_col"]
     require_columns(df, (id_col, vec_col))
     spark = df.sparkSession  # foreachBatch clone safety
@@ -1828,7 +1820,7 @@ def build_refined_ivf_index(
     commit_build(spark, path, dict(
         id_col=id_col, vec_col=vec_col, num_centroids=num_centroids,
         multi_assign=multi_assign, lloyd_iters=lloyd_iters,
-    ), _RIVF_PARAMS)
+    ))
 
 
 def query_refined_ivf_index(

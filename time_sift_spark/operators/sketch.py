@@ -34,9 +34,6 @@ from ..errors import ColumnNotFoundError, require_columns
 from ..functions.text_fns import SPARK, Dialect
 from .artifacts import begin_build, commit_build, read_artifact, read_params
 
-# params (completeness marker) DDL of each store, for its builder and readers
-_BLOOM_PARAMS = "text_col string, m int, k int"
-
 __all__ = [
     "linear_count_distinct",
     "linear_count_distinct_sql",
@@ -716,7 +713,7 @@ def build_bloom_filter(
     spark.sql(bloom_bits_sql(SPARK, view, text_col, m=m, k=k)).write.mode(
         "overwrite"
     ).parquet(f"{path}/bits")
-    commit_build(spark, path, dict(text_col=text_col, m=m, k=k), _BLOOM_PARAMS)
+    commit_build(spark, path, dict(text_col=text_col, m=m, k=k))
 
 
 def bloom_screen_persisted(spark, path: str, new_df: DataFrame, id_col: str) -> DataFrame:
@@ -725,7 +722,7 @@ def bloom_screen_persisted(spark, path: str, new_df: DataFrame, id_col: str) -> 
     (broadcastable) and the increment.  Output ≡ the inline screen with
     ``with_truth=False`` (persisted ≡ inline, driver-proven)."""
     spark = new_df.sparkSession  # foreachBatch clone safety
-    p = read_params(spark, path, _BLOOM_PARAMS)
+    p = read_params(spark, path)
     text_col = p["text_col"]
     require_columns(new_df, (id_col, text_col))
     new_df.createOrReplaceTempView("_ts_bloom_new")
@@ -979,7 +976,7 @@ def append_bloom_filter(spark, path: str, accepted_docs: DataFrame) -> None:
     same increment reports every appended doc possibly_seen
     (idempotent ingestion, pinned in tests)."""
     spark = accepted_docs.sparkSession  # foreachBatch clone safety
-    p = read_params(spark, path, _BLOOM_PARAMS)
+    p = read_params(spark, path)
     text_col = p["text_col"]
     require_columns(accepted_docs, (text_col,))
     view = "_ts_bloom_append"

@@ -20,9 +20,6 @@ from ..errors import ColumnNotFoundError, require_columns
 from ..functions.text_fns import SPARK
 from .artifacts import begin_build, commit_build, read_artifact, read_params
 
-# params (completeness marker) DDL of each store, for its builder and readers
-_QC_PARAMS = "id_col string, text_col string, alpha double, n_buckets int, round_to int"
-
 
 def text_stats(df: DataFrame, text_col: str, *, keep_cols: Sequence[str] = ()) -> DataFrame:
     """Per-document counting + quality metrics.
@@ -724,8 +721,8 @@ def build_quality_model(
     spark.sql(
         f"SELECT SUM(cpos) AS tpos, SUM(ctot) AS ttot FROM {wview}"
     ).write.mode("overwrite").parquet(f"{path}/prior")
-    commit_build(spark, path, dict(id_col=id_col, text_col=text_col, alpha=alpha,
-                                   n_buckets=n_buckets, round_to=round_to), _QC_PARAMS)
+    commit_build(spark, path, dict(id_col=id_col, text_col=text_col, alpha=float(alpha),
+                                   n_buckets=n_buckets, round_to=round_to))
 
 
 def score_quality_model(spark, path: str, df: DataFrame) -> DataFrame:
@@ -735,7 +732,7 @@ def score_quality_model(spark, path: str, df: DataFrame) -> DataFrame:
     guarantee) arrives as a broadcast equi-join, and the prior is a
     one-row cross join. No training subtree in the plan: no is_t
     filter, no weight aggregation — those were paid at build time."""
-    p = read_params(spark, path, _QC_PARAMS)
+    p = read_params(spark, path)
     id_col, text_col = p["id_col"], p["text_col"]
     require_columns(df, [text_col, id_col])
     view, wview, pview = "_ts_qcs_in", "_ts_qcs_w", "_ts_qcs_p"

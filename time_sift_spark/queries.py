@@ -19,6 +19,7 @@ from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .operators.artifacts import _index_ready
 from .operators.lag import lag_features, lead_features
 from .sources.catalog import load_table, read_parquet
 
@@ -2751,16 +2752,6 @@ def _index_dir(kind: str, sf_dir: str, params: str = "", *, table: str) -> str:
     fp = _source_fingerprint(sf_dir, table)
     key = hashlib.md5(f"{sf_dir}|{params}|{fp}".encode()).hexdigest()[:10]
     return os.path.join(tempfile.gettempdir(), f"{kind}_{key}")
-
-
-def _index_ready(path: str) -> bool:
-    """Every persisted-index builder writes ``params`` last
-    (``operators/artifacts.py``: begin_build → artifacts → commit_build),
-    so its _SUCCESS marker implies every earlier table landed; a build
-    that died mid-write lacks it and is redone rather than served partial."""
-    import os
-
-    return os.path.exists(os.path.join(path, "params", "_SUCCESS"))
 
 
 def _roundtrip_dir(prefix: str) -> str:
