@@ -6,8 +6,8 @@ JSON line: {"metric", "value", "unit", "queries", "sf"}.
 Execution is forced with a noop datasource write (full plan runs, nothing
 collected to the driver). Per query: one warm-up, then best-of-2 timed runs.
 
-Timeout-proofing (BENCH_r12 was rc=124 with parsed=null — the driver's
-window expired before the single end-of-run line printed, r12 VERDICT #1):
+Timeout-proofing (a round-12 run ended rc=124 with parsed=null — its capture
+window expired before the single end-of-run line printed):
 
 * Queries are measured in GRADE_PRIORITY order (the registry's importance
   order), so whatever a budget cut omits is the least-important tail.
@@ -34,13 +34,13 @@ from time_sift_spark.queries import REGISTRY, _ordered_names
 from time_sift_spark.session import get_spark
 
 # The driver captures only the LAST 2000 chars of output and parses that
-# (BENCH_r{1..4}.json all recorded "parsed": null from an over-long line
+# (rounds 1-4 all recorded "parsed": null from an over-long line
 # truncated mid-JSON). MAX_LINE leaves headroom for a trailing newline
 # and any stray shutdown output.
 MAX_LINE = 1950
 
 # Wall-clock budget for the whole run (seconds, from process start). The
-# driver's window is ~1h (BENCH_r11 at ~45 min passed; r12 at ~70 min on a
+# capture window is ~1h (round 11 at ~45 min passed; round 12 at ~70 min on a
 # 1.5x-slow box hit it); 2400s leaves margin even on a slow epoch.
 BUDGET = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET", "2400"))
 

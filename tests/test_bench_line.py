@@ -1,6 +1,6 @@
 """bench.py contracts: the compact line always surfaces failures (ADVICE
 r5) and a wall-clock budget cut still emits a parseable, labeled line
-(VERDICT r12 #1 — BENCH_r12 was rc=124/parsed=null because the single
+(VERDICT r12 #1 — a round-12 run ended rc=124/parsed=null because the single
 end-of-run line never printed)."""
 
 import json

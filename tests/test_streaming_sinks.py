@@ -42,9 +42,10 @@ def test_foreach_batch_parquet_sink(spark, tmp_path):
 
 
 def test_rocksdb_state_store_parity(spark, tmp_path):
-    """state_store="rocksdb" must produce the same drained result as the
-    default (HDFS-backed) provider — the provider changes WHERE keyed
-    state lives (heap vs local SSD), never the values."""
+    """A drain under the RocksDB state-store provider, set through the
+    session conf, must produce the same result as the default
+    (HDFS-backed) provider — the provider changes WHERE keyed state
+    lives (heap vs local SSD), never the values."""
     import numpy as np
     import pandas as pd
 
@@ -63,33 +64,30 @@ def test_rocksdb_state_store_parity(spark, tmp_path):
     src = str(tmp_path / "rocks_src")
     spark.createDataFrame(pdf).coalesce(1).write.mode("overwrite").parquet(src)
 
-    def drain(name, provider):
+    def drain(name):
         stream = spark.readStream.schema("t long, k long, v double").parquet(src)
         out = streaming_lag_features(stream, "v", "t", [1, 3], partition_by="k")
-        return (
-            run_stream_to_df(out, name, state_store=provider)
-            .orderBy("k", "t")
-            .toPandas()
-        )
+        return run_stream_to_df(out, name).orderBy("k", "t").toPandas()
 
-    default = drain("t_rocks_default", None)
-    rocks = drain("t_rocks_rocksdb", "rocksdb")
-    pd.testing.assert_frame_equal(default, rocks)
-    # provider conf restored after the drain
-    assert (
-        spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-        != "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    key = "spark.sql.streaming.stateStore.providerClass"
+    default = drain("t_rocks_default")
+    spark.conf.set(
+        key, "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     )
+    try:
+        rocks = drain("t_rocks_rocksdb")
+    finally:
+        spark.conf.unset(key)
+    pd.testing.assert_frame_equal(default, rocks)
 
 
-def test_default_stream_partitions_by_state_class(spark, tmp_path, monkeypatch):
+def test_default_stream_partitions_by_state_class(spark, tmp_path):
     """The adaptive drain default: Python-state plans
     (applyInPandasWithState) get cores/8 (floored 2) — after the r15
     vectorized key-bucketing the Python side is thin and store overhead
     dominates; JVM-stateful plans get the minimum robust count (2)
     because the per-partition state-store cost dominates at ANY local
-    core count (r15 cold-JVM sweep); the env knob overrides both (the
-    production sizing lever)."""
+    core count (r15 cold-JVM sweep)."""
     import pyspark.sql.functions as F
 
     from time_sift_spark.streaming.lag_stream import (
@@ -106,13 +104,8 @@ def test_default_stream_partitions_by_state_class(spark, tmp_path, monkeypatch):
     py_state = streaming_lag_features(stream, "v", "t", [1], partition_by="k")
     jvm_state = stream.groupBy("k").agg(F.sum("v").alias("s"))
 
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTS", raising=False)
     assert default_stream_partitions(py_state) == max(2, cores // 8)
     assert default_stream_partitions(jvm_state) == 2
-
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTS", "7")
-    assert default_stream_partitions(py_state) == 7
-    assert default_stream_partitions(jvm_state) == 7
 
 
 # --------------------------------------------------------------------------
@@ -160,6 +153,23 @@ def test_screened_append_sink_redelivery_and_crash_window(spark, tmp_path):
     and the applied marker, leave the verdict files and the MinHash
     store as the first delivery left them — no accepted doc turns into
     a rejected J=1.0 twin of itself."""
+    root = str(tmp_path / "ingest")
+    _check_screened_redelivery(spark, root, root)
+
+
+def test_screened_append_sink_on_a_file_url_base(spark, tmp_path):
+    """The same protocol with the base given as a ``file://`` URL: the
+    applied marker and the verdicts land under the directory the URL
+    names, and both redeliveries find them there."""
+    root = str(tmp_path / "ingest")
+    _check_screened_redelivery(spark, root, f"file://{root}")
+
+
+def _check_screened_redelivery(spark, root, base):
+    """Ingest one epoch through ``screened_append_sink`` at ``base``
+    (a path or URL naming the local directory ``root``), then redeliver
+    it twice: after a full apply, and after deleting the applied marker
+    (a crash between the append and the marker)."""
     import glob
     import os
     import shutil
@@ -175,8 +185,7 @@ def test_screened_append_sink_redelivery_and_crash_window(spark, tmp_path):
         return " ".join(f"w{i}x{j}" for j in range(20))
 
     schema = "doc_id long, text string"
-    base = str(tmp_path / "ingest")
-    store = f"{base}/store"
+    store = f"{root}/store"
     build_minhash_store(
         spark.createDataFrame([(1, doc(1)), (2, doc(2))], schema), "doc_id", "text", store
     )
@@ -190,7 +199,7 @@ def test_screened_append_sink_redelivery_and_crash_window(spark, tmp_path):
         "accepted",
         "doc_id",
     )
-    edir = f"{base}/results/epoch-0"
+    edir = f"{root}/results/epoch-0"
 
     def state():
         files = sorted(
@@ -202,12 +211,13 @@ def test_screened_append_sink_redelivery_and_crash_window(spark, tmp_path):
         return files, verdicts, spark.read.parquet(f"{store}/sigs").count()
 
     sink(batch, 0)
+    assert os.path.isdir(f"{root}/applied-epoch-0")
     files, verdicts, n_sigs = state()
     assert list(verdicts.accepted) == [False, True, True]  # doc 10 is a near-dup
     assert n_sigs == 4  # 2 built + 2 accepted
     for crash_before_marker in (False, True):
         if crash_before_marker:
-            shutil.rmtree(f"{base}/applied-epoch-0")
+            shutil.rmtree(f"{root}/applied-epoch-0")
         sink(batch, 0)  # redelivery of epoch 0
         got_files, got, got_n = state()
         assert got_files == files
@@ -250,6 +260,7 @@ def test_bucketed_drains_state_isolated_within_one_bucket(
     import numpy as np
     import pyspark.sql.functions as F
 
+    from time_sift_spark.streaming import lag_stream
     from time_sift_spark.streaming.lag_stream import (
         run_stream_to_df,
         streaming_asof_join,
@@ -262,7 +273,7 @@ def test_bucketed_drains_state_isolated_within_one_bucket(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_KEY_BUCKETS", "1")
+    monkeypatch.setattr(lag_stream, "_KEY_BUCKETS", 1)
     rng = np.random.default_rng(3)
     n, keys = 90, 5
     pdf = pd.DataFrame({
@@ -405,13 +416,14 @@ def test_bucket_count_checked_on_checkpoint_restart(spark, tmp_path, monkeypatch
     import pytest
 
     from time_sift_spark.operators.lag import lag_features
+    from time_sift_spark.streaming import lag_stream
 
     pdf = _keyed_series(80, 8)
     src = str(tmp_path / "rs_src")
     sink = str(tmp_path / "rs_sink")
     moved = str(tmp_path / "rs_sink_copy")
 
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_KEY_BUCKETS", "2")
+    monkeypatch.setattr(lag_stream, "_KEY_BUCKETS", 2)
     _write_chunks(src, [pdf.iloc[:40]])
     run_stream_to_parquet(_lag_stream(spark, src, [1, 2]), sink, "t_rs_first")
     _write_chunks(src, [pdf.iloc[40:]], first=1)
@@ -424,6 +436,51 @@ def test_bucket_count_checked_on_checkpoint_restart(spark, tmp_path, monkeypatch
     ).orderBy("k", "t").toPandas()
     pd.testing.assert_frame_equal(got[want.columns], want, check_dtype=False)
 
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_KEY_BUCKETS", "3")
+    monkeypatch.setattr(lag_stream, "_KEY_BUCKETS", 3)
     with pytest.raises(Exception, match="state has 2 buckets, this query plans 3"):
         run_stream_to_parquet(_lag_stream(spark, src, [1, 2]), moved, "t_rs_moved")
+
+
+def test_stream_restart_on_other_core_count(spark, tmp_path, monkeypatch):
+    """A durable checkpoint written on one core count continues on
+    another: the key-bucket count does not follow the session's
+    parallelism, so the restarted drain finds every key's carried buffer
+    and the output over both files equals batch ``lag_features``."""
+    from pyspark import SparkContext
+
+    from time_sift_spark.operators.lag import lag_features
+
+    pdf = _keyed_series(80, 8)
+    src = str(tmp_path / "cc_src")
+    sink = str(tmp_path / "cc_sink")
+    _write_chunks(src, [pdf.iloc[:40]])
+    run_stream_to_parquet(_lag_stream(spark, src, [1, 2]), sink, "t_cc_first")
+    _write_chunks(src, [pdf.iloc[40:]], first=1)
+    with monkeypatch.context() as m:
+        m.setattr(SparkContext, "defaultParallelism", property(lambda self: 16))
+        assert spark.sparkContext.defaultParallelism == 16
+        run_stream_to_parquet(_lag_stream(spark, src, [1, 2]), sink, "t_cc_restart")
+
+    got = spark.read.parquet(f"{sink}/epoch=*").orderBy("k", "t").toPandas()
+    want = lag_features(
+        spark.createDataFrame(pdf), "v", "t", [1, 2], partition_by="k"
+    ).orderBy("k", "t").toPandas()
+    pd.testing.assert_frame_equal(got[want.columns], want, check_dtype=False)
+
+
+def test_bucket_ids_spread_over_state_partitions(spark):
+    """Each bucket id of the bucketed drains lands in state partition
+    ``b mod P`` under Spark's hash exchange, for every partition count
+    ``default_stream_partitions`` plans below 72 cores (2..8): no state
+    partition is left idle and none holds more than ceil(8/P) buckets."""
+    import pyspark.sql.functions as F
+
+    from time_sift_spark.streaming import lag_stream
+
+    ids = spark.createDataFrame([(i,) for i in lag_stream._BUCKET_IDS], "kb long")
+    for p in range(2, 9):
+        parts = dict(ids.repartition(p, "kb")
+                     .select("kb", F.spark_partition_id().alias("p")).collect())
+        assert [parts[i] for i in lag_stream._BUCKET_IDS] == [
+            b % p for b in range(lag_stream._KEY_BUCKETS)
+        ], p

@@ -40,14 +40,21 @@ from pyspark.sql.types import DataType
 
 from ..sources.catalog import read_parquet
 
-__all__ = ["begin_build", "commit_build", "read_artifact", "read_params", "write_row"]
+__all__ = ["begin_build", "commit_build", "hadoop_path", "read_artifact", "read_params",
+           "write_row"]
+
+
+def hadoop_path(spark: SparkSession, path: str):
+    """``(fs, p)``: the Hadoop Path of ``path`` (local, ``file://``,
+    ``hdfs://``, ``s3a://``) and its FileSystem, under the conf
+    ``sources.catalog._footer`` uses."""
+    p = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf()), p
 
 
 def _marker(spark: SparkSession, path: str):
-    """``(fs, marker)``: the Hadoop Path of ``{path}/params/marker.json``
-    and its FileSystem, under the conf ``sources.catalog._footer`` uses."""
-    marker = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(f"{path}/params/marker.json")
-    return marker.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf()), marker
+    """``(fs, marker)`` of the store at ``path``: ``params/marker.json``."""
+    return hadoop_path(spark, f"{path}/params/marker.json")
 
 
 def _index_ready(path: str) -> bool:

@@ -917,55 +917,20 @@ def _stream_fuzzy_oracle() -> str:
 
 def _fuzzy_chunked_docs(sf_dir: str) -> str:
     """Chunk the crawl increment into 2 arrival-ordered parquet files —
-    deterministic stream-input scaffolding (the _late_chunked_events
-    convention: named AND mtime-ordered so the file source triggers them
-    in order).  Chunk 0: docs 400-449 plus 10 one-token-appended
-    re-crawls of CORPUS pages; chunk 1: the remaining docs plus 10
-    re-crawls of CHUNK-0 pages — rejectable only through the state the
-    sink appended after chunk 0."""
-    import hashlib
-    import os
-    import tempfile
+    deterministic stream-input scaffolding (:func:`_staged_chunks`).
+    Chunk 0: docs 400-449 plus 10 one-token-appended re-crawls of CORPUS
+    pages; chunk 1: the remaining docs plus 10 re-crawls of CHUNK-0
+    pages — rejectable only through the state the sink appended after
+    chunk 0."""
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+    def _chunks():
+        import pyarrow.parquet as pq
 
-    fp = _source_fingerprint(sf_dir, "documents")
-    key = hashlib.md5(f"{sf_dir}|sfz2|{fp}".encode()).hexdigest()[:10]
-    out = os.path.join(tempfile.gettempdir(), f"ts_sfz_chunks_{key}")
-    marker = os.path.join(out, "_READY")
-    if os.path.exists(marker):
-        return out
-    os.makedirs(out, exist_ok=True)
-    pdf = pq.read_table(os.path.join(sf_dir, "documents.parquet")).to_pandas()
-    pdf = pdf[pdf["text"].notna()][["doc_id", "text"]]
+        pdf = pq.read_table(f"{sf_dir}/documents.parquet").to_pandas()
+        pdf = pdf[pdf["text"].notna()][["doc_id", "text"]]
+        return _recrawl_chunks(pdf, "doc_id", lambda p: p.assign(text=p["text"] + " qz"))
 
-    def _planted(src, offset):
-        p = src[["doc_id", "text"]].copy()
-        p["doc_id"] = p["doc_id"] + offset
-        p["text"] = p["text"] + " qz"
-        return p
-
-    import pandas as pd
-
-    c0 = pd.concat(
-        [
-            pdf[(pdf.doc_id >= 400) & (pdf.doc_id < 450)],
-            _planted(pdf[pdf.doc_id < 10], 10000),
-        ]
-    ).reset_index(drop=True)
-    c1 = pd.concat(
-        [
-            pdf[pdf.doc_id >= 450],
-            _planted(pdf[(pdf.doc_id >= 400) & (pdf.doc_id < 410)], 20000),
-        ]
-    ).reset_index(drop=True)
-    for seq, chunk in enumerate((c0, c1)):
-        f = os.path.join(out, f"chunk-{seq:02d}.parquet")
-        pq.write_table(pa.Table.from_pandas(chunk, preserve_index=False), f)
-        os.utime(f, (1_700_000_000 + seq, 1_700_000_000 + seq))
-    open(marker, "w").close()
-    return out
+    return _staged_chunks(sf_dir, "documents", "sfz2", "ts_sfz_chunks", _chunks)
 
 
 @register("streaming_dedup_fuzzy_docs", oracle=_stream_fuzzy_oracle())
@@ -2735,6 +2700,56 @@ def _source_fingerprint(sf_dir: str, table: str) -> str:
         return "absent"
 
 
+def _staged_chunks(sf_dir: str, table: str, tag: str, prefix: str,
+                   make_chunks: Callable[[], dict]) -> str:
+    """The directory of one stream-input fixture, staged once per source
+    content.  ``make_chunks()`` returns ``{file name: pandas frame}`` in
+    arrival order; each frame lands as one parquet file, and the files
+    get strictly increasing mtimes, because the file stream source
+    triggers files in mtime order (ms granularity: sequential writes can
+    tie).  The directory is keyed by ``tag`` and ``table``'s content
+    fingerprint, and the ``_READY`` marker, written last, marks it
+    complete."""
+    import hashlib
+    import os
+    import tempfile
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    fp = _source_fingerprint(sf_dir, table)
+    key = hashlib.md5(f"{sf_dir}|{tag}|{fp}".encode()).hexdigest()[:10]
+    out = os.path.join(tempfile.gettempdir(), f"{prefix}_{key}")
+    marker = os.path.join(out, "_READY")
+    if os.path.exists(marker):
+        return out
+    os.makedirs(out, exist_ok=True)
+    for seq, (name, frame) in enumerate(make_chunks().items()):
+        f = os.path.join(out, name)
+        pq.write_table(pa.Table.from_pandas(frame, preserve_index=False), f)
+        os.utime(f, (1_700_000_000 + seq, 1_700_000_000 + seq))
+    open(marker, "w").close()
+    return out
+
+
+def _recrawl_chunks(pdf, id_col: str, edit: Callable | None = None) -> dict:
+    """The two chunks of a streaming-ingest increment: chunk 0 holds ids
+    400-449 plus copies of ids 0-9 (ids +10000), chunk 1 the ids from
+    450 on plus copies of ids 400-409 (ids +20000); ``edit`` alters each
+    copy (none: exact copies)."""
+    import pandas as pd
+
+    def _copies(src, offset):
+        p = src.copy()
+        p[id_col] = p[id_col] + offset
+        return edit(p) if edit else p
+
+    ids = pdf[id_col]
+    c0 = pd.concat([pdf[(ids >= 400) & (ids < 450)], _copies(pdf[ids < 10], 10000)])
+    c1 = pd.concat([pdf[ids >= 450], _copies(pdf[(ids >= 400) & (ids < 410)], 20000)])
+    return {f"chunk-{i:02d}.parquet": c.reset_index(drop=True) for i, c in enumerate((c0, c1))}
+
+
 def _index_dir(kind: str, sf_dir: str, params: str = "", *, table: str) -> str:
     """Deterministic per-(kind, dataset-content, build-params) index
     location, so the persisted ANN queries build ONCE and later
@@ -2849,9 +2864,6 @@ def json_roundtrip_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STREAM_SEQ = [0]
-
-
 @register(
     "streaming_dedup_events",
     oracle="""
@@ -2865,15 +2877,14 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     key columns only, so the result is deterministic no matter which
     physical row survives the dedup."""
     from .sources.catalog import read_events_stream
-    from .streaming.lag_stream import run_stream_to_df
+    from .streaming.lag_stream import _next_stream_name, run_stream_to_df
 
     stream = (
         read_events_stream(spark, sf_dir)
         .select("user_id", "event_type")
         .dropDuplicates(["user_id", "event_type"])
     )
-    _STREAM_SEQ[0] += 1
-    return run_stream_to_df(stream, f"ts_stream_dedup_{_STREAM_SEQ[0]}")
+    return run_stream_to_df(stream, _next_stream_name("ts_stream_dedup"))
 
 
 @register(
@@ -2896,7 +2907,7 @@ def streaming_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
 
     from .sources.catalog import read_events_stream
-    from .streaming.lag_stream import run_stream_to_df
+    from .streaming.lag_stream import _next_stream_name, run_stream_to_df
 
     stream = (
         read_events_stream(spark, sf_dir)
@@ -2905,9 +2916,8 @@ def streaming_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", "event_type")
         .agg(F.count(F.lit(1)).alias("n_keys"))
     )
-    _STREAM_SEQ[0] += 1
     return run_stream_to_df(
-        stream, f"ts_stream_dedup_wm_{_STREAM_SEQ[0]}", output_mode="complete"
+        stream, _next_stream_name("ts_stream_dedup_wm"), output_mode="complete"
     )
 
 
@@ -2942,7 +2952,7 @@ def streaming_enrich_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
 
     from .sources.catalog import read_events_stream
-    from .streaming.lag_stream import run_stream_to_df
+    from .streaming.lag_stream import _next_stream_name, run_stream_to_df
 
     events = load_table(spark, "events", sf_dir)
     events.createOrReplaceTempView("events")
@@ -2956,8 +2966,7 @@ def streaming_enrich_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("value") > 2 * F.col("user_avg")).alias("is_anomaly"),
         )
     )
-    _STREAM_SEQ[0] += 1
-    return run_stream_to_df(stream, f"ts_stream_enrich_{_STREAM_SEQ[0]}")
+    return run_stream_to_df(stream, _next_stream_name("ts_stream_enrich"))
 
 
 @register(
@@ -2976,7 +2985,7 @@ def streaming_lag_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     driven synchronously through a memory sink.  With ordered arrival the
     result is row-identical to batch LAG — which the oracle asserts."""
     from .sources.catalog import read_events_stream
-    from .streaming.lag_stream import run_stream_to_df, streaming_lag_features
+    from .streaming.lag_stream import _next_stream_name, run_stream_to_df, streaming_lag_features
 
     # epoch-µs long BEFORE lagging so ordering and output agree with the
     # oracle's epoch_us(ts) regardless of the parquet timestamp encoding
@@ -2984,8 +2993,7 @@ def streaming_lag_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = streaming_lag_features(
         stream, "value", "ts", [1, 2, 3], partition_by="user_id", order_extra=("event_id",)
     )
-    _STREAM_SEQ[0] += 1
-    return run_stream_to_df(out, f"ts_stream_lag_{_STREAM_SEQ[0]}")
+    return run_stream_to_df(out, _next_stream_name("ts_stream_lag"))
 
 
 @register(
@@ -3010,12 +3018,12 @@ def streaming_lag_steady_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost is dominated by state-machine spin-up; the bench delta between
     this query and that one, divided by the 4 extra input volumes, is
     the operator's per-row steady-state cost — the number that actually
-    predicts 100 TB streaming throughput (BASELINE.md records both).
+    predicts 100 TB streaming throughput (`bench.py` times both).
     Oracle: batch LAG over the identically replicated input."""
     import pyspark.sql.functions as F
 
     from .sources.catalog import read_events_stream
-    from .streaming.lag_stream import run_stream_to_df, streaming_lag_features
+    from .streaming.lag_stream import _next_stream_name, run_stream_to_df, streaming_lag_features
 
     stream = read_events_stream(spark, sf_dir, ts_type="us_long")
     replicated = stream.select(
@@ -3026,8 +3034,7 @@ def streaming_lag_steady_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = streaming_lag_features(
         replicated, "value", "ts", [1, 2, 3], partition_by="user_id", order_extra=("event_id",)
     )
-    _STREAM_SEQ[0] += 1
-    return run_stream_to_df(out, f"ts_stream_lag_bulk_{_STREAM_SEQ[0]}")
+    return run_stream_to_df(out, _next_stream_name("ts_stream_lag_bulk"))
 
 
 @register(
@@ -5445,53 +5452,29 @@ def _late_chunked_events(sf_dir: str) -> str:
     """Chunk events.parquet into 4 time-ordered files plus one LATE file
     (every event_id % 97 == 0 row, held back to arrive after everything
     else) — deterministic stream-input scaffolding for the late-data lag
-    query. Files are named AND mtime-ordered in arrival order so the file
-    stream source (sorted by modification time) triggers them in order.
-    This is test rigging for what a Kafka topic provides in production —
-    a driver-side pandas sort of one table, not an operator data path."""
-    import hashlib
-    import os
-    import tempfile
-    import time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
+    query (:func:`_staged_chunks` orders the files' mtimes in arrival
+    order).  This is test rigging for what a Kafka topic provides in
+    production — a driver-side pandas sort of one table, not an operator
+    data path."""
     n_chunks = 4
-    fp = _source_fingerprint(sf_dir, "events")
-    key = hashlib.md5(f"{sf_dir}|{n_chunks}|{fp}".encode()).hexdigest()[:10]
-    out = os.path.join(tempfile.gettempdir(), f"ts_late_chunks_{key}")
-    marker = os.path.join(out, "_READY")
-    if os.path.exists(marker):
-        return out
-    os.makedirs(out, exist_ok=True)
-    tbl = pq.read_table(os.path.join(sf_dir, "events.parquet"))
-    pdf = tbl.to_pandas().sort_values(["ts", "event_id"], kind="mergesort")
-    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-    late = pdf[pdf["event_id"] % 97 == 0]
-    on_time = pdf[pdf["event_id"] % 97 != 0].reset_index(drop=True)
-    step = (len(on_time) + n_chunks - 1) // n_chunks or 1
-    seq = 0
-    for i in range(0, len(on_time), step):
-        pq.write_table(
-            pa.Table.from_pandas(on_time.iloc[i : i + step], preserve_index=False),
-            os.path.join(out, f"chunk-{seq:02d}.parquet"),
-        )
-        seq += 1
-    pq.write_table(
-        pa.Table.from_pandas(late.reset_index(drop=True), preserve_index=False),
-        os.path.join(out, "chunk-99-late.parquet"),
-    )
-    # The file stream source orders files by modification time (ms
-    # granularity) — sequential writes can tie. Pin strictly increasing
-    # mtimes so trigger order is exactly chunk order on any filesystem.
-    base = time.time() - 3600
-    names = sorted(n for n in os.listdir(out) if n.endswith(".parquet"))
-    for i, n in enumerate(names):
-        os.utime(os.path.join(out, n), (base + i, base + i))
-    with open(marker, "w") as fh:
-        fh.write("ok")
-    return out
+
+    def _chunks():
+        import pyarrow.parquet as pq
+
+        pdf = pq.read_table(f"{sf_dir}/events.parquet").to_pandas()
+        pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
+        pdf["ts"] = pdf["ts"].astype("datetime64[us]")
+        late = pdf[pdf["event_id"] % 97 == 0]
+        on_time = pdf[pdf["event_id"] % 97 != 0].reset_index(drop=True)
+        step = (len(on_time) + n_chunks - 1) // n_chunks or 1
+        chunks = {
+            f"chunk-{seq:02d}.parquet": on_time.iloc[i : i + step]
+            for seq, i in enumerate(range(0, len(on_time), step))
+        }
+        chunks["chunk-99-late.parquet"] = late.reset_index(drop=True)
+        return chunks
+
+    return _staged_chunks(sf_dir, "events", str(n_chunks), "ts_late_chunks", _chunks)
 
 
 @register(
@@ -5601,37 +5584,38 @@ def _hw_bucket_chunks(sf_dir: str) -> str:
     watermark+window aggregation provides in production).  The bucket
     values are the exact DECIMAL(18,6) sums the batch operator and its
     oracle use, so the streaming recurrence sees bit-identical inputs."""
-    import hashlib
-    import os
-    import tempfile
+    return _day_bucket_chunks(sf_dir, "hwbuckets", "ts_hw_chunks")
 
-    import duckdb
 
-    fp = _source_fingerprint(sf_dir, "events")
-    key = hashlib.md5(f"{sf_dir}|hwbuckets|{fp}".encode()).hexdigest()[:10]
-    out = os.path.join(tempfile.gettempdir(), f"ts_hw_chunks_{key}")
-    marker = os.path.join(out, "_READY")
-    if os.path.exists(marker):
-        return out
-    os.makedirs(out, exist_ok=True)
-    con = duckdb.connect()
-    pdf = con.execute(f"""
-        SELECT event_type AS k,
-               CAST(datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT) AS x,
-               CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS y_micros
-        FROM '{os.path.join(sf_dir, "events.parquet")}'
-        GROUP BY 1, 2 ORDER BY x, k
-    """).df()
-    xs = sorted(pdf["x"].unique())
-    step = (len(xs) + 4) // 5 or 1
-    for i in range(5):
-        lo = i * step
-        chunk = pdf[pdf["x"].isin(xs[lo : lo + step])]
-        chunk.reset_index(drop=True).to_parquet(
-            os.path.join(out, f"chunk-{i:02d}.parquet")
-        )
-    os.makedirs(marker, exist_ok=True)
-    return out
+def _day_bucket_chunks(sf_dir: str, tag: str, prefix: str, where: str = "",
+                       having: str = "") -> str:
+    """5 time-ordered chunk files of events' ``(k, x, y_micros)`` day
+    buckets — event type, day number, and the exact DECIMAL(18,6) sum as
+    integer micros — with optional ``where``/``having`` clauses, staged
+    by :func:`_staged_chunks` under ``tag`` and ``prefix``."""
+
+    def _chunks():
+        import duckdb
+
+        pdf = duckdb.connect().execute(f"""
+            SELECT event_type AS k,
+                   CAST(datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT) AS x,
+                   CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS y_micros
+            FROM '{sf_dir}/events.parquet'
+            {where}
+            GROUP BY 1, 2
+            {having}
+            ORDER BY x, k
+        """).df()
+        xs = sorted(pdf["x"].unique())
+        step = (len(xs) + 4) // 5 or 1
+        return {
+            f"chunk-{i:02d}.parquet":
+                pdf[pdf["x"].isin(xs[i * step : (i + 1) * step])].reset_index(drop=True)
+            for i in range(5)
+        }
+
+    return _staged_chunks(sf_dir, "events", tag, prefix, _chunks)
 
 
 def _hw_stream_oracle() -> str:
@@ -6207,7 +6191,7 @@ def streaming_distinct_sketch_daily(spark: SparkSession, sf_dir: str) -> DataFra
     from .functions.text_fns import SPARK as _S
     from .operators.sketch import estimate_expr, register_expr
     from .sources.catalog import read_events_stream
-    from .streaming.lag_stream import run_stream_to_df
+    from .streaming.lag_stream import _next_stream_name, run_stream_to_df
 
     stream = (
         read_events_stream(spark, sf_dir)
@@ -6221,9 +6205,8 @@ def streaming_distinct_sketch_daily(spark: SparkSession, sf_dir: str) -> DataFra
             F.expr(estimate_expr(_S, "COUNT(1)", 1024)).alias("n_estimate"),
         )
     )
-    _STREAM_SEQ[0] += 1
     return run_stream_to_df(
-        stream, f"ts_stream_sketch_{_STREAM_SEQ[0]}", output_mode="complete"
+        stream, _next_stream_name("ts_stream_sketch"), output_mode="complete"
     )
 
 
@@ -6259,7 +6242,7 @@ def streaming_countmin_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions.text_fns import SPARK as _S
     from .operators.sketch import cm_bucket_expr
     from .sources.catalog import read_events_stream
-    from .streaming.lag_stream import run_stream_to_df
+    from .streaming.lag_stream import _next_stream_name, run_stream_to_df
 
     stream = read_events_stream(spark, sf_dir)
     pairs = stream.select(
@@ -6274,9 +6257,8 @@ def streaming_countmin_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("rb")
     ).select("rb.row", "rb.bucket")
     agg = pairs.groupBy("row", "bucket").agg(F.count(F.lit(1)).alias("cell"))
-    _STREAM_SEQ[0] += 1
     return run_stream_to_df(
-        agg, f"ts_stream_cm_{_STREAM_SEQ[0]}", output_mode="complete"
+        agg, _next_stream_name("ts_stream_cm"), output_mode="complete"
     )
 
 
@@ -9276,47 +9258,14 @@ def _bloom_chunked_docs(sf_dir: str) -> str:
     docs 400-449 plus 10 exact copies of CORPUS pages; chunk 1: the
     rest plus 10 exact copies of CHUNK-0 pages — rejectable only via
     the positions the sink appended after chunk 0."""
-    import hashlib
-    import os
-    import tempfile
 
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+    def _chunks():
+        import pyarrow.parquet as pq
 
-    fp = _source_fingerprint(sf_dir, "documents")
-    key = hashlib.md5(f"{sf_dir}|sbl1|{fp}".encode()).hexdigest()[:10]
-    out = os.path.join(tempfile.gettempdir(), f"ts_sbl_chunks_{key}")
-    marker = os.path.join(out, "_READY")
-    if os.path.exists(marker):
-        return out
-    os.makedirs(out, exist_ok=True)
-    pdf = pq.read_table(os.path.join(sf_dir, "documents.parquet")).to_pandas()
-    pdf = pdf[pdf["text"].notna()][["doc_id", "text"]]
+        pdf = pq.read_table(f"{sf_dir}/documents.parquet").to_pandas()
+        return _recrawl_chunks(pdf[pdf["text"].notna()][["doc_id", "text"]], "doc_id")
 
-    def _copies(src, offset):
-        p = src[["doc_id", "text"]].copy()
-        p["doc_id"] = p["doc_id"] + offset
-        return p
-
-    c0 = pd.concat(
-        [
-            pdf[(pdf.doc_id >= 400) & (pdf.doc_id < 450)],
-            _copies(pdf[pdf.doc_id < 10], 10000),
-        ]
-    ).reset_index(drop=True)
-    c1 = pd.concat(
-        [
-            pdf[pdf.doc_id >= 450],
-            _copies(pdf[(pdf.doc_id >= 400) & (pdf.doc_id < 410)], 20000),
-        ]
-    ).reset_index(drop=True)
-    for seq, chunk in enumerate((c0, c1)):
-        f = os.path.join(out, f"chunk-{seq:02d}.parquet")
-        pq.write_table(pa.Table.from_pandas(chunk, preserve_index=False), f)
-        os.utime(f, (1_700_000_000 + seq, 1_700_000_000 + seq))
-    open(marker, "w").close()
-    return out
+    return _staged_chunks(sf_dir, "documents", "sbl1", "ts_sbl_chunks", _chunks)
 
 
 @register("streaming_bloom_screen_docs", oracle=_stream_bloom_oracle())
@@ -9452,47 +9401,14 @@ def _vector_chunked_embeddings(sf_dir: str) -> str:
     chunk 1 = the rest plus 10 exact copies of CHUNK-0 vectors
     (+20000) — rejectable only through the state the sink appended
     after chunk 0."""
-    import hashlib
-    import os
-    import tempfile
 
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+    def _chunks():
+        import pyarrow.parquet as pq
 
-    fp = _source_fingerprint(sf_dir, "embeddings")
-    key = hashlib.md5(f"{sf_dir}|svi1|{fp}".encode()).hexdigest()[:10]
-    out = os.path.join(tempfile.gettempdir(), f"ts_svi_chunks_{key}")
-    marker = os.path.join(out, "_READY")
-    if os.path.exists(marker):
-        return out
-    os.makedirs(out, exist_ok=True)
-    pdf = pq.read_table(os.path.join(sf_dir, "embeddings.parquet")).to_pandas()
-    pdf = pdf[["vec_id", "embedding"]]
+        pdf = pq.read_table(f"{sf_dir}/embeddings.parquet").to_pandas()
+        return _recrawl_chunks(pdf[["vec_id", "embedding"]], "vec_id")
 
-    def _copies(src, offset):
-        p = src.copy()
-        p["vec_id"] = p["vec_id"] + offset
-        return p
-
-    c0 = pd.concat(
-        [
-            pdf[(pdf.vec_id >= 400) & (pdf.vec_id < 450)],
-            _copies(pdf[pdf.vec_id < 10], 10000),
-        ]
-    ).reset_index(drop=True)
-    c1 = pd.concat(
-        [
-            pdf[pdf.vec_id >= 450],
-            _copies(pdf[(pdf.vec_id >= 400) & (pdf.vec_id < 410)], 20000),
-        ]
-    ).reset_index(drop=True)
-    for seq, chunk in enumerate((c0, c1)):
-        f = os.path.join(out, f"chunk-{seq:02d}.parquet")
-        pq.write_table(pa.Table.from_pandas(chunk, preserve_index=False), f)
-        os.utime(f, (1_700_000_000 + seq, 1_700_000_000 + seq))
-    open(marker, "w").close()
-    return out
+    return _staged_chunks(sf_dir, "embeddings", "svi1", "ts_svi_chunks", _chunks)
 
 
 @register("streaming_vector_ingest", oracle=_stream_vector_oracle())
@@ -10410,40 +10326,10 @@ def _croston_bucket_chunks(sf_dir: str) -> str:
     files carrying exact integer-micros sums — the streaming-Croston
     feeder, the _hw_bucket_chunks recipe over the intermittent
     source."""
-    import hashlib as _hl
-    import os
-    import tempfile
-
-    import duckdb
-
-    fp = _source_fingerprint(sf_dir, "events")
-    key = _hl.md5(f"{sf_dir}|crostonbuckets|{fp}".encode()).hexdigest()[:10]
-    out = os.path.join(tempfile.gettempdir(), f"ts_croston_chunks_{key}")
-    marker = os.path.join(out, "_READY")
-    if os.path.exists(marker):
-        return out
-    os.makedirs(out, exist_ok=True)
-    con = duckdb.connect()
-    pdf = con.execute(f"""
-        SELECT event_type AS k,
-               CAST(datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT) AS x,
-               CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS y_micros
-        FROM '{os.path.join(sf_dir, "events.parquet")}'
-        WHERE value > 195
-        GROUP BY 1, 2
-        HAVING SUM(CAST(value AS DECIMAL(18,6))) > 0
-        ORDER BY x, k
-    """).df()
-    xs = sorted(pdf["x"].unique())
-    step = (len(xs) + 4) // 5 or 1
-    for i in range(5):
-        lo = i * step
-        chunk = pdf[pdf["x"].isin(xs[lo : lo + step])]
-        chunk.reset_index(drop=True).to_parquet(
-            os.path.join(out, f"chunk-{i:02d}.parquet")
-        )
-    os.makedirs(marker, exist_ok=True)
-    return out
+    return _day_bucket_chunks(
+        sf_dir, "crostonbuckets", "ts_croston_chunks", where="WHERE value > 195",
+        having="HAVING SUM(CAST(value AS DECIMAL(18,6))) > 0",
+    )
 
 
 @register("streaming_croston_events", oracle=_croston_oracle())
@@ -11571,7 +11457,7 @@ def _with_session_confs(fn: Callable[[SparkSession, str], DataFrame]):
 
 # --------------------------------------------------------------------------
 # Grading order. The driver grades the FIRST 50 entries of queries()
-# (CORRECTNESS_r{N}.json has exactly 50 rows both rounds), so the output
+# (its correctness report had exactly 50 rows both rounds), so the output
 # order is an explicit priority list, not registration order: queries that
 # are new or changed this round and queries without a green driver row yet
 # come first; long-stable twice-green queries fill the tail and rotate out

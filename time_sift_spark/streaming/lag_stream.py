@@ -7,8 +7,8 @@ semantics: lag k prepends k fills / drops the last k,
 src/lib.rs:519-523 — here the "fill" beyond the stream's start is NULL,
 matching the engine's batch default).
 
-Keys are grouped into hash buckets (:func:`_default_key_buckets`), and
-the lag, as-of and EWMA drains share one scaffold
+Keys are grouped into a fixed number of hash buckets (``_KEY_BUCKETS``),
+and the lag, as-of and EWMA drains share one scaffold
 (:func:`_bucketed_drain`): ONE state row per bucket holds the carried
 values (values only, no times) of every key the bucket has seen.
 
@@ -20,7 +20,7 @@ Semantics & limits:
 * A key carries O(max_lag) values, but keys are never evicted
   (``NoTimeout``): state grows with the number of distinct keys ever
   seen, and every micro-batch re-serializes the whole state row of each
-  bucket it touches.  Evicting idle keys is ROADMAP item 3.
+  bucket it touches.  Evicting idle keys is ROADMAP item 1.
 
 The driver-facing query runs a file stream through a memory sink
 synchronously; when all data arrives ordered, the result is
@@ -46,27 +46,24 @@ from ..plans.lag_plan import lag_column_names
 
 _KB_COL = "_ts_kb"
 _STATE_SCHEMA = "n_buckets int, uids array<long>, bufs array<array<double>>"
-
-
-def _default_key_buckets(stream_df: DataFrame) -> int:
-    """Key-bucket count for the bucketed pandas-state drains.
-
-    applyInPandasWithState invokes the Python function ONCE PER KEY per
-    micro-batch, and the r15 no-op-UDF isolation measured ~10 ms of
-    protocol machinery per invocation (per-key Arrow framing + state
-    round-trip) — at 1 500 keys × 5 micro-batches that is the whole
-    drain cost, regardless of the function body.  Grouping keys into
-    deterministic hash buckets and looping per key INSIDE the function
-    amortizes the protocol over ~keys/buckets keys per call while
-    executing the identical per-key code.  2 buckets per core keeps
-    every Python worker busy with a small number of fat calls; the env
-    knob is the production lever (size to keys-per-trigger / state
-    volume per bucket)."""
-    env = os.environ.get("SPARK_GRAFT_STREAM_KEY_BUCKETS")
-    if env:
-        return max(1, int(env))
-    cores = stream_df.sparkSession.sparkContext.defaultParallelism
-    return max(4, 2 * cores)
+# Key buckets of the bucketed drains.  applyInPandasWithState invokes the
+# Python function once per grouping key per micro-batch, and the r15
+# no-op-UDF isolation measured ~10 ms of protocol machinery per call
+# (per-key Arrow framing + state round trip): at 1 500 keys x 5
+# micro-batches that is the whole drain cost.  Grouping keys into hash
+# buckets and looping per key inside the call amortizes it over
+# ~keys/buckets keys.  The count is fixed, so a durable checkpoint
+# restarts on any core count.  8 is the count the 4-core measurements
+# ran with; the drains' speed above 4 cores is unmeasured.
+_KEY_BUCKETS = 8
+# The grouping id of bucket b: the smallest non-negative long whose
+# Murmur3 hash (Spark's ``hash``, which the state exchange partitions
+# by) is b mod 840.  So bucket b runs in state partition b mod P for
+# every P dividing 840, as each of 2..8 does: the counts
+# ``default_stream_partitions`` plans below 72 cores leave no partition
+# idle and none with more than ceil(8/P) buckets.  The ids 0..7 would
+# not spread: at P = 4 they hash to partitions holding 0, 1, 3 and 4.
+_BUCKET_IDS = (480, 65, 369, 243, 296, 648, 380, 258)
 
 
 def _bucketed_drain(stream_df: DataFrame, partition_by: str, sort_cols: list,
@@ -82,7 +79,9 @@ def _bucketed_drain(stream_df: DataFrame, partition_by: str, sort_cols: list,
     AND boundary bytes for nothing).  The bucket is a deterministic
     function of the key (Murmur3 + pmod — safe under task retry, guide
     §2.5), so grouping by bucket instead of key changes NOTHING about
-    per-key values, only how many keys share one call.
+    per-key values, only how many keys share one call.  The grouping
+    column holds the bucket's id from ``_BUCKET_IDS``, which spreads the
+    buckets evenly over the state partitions.
 
     Each call sorts the bucket's rows by (key, *sort_cols), applies
     ``prep``, and prepends each key's carried buffer as typed prefix rows
@@ -95,14 +94,20 @@ def _bucketed_drain(stream_df: DataFrame, partition_by: str, sort_cols: list,
     ``(partition_by, *sort_cols)`` as long and ``(value_col, *new_cols)``
     as double.
 
-    State is one row per bucket, ``(n_buckets, uids, bufs)``.  A durable
-    checkpoint restarted on a session that plans another bucket count
-    would route keys to other buckets and silently lose or misapply their
-    buffers, so the stored count must match or the call raises
-    ``ValueError``.  Limit: the check fires only when a bucket that holds
-    old state is invoked, i.e. receives rows.
+    State is one row per bucket, ``(n_buckets, uids, bufs)``.  The count
+    is the fixed ``_KEY_BUCKETS``, so a durable checkpoint restarts on a
+    session with any core count.  Checkpoints written by older code,
+    which grouped by an int bucket number derived from the core count,
+    are refused by Spark's own state-schema check on restart
+    (``STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE``: the grouping key is now
+    a long); they must be drained and restarted from a fresh checkpoint.
+    The stored count is still checked: a checkpoint of another
+    ``_KEY_BUCKETS`` would route keys to other buckets and silently lose
+    or misapply their buffers, so a mismatch raises ``ValueError``.
+    Limit: the check fires only when a bucket that holds old state is
+    invoked, i.e. receives rows.
     """
-    n_buckets = _default_key_buckets(stream_df)
+    n_buckets = _KEY_BUCKETS
     out_cols = [partition_by, *sort_cols, value_col, *new_cols]
     output_schema = ", ".join([f"{c} long" for c in (partition_by, *sort_cols)]
                               + [f"{c} double" for c in (value_col, *new_cols)])
@@ -150,9 +155,10 @@ def _bucketed_drain(stream_df: DataFrame, partition_by: str, sort_cols: list,
         state.update((n_buckets, list(st.keys()), list(st.values())))
         yield out.loc[~out["_pre"], out_cols]
 
-    kb = F.pmod(F.hash(F.col(partition_by)), F.lit(n_buckets)).alias(_KB_COL)
+    ids = F.array(*[F.lit(i).cast("long") for i in _BUCKET_IDS[:n_buckets]])
+    kb = F.element_at(ids, F.pmod(F.hash(F.col(partition_by)), F.lit(n_buckets)) + 1)
     cols = [partition_by, *sort_cols, *extra_cols, value_col]
-    return stream_df.select(*cols, kb).groupBy(_KB_COL).applyInPandasWithState(
+    return stream_df.select(*cols, kb.alias(_KB_COL)).groupBy(_KB_COL).applyInPandasWithState(
         _update, output_schema, _STATE_SCHEMA, "append", GroupStateTimeout.NoTimeout
     )
 
@@ -230,20 +236,14 @@ def pinned_shuffle_partitions(spark, n: int):
         spark.conf.set(key, old)
 
 
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
 def default_stream_partitions(stream_out: DataFrame) -> int:
     """Scale-adaptive shuffle-partition count for one stream drain.
 
     Stateful streaming pays a FIXED per-partition cost every micro-batch
     (one state-store instance: open, version files, commit) on top of
     the per-row work, so the right count is a throughput/state-volume
-    knob, not the batch default. Measured at sf0.1/local[32]
-    (logs/exp_stream_parts.log, logs/exp_stream2.log; warm-up +
-    best-of-2 per the bench methodology):
+    question, not the batch default. Measured at sf0.1/local[32] (warm-up
+    + best-of-2 per the bench methodology):
 
     * JVM-native stateful sinks (windowed/session aggregation,
       stream-stream join, dropDuplicates) have near-zero per-row cost
@@ -265,16 +265,10 @@ def default_stream_partitions(stream_out: DataFrame) -> int:
     JVM-state drain — the r14 ``cores // 8`` rule made the count grow
     with cores, which is exactly backwards for a fixed state volume
     (the driver's 32-core run drew 9.6 s on distinct_sketch at 4
-    partitions vs 2.3 s at 8 cores/2 partitions).  The right sizing
-    dial is STATE VOLUME per store (~100 MB-1 GB with RocksDB), which
-    only the deployment knows — ``SPARK_GRAFT_STREAM_PARTS`` overrides
-    both classes for that; the local default just refuses to
+    partitions vs 2.3 s at 8 cores/2 partitions).  The rule refuses to
     over-provision store instances for KB-scale monitor state at
     whatever the local core count happens to be.
     """
-    env = os.environ.get("SPARK_GRAFT_STREAM_PARTS")
-    if env:
-        return max(1, int(env))
     spark = stream_out.sparkSession
     cores = spark.sparkContext.defaultParallelism
     plan = stream_out._jdf.queryExecution().analyzed().toString()
@@ -312,36 +306,23 @@ def _ephemeral_checkpoint_dir() -> str:
     return tempfile.mkdtemp(prefix="ts_drain_ckpt_", dir=base)
 
 
-def run_stream_to_df(
-    stream_out: DataFrame,
-    query_name: str,
-    *,
-    output_mode: str = "append",
-    shuffle_partitions: int | None = None,
-    state_store: str | None = None,
-) -> DataFrame:
+def run_stream_to_df(stream_out: DataFrame, query_name: str, *,
+                     output_mode: str = "append") -> DataFrame:
     """Drive a streaming DataFrame through a memory sink synchronously and
     return the materialized result as a batch DataFrame (test/driver
     convenience; production would writeStream to a real sink).
 
-    ``state_store="rocksdb"`` swaps the per-partition state store to the
-    RocksDB provider (SCALE.md's lever for state that exceeds executor
-    heap — spilling keyed state to local SSD instead of OOMing). The
-    provider is latched per query at start, so pinning it around
-    ``.start()`` scopes it to this drain; results are identical either
-    way, which ``tests/test_streaming_sinks.py`` asserts."""
+    The drain runs on :func:`default_stream_partitions` shuffle
+    partitions and on the state-store provider the session names
+    (``spark.sql.streaming.stateStore.providerClass``: set it to the
+    RocksDB provider for state beyond executor heap; results are
+    identical, which ``tests/test_streaming_sinks.py`` asserts)."""
     import shutil
 
     spark = stream_out.sparkSession
-    if shuffle_partitions is None:
-        shuffle_partitions = default_stream_partitions(stream_out)
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    old_provider = spark.conf.get(provider_key, None)
     ckpt = _ephemeral_checkpoint_dir()
-    with pinned_shuffle_partitions(spark, shuffle_partitions):
-        if state_store == "rocksdb":
-            spark.conf.set(provider_key, ROCKSDB_PROVIDER)
-        try:
+    try:
+        with pinned_shuffle_partitions(spark, default_stream_partitions(stream_out)):
             q = (
                 stream_out.writeStream.outputMode(output_mode)
                 .format("memory")
@@ -351,13 +332,8 @@ def run_stream_to_df(
                 .start()
             )
             q.awaitTermination()
-        finally:
-            if state_store == "rocksdb":
-                if old_provider is None:
-                    spark.conf.unset(provider_key)
-                else:
-                    spark.conf.set(provider_key, old_provider)
-            shutil.rmtree(ckpt, ignore_errors=True)
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(query_name)
 
 

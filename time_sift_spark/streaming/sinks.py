@@ -13,6 +13,7 @@ import os
 
 from pyspark.sql import DataFrame
 
+from ..operators.artifacts import hadoop_path
 from ..sources.catalog import read_parquet
 
 
@@ -135,26 +136,30 @@ def screened_append_sink(base_path: str, screen, append, accepted: str, id_col: 
     back, and ``append(spark, rows)`` folds them into the store — all on
     the batch's own (cloned micro-batch) session.
 
-    foreachBatch is at-least-once.  A per-epoch applied marker makes a
-    fully-applied epoch's redelivery a no-op.  The crash window between
-    the append and the marker is covered by verdict reuse: complete
-    (``_SUCCESS``) verdicts are read back instead of re-screening, which
-    against the post-append store would reject the epoch's own accepted
-    docs as exact twins and overwrite the verdicts with that answer.
+    foreachBatch is at-least-once.  A per-epoch applied marker,
+    ``{base}/applied-epoch-{id}``, makes a fully-applied epoch's
+    redelivery a no-op; it and the verdicts' ``_SUCCESS`` are checked
+    and created through the base path's Hadoop FileSystem, so a
+    ``file://``, ``hdfs://`` or ``s3a://`` base works as a local one.
+    The crash window between the append and the marker is covered by
+    verdict reuse: complete (``_SUCCESS``) verdicts are read back instead
+    of re-screening, which against the post-append store would reject
+    the epoch's own accepted docs as exact twins and overwrite the
+    verdicts with that answer.
     The append then re-runs, so it must leave the store unchanged when
     repeated: an anti-join on the stored ids, or set semantics."""
 
     def _write(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        marker = os.path.join(base_path, f"applied-epoch-{epoch_id}")
-        if os.path.exists(marker):
+        fs, marker = hadoop_path(spark, f"{base_path}/applied-epoch-{epoch_id}")
+        if fs.exists(marker):
             return
-        edir = os.path.join(base_path, "results", f"epoch-{epoch_id}")
-        if not os.path.exists(os.path.join(edir, "_SUCCESS")):
+        edir = f"{base_path}/results/epoch-{epoch_id}"
+        if not fs.exists(spark._jvm.org.apache.hadoop.fs.Path(edir, "_SUCCESS")):
             screen(spark, batch_df).write.mode("overwrite").parquet(edir)
         keep = read_parquet(spark, edir).where(accepted).select(id_col)
         append(spark, batch_df.join(keep, id_col, "left_semi"))
-        os.makedirs(marker)
+        fs.mkdirs(marker)
 
     return _write
 

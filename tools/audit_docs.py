@@ -13,7 +13,11 @@ classes of rot this script makes mechanical:
 5. every :func:`...` target in a ``time_sift_spark/`` docstring or comment
    must name a function, class or module-level name defined in the
    package (a dotted ``time_sift_spark.<module>.<name>`` target in that
-   module).
+   module);
+6. every ``os.environ`` / ``os.getenv`` read in ``time_sift_spark/`` must
+   name one of the deployment settings in ``DEPLOYMENT_ENV`` (a knob whose
+   only measured-good value is its default does not belong in the
+   package).
 
 Exit code 1 on any finding. Run per round before the final commit:
 
@@ -33,29 +37,78 @@ from time_sift_spark.queries import GRADE_PRIORITY, REGISTRY  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+# The environment settings the package may read: where it runs and on
+# what (cores, data, JVM options, driver memory, drain checkpoints).
+DEPLOYMENT_ENV = {
+    "SPARK_GRAFT_CPUS",
+    "SPARK_GRAFT_SF_DIR",
+    "SPARK_GRAFT_DRIVER_JAVA_OPTS",
+    "SPARK_DRIVER_MEMORY",
+    "SPARK_GRAFT_STREAM_CKPT_DIR",
+}
 
-def _dangling_func_refs() -> list[str]:
+
+def _package_trees() -> dict[str, tuple[str, ast.Module]]:
+    """``{relative path: (source, AST)}`` of every package module."""
+    out = {}
+    for root, _, files in os.walk(os.path.join(REPO, "time_sift_spark")):
+        for fn in sorted(f for f in files if f.endswith(".py")):
+            rel = os.path.relpath(os.path.join(root, fn), REPO)
+            text = open(os.path.join(REPO, rel)).read()
+            out[rel] = (text, ast.parse(text))
+    return out
+
+
+def _is_os_attr(node, attr: str) -> bool:
+    return (isinstance(node, ast.Attribute) and node.attr == attr
+            and isinstance(node.value, ast.Name) and node.value.id == "os")
+
+
+def _env_reads(trees) -> list[str]:
+    """``path:line: name`` for each ``os.environ`` / ``os.getenv`` use in
+    the package whose variable is not a literal in ``DEPLOYMENT_ENV``."""
+    bad = []
+    for rel, (_, tree) in trees.items():
+        parents = {c: p for p in ast.walk(tree) for c in ast.iter_child_nodes(p)}
+        for node in ast.walk(tree):
+            if _is_os_attr(node, "environ"):
+                up = parents.get(node)
+                if isinstance(up, ast.Subscript):
+                    key = up.slice
+                elif isinstance(up, ast.Attribute) and isinstance(parents.get(up), ast.Call):
+                    key = (parents[up].args or [None])[0]
+                elif isinstance(up, ast.Compare):
+                    key = up.left
+                else:
+                    key = None
+            elif isinstance(node, ast.Call) and _is_os_attr(node.func, "getenv"):
+                key = (node.args or [None])[0]
+            else:
+                continue
+            name = key.value if isinstance(key, ast.Constant) else ast.unparse(key or node)
+            if name not in DEPLOYMENT_ENV:
+                bad.append(f"{rel}:{node.lineno}: {name}")
+    return bad
+
+
+def _dangling_func_refs(trees) -> list[str]:
     """``path: target`` for each :func: target in the package that names
     nothing the package defines: a function or class at any depth
     (methods included) or a module-level assignment — looked up in the
     named module when the target is a dotted package path."""
-    sources, names = {}, {}
-    for root, _, files in os.walk(os.path.join(REPO, "time_sift_spark")):
-        for fn in sorted(f for f in files if f.endswith(".py")):
-            rel = os.path.relpath(os.path.join(root, fn), REPO)
-            mod = rel[:-3].replace(os.sep, ".").removesuffix(".__init__")
-            sources[rel] = open(os.path.join(REPO, rel)).read()
-            tree = ast.parse(sources[rel])
-            names[mod] = {
-                n.name for n in ast.walk(tree)
-                if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
-            }
-            for n in tree.body:
-                targets = n.targets if isinstance(n, ast.Assign) else [getattr(n, "target", None)]
-                names[mod] |= {t.id for t in targets if isinstance(t, ast.Name)}
+    names = {}
+    for rel, (_, tree) in trees.items():
+        mod = rel[:-3].replace(os.sep, ".").removesuffix(".__init__")
+        names[mod] = {
+            n.name for n in ast.walk(tree)
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+        }
+        for n in tree.body:
+            targets = n.targets if isinstance(n, ast.Assign) else [getattr(n, "target", None)]
+            names[mod] |= {t.id for t in targets if isinstance(t, ast.Name)}
     everywhere = set().union(*names.values())
     bad = []
-    for rel, text in sources.items():
+    for rel, (text, _) in trees.items():
         for target in re.findall(r":func:`~?\.?([\w.]+)`", text):
             mod, _, name = target.rpartition(".")
             if name not in names.get(mod, everywhere):
@@ -143,8 +196,14 @@ def main() -> int:
         bad += 1
 
     # 5. :func: cross-references in the package resolve
-    for ref in _dangling_func_refs():
+    trees = _package_trees()
+    for ref in _dangling_func_refs(trees):
         print(f"dangling :func: reference: {ref}")
+        bad += 1
+
+    # 6. the package reads only deployment settings from the environment
+    for read in _env_reads(trees):
+        print(f"environment read of a non-deployment setting: {read}")
         bad += 1
 
     print(f"audit: {len(REGISTRY)} registered queries, {bad} finding(s)")

@@ -1,19 +1,22 @@
-"""Profile ONE streaming query's drain: patch run_stream_to_df to
-capture the StreamingQuery progress records and print the per-batch
-durationMs breakdown (triggerExecution, addBatch, stateOperators
-commit times) — guide §1: find where the wall time actually goes
-before touching anything.  Usage:
+"""Profile ONE streaming registry query's drain: perfbench's
+``BatchListener`` collects the progress record of every micro-batch the
+query runs, and each batch's trigger, addBatch, WAL and state-commit
+times are printed per run — guide §1: find where the wall time actually
+goes before touching anything.  Usage:
 
-    SPARK_GRAFT_STREAM_PARTS=16 python tools/prof_stream_progress.py streaming_ewma_events
+    python tools/prof_stream_progress.py streaming_ewma_events
+
+For the ``lag_batch`` drain, ``perfbench/run.py --trace 1`` reports the
+same records as ``microbatch_*`` and ``stream.state_commit_ms``.
 """
 
-import json
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
+from perfbench.probes import BatchListener  # noqa: E402
 from time_sift_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -25,63 +28,20 @@ def main() -> None:
                       extra_conf={"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
 
-    import time_sift_spark.streaming.lag_stream as ls
     from time_sift_spark.queries import REGISTRY
 
-    progress_log = []
-    orig = ls.run_stream_to_df
-
-    def patched(stream_out, query_name, *, output_mode="append",
-                shuffle_partitions=None, state_store=None):
-        sp = stream_out.sparkSession
-        if shuffle_partitions is None:
-            shuffle_partitions = ls.default_stream_partitions(stream_out)
-        provider_key = "spark.sql.streaming.stateStore.providerClass"
-        with ls.pinned_shuffle_partitions(sp, shuffle_partitions):
-            if state_store == "rocksdb":
-                sp.conf.set(provider_key, ls.ROCKSDB_PROVIDER)
-            try:
-                q = (
-                    stream_out.writeStream.outputMode(output_mode)
-                    .format("memory")
-                    .queryName(query_name)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
-                progress_log.extend(
-                    json.loads(p) if isinstance(p, str) else p
-                    for p in q.recentProgress
-                )
-            finally:
-                if state_store == "rocksdb":
-                    sp.conf.unset(provider_key)
-        return sp.table(query_name)
-
-    ls.run_stream_to_df = patched
-    qd = REGISTRY[name]
-
-    def force(df):
-        df.write.format("noop").mode("overwrite").save()
-
     for run in range(2):
-        progress_log.clear()
+        listener = BatchListener()
+        spark.streams.addListener(listener)
         t0 = time.perf_counter()
-        force(qd.spark_fn(spark, SF_DIR))
+        REGISTRY[name].spark_fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
         wall = time.perf_counter() - t0
-        print(f"run {run}: wall {wall:.2f}s, {len(progress_log)} batches")
-        tot = {}
-        for p in progress_log:
-            dur = p.get("durationMs", {})
-            for k, v in dur.items():
-                tot[k] = tot.get(k, 0) + v
-            for so in p.get("stateOperators", []):
-                for k in ("commitTimeMs", "timeTakenToUpdateNumRows",
-                          "allUpdatesTimeMs", "allRemovalsTimeMs"):
-                    if k in so:
-                        tot[f"state.{k}"] = tot.get(f"state.{k}", 0) + so[k]
-        for k in sorted(tot, key=lambda k: -tot[k]):
-            print(f"  {k}: {tot[k]} ms")
+        # progress events reach the listener asynchronously
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        spark.streams.removeListener(listener)
+        print(f"run {run}: wall {wall:.2f}s, {len(listener.batches)} batches")
+        for rec in listener.batches:
+            print("  " + ", ".join(f"{k}={v}" for k, v in rec.items()))
 
 
 if __name__ == "__main__":
